@@ -16,8 +16,8 @@ driver loop that each iteration
    swaps this for a ``mapInPandas`` HTTP kernel with identical columns);
 4. **extracts** JSON-LD objects (Arrow-batched ``mapInPandas``, within-file
    id dedup inside the kernel — U1), diffs ids against the URL-seen set
-   (Bloom or cuckoo pre-filter per ``CrawlConfig.seen_filter`` + exact
-   anti-join), ref-counts first-occurrences /
+   (the touched buckets' persisted Bloom blobs pre-filter, the exact
+   anti-join decides), ref-counts first-occurrences /
    orphans set-wise (A1 as one groupBy per epoch);
 5. **indexes** first-occurrence objects task-side: the embed kernel fills
    essential-fields text → embedding and writes the ``documents`` parquet
@@ -55,10 +55,9 @@ from crawler_spark.functions.sitemap import (
     robots_crawl_delay_udf,
     robots_schema_maps_udf,
 )
-from crawler_spark.operators import cuckoo as cuckoo_ops
 from crawler_spark.operators import frontier as fr
 from crawler_spark.operators import politeness, seen
-from crawler_spark.schema import FRONTIER, URL_SEEN
+from crawler_spark.schema import FRONTIER, REFCOUNTS, URL_SEEN
 from crawler_spark.sources.tables import SnapshotStore
 
 
@@ -68,27 +67,10 @@ class CrawlConfig:
     per_host_budget: int = 64
     salt_buckets: int = 16
     epoch_window_s: float = 60.0
-    use_bloom: bool = True
-    #: seen-set pre-filter kind when ``use_bloom`` is on: "bloom" (append-
-    #: only blobs, stale bits after deletions cost only false positives) or
-    #: "cuckoo" (operators/cuckoo.py — O(1) deletion keeps churned buckets'
-    #: false-positive rate flat; the north rule's "Bloom/cuckoo" pair).
-    #: Either way the exact anti-join backstops the filter: the final seen
-    #: set is identical across all three settings.
-    seen_filter: str = "bloom"
-    embed_documents: bool = True
     max_epochs: int = 50
     #: per-epoch counters in EpochReport cost extra Spark jobs; bench turns
     #: them off and derives totals from the committed state instead.
     collect_stats: bool = True
-
-    def __post_init__(self) -> None:
-        # fail at config time, not as a bare KeyError mid-crawl (ADVICE r4)
-        if self.seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(
-                f"seen_filter={self.seen_filter!r}: accepted values are "
-                "'bloom' or 'cuckoo' (pre-filter kind used when use_bloom "
-                "is on; use_bloom=False disables the pre-filter entirely)")
 
 
 @dataclass
@@ -134,41 +116,24 @@ class CrawlEngine:
         # Column-pruned page projections; bodies only where needed.
         self._pages = pages
         self._page_bodies = pages.select("url", "html")
-        # The bucket modulus is baked into every bucketed table's layout;
-        # opening an existing store with a different value would silently
-        # misroute read_buckets/replace_buckets (data loss). Fail fast on
-        # mismatch; adopt the config value for legacy stores missing it.
-        pinned = store.get_meta("num_partitions")
-        if pinned is not None and int(pinned) != self.cfg.num_partitions:
-            raise ValueError(
-                f"store was laid out with num_partitions={pinned}; config "
-                f"says {self.cfg.num_partitions} — refusing to misroute buckets")
-        if pinned is None and store.exists("frontier"):
-            store.set_meta(num_partitions=self.cfg.num_partitions)
-        # Seen-filter provenance (ADVICE r4): blob tables are only sound for
-        # the filter kind they were maintained under. Rows added while
-        # use_bloom=False (or under the other kind) are missing from the
-        # blobs — a probe would call them "definitely new" (duplicate
-        # re-add), and a cuckoo delete could erase a colliding live key's
-        # only fingerprint (false negative). On a recorded kind mismatch,
-        # DROP both blob tables: blobs reseed lazily per touched bucket via
-        # the legacy-seed path (run_epoch) — a rare metadata-only
-        # invalidation, never a wrong answer. Pre-provenance stores keep
-        # their blobs (no recorded kind to contradict).
-        kind = self._filter_table() or "none"
-        stored_kind = store.get_meta("seen_filter_kind")
-        if stored_kind is not None and stored_kind != kind:
-            for blob_table in ("blooms", "cuckoos"):
-                store.drop(blob_table)
-        if stored_kind != kind:
-            store.set_meta(seen_filter_kind=kind)
+        # A store's layout is pinned in its meta at bootstrap: the bucket
+        # modulus every bucketed table is split by, and the pre-filter kind
+        # whose blobs cover every url_seen bucket that holds rows. Opening a
+        # store whose record is missing or different would misroute bucket
+        # reads/writes (data loss) or probe blobs that miss seen ids
+        # (duplicate re-adds): refuse it.
+        if store.exists("frontier"):
+            for key, want in self._layout().items():
+                got = store.get_meta(key)
+                if got != want:
+                    raise ValueError(
+                        f"store was laid out with {key}={got!r}; this engine "
+                        f"needs {want!r} — refusing to open it")
 
-    def _filter_table(self) -> str | None:
-        """Store table holding the seen-set pre-filter blobs, or None when
-        the pre-filter is disabled (plain exact anti-join)."""
-        if not self.cfg.use_bloom:
-            return None
-        return {"bloom": "blooms", "cuckoo": "cuckoos"}[self.cfg.seen_filter]
+    def _layout(self) -> dict:
+        """Layout facts ``bootstrap`` records and ``__init__`` checks."""
+        return {"num_partitions": self.cfg.num_partitions,
+                "seen_filter_kind": "blooms"}
 
     # ------------------------------------------------------------------
     # bootstrap / state access
@@ -187,7 +152,7 @@ class CrawlEngine:
             "frontier": self.store.replace_buckets(empty_frontier, "frontier", touched=[]),
             "url_seen": self.store.replace_buckets(empty_seen, "url_seen", touched=[]),
         }
-        self.store.set_meta(num_partitions=self.cfg.num_partitions)
+        self.store.set_meta(**self._layout())
         self.store.commit(epoch=-1, table_versions=versions)
 
     # -- frontier bucket families -------------------------------------
@@ -228,12 +193,10 @@ class CrawlEngine:
         return self._drop_fbucket(self.store.read(self.spark, "frontier"))
 
     def pending_frontier(self) -> DataFrame:
-        """The pending-family view — reads only buckets [0, P). Legacy
-        mixed buckets (pre-family stores) also live below P, so the status
-        filter stays; they get split into families on their next write."""
-        df = self._drop_fbucket(self.store.read_buckets(
+        """The pending-family view — reads only buckets [0, P), which hold
+        exactly the active pending rows (see ``_frontier_fbucket``)."""
+        return self._drop_fbucket(self.store.read_buckets(
             self.spark, "frontier", only=list(range(self.cfg.num_partitions))))
-        return df.filter((F.col("status") == "pending") & F.col("is_active"))
 
     def _frontier_for_hosts(self, hosts) -> DataFrame:
         """Both families of the ``hosts`` buckets — the exact row set a
@@ -250,6 +213,17 @@ class CrawlEngine:
 
             return self.spark.createDataFrame([], DOCUMENTS)
         return self.store.read(self.spark, "documents")
+
+    def _refcounts(self, buckets: list[int]) -> DataFrame:
+        """(id, user_id, ref_count) rows of the ``buckets`` id buckets. No
+        table yet means no seen rows yet: an epoch writes url_seen, blooms
+        and refcounts for the same diff buckets in the same commit."""
+        if not self.store.exists("refcounts"):
+            return self.spark.createDataFrame([], REFCOUNTS).select(
+                "id", "user_id", "ref_count")
+        return self.store.read_buckets(
+            self.spark, "refcounts", only=buckets
+        ).select("id", "user_id", "ref_count")
 
     # ------------------------------------------------------------------
     # discovery (lifecycle 3.1 / 3.3)
@@ -504,35 +478,24 @@ class CrawlEngine:
         doomed = seen_touched.join(site_files, ["file_url", "user_id"], "left_semi").cache()
         seen_after = seen_touched.join(site_files, ["file_url", "user_id"], "left_anti")
 
+        # orphans (last reference lived here → count reaches 0) come from
+        # the maintained refcounts view: read only the doomed ids' buckets
+        # and subtract the doomed counts — O(touched ids), the same merge
+        # the epoch gates use, instead of an O(corpus) distinct anti-join
+        # over the full seen set.
         rc_delta = doomed.groupBy("id", "user_id").agg(
             (-F.count(F.lit(1))).alias("delta"))
-        rc_content = None
-        rc_buckets: list[int] = []
-        if self.store.exists("refcounts"):
-            # orphans (last reference lived here → count reaches 0) come from
-            # the maintained refcounts view: read only the doomed ids'
-            # buckets and subtract the doomed counts — O(touched ids), the
-            # same merge the epoch gates use, instead of an O(corpus)
-            # distinct anti-join over the full seen set.
-            rc_buckets = [int(r[0]) for r in doomed.select(
-                doc_bucket_expr(F.col("id"), self.cfg.num_partitions)).distinct().collect()]
-            rc_old = self.store.read_buckets(
-                self.spark, "refcounts", only=rc_buckets
-            ).select("id", "user_id", "ref_count")
-            merged = rc_old.join(rc_delta, ["id", "user_id"], "left").select(
-                "id", "user_id",
-                (F.col("ref_count") + F.coalesce(F.col("delta"), F.lit(0)))
-                .alias("ref_count"))
-            orphans = merged.filter(F.col("ref_count") <= 0).select("id", "user_id").cache()
-            rc_content = merged.filter(F.col("ref_count") > 0).select(
-                doc_bucket_expr(F.col("id"), self.cfg.num_partitions).alias("rbucket"),
-                "id", "user_id", "ref_count")
-        else:
-            # legacy store without the maintained view: one-time full diff
-            orphans = seen.orphaned_ids(
-                doomed.select("file_url", "user_id", "id"),
-                self.url_seen().join(site_files, ["file_url", "user_id"], "left_anti"),
-            ).cache()
+        rc_buckets = [int(r[0]) for r in doomed.select(
+            doc_bucket_expr(F.col("id"), self.cfg.num_partitions)).distinct().collect()]
+        merged = self._refcounts(rc_buckets).join(
+            rc_delta, ["id", "user_id"], "left").select(
+            "id", "user_id",
+            (F.col("ref_count") + F.coalesce(F.col("delta"), F.lit(0)))
+            .alias("ref_count"))
+        orphans = merged.filter(F.col("ref_count") <= 0).select("id", "user_id").cache()
+        rc_content = merged.filter(F.col("ref_count") > 0).select(
+            doc_bucket_expr(F.col("id"), self.cfg.num_partitions).alias("rbucket"),
+            "id", "user_id", "ref_count")
         orphan_keys = orphans.select(doc_key_expr(F.col("id")).alias("id"))
         touched_docs = [int(r[0]) for r in orphans.select(
             doc_bucket_expr(F.col("id"), self.cfg.num_partitions)).distinct().collect()]
@@ -545,23 +508,15 @@ class CrawlEngine:
             "frontier": self._write_frontier(frontier_keep, touched),
             "seeds": self.store.write(seeds_after, "seeds"),
         }
-        # cuckoo filter blobs track deletions (their raison d'être); Bloom
-        # blobs deliberately keep stale bits — false positives only, the
-        # exact anti-join absorbs them (operators/seen.py docstring)
-        if self._filter_table() == "cuckoos" and self.store.exists("cuckoos"):
-            blobs = self.store.read_buckets(self.spark, "cuckoos", only=touched)
-            doomed_keys = doomed.select("file_url", "user_id", "id", "host_hash")
-            versions["cuckoos"] = self.store.replace_buckets(
-                cuckoo_ops.updated_cuckoos(
-                    blobs, doomed_keys.limit(0), removed=doomed_keys),
-                "cuckoos", touched)
+        # Bloom blobs keep the doomed ids' bits: stale bits cost only false
+        # positives, which the exact anti-join absorbs (operators/seen.py)
         if self.store.exists("documents"):
             docs_after = self.store.read_buckets(
                 self.spark, "documents", only=touched_docs
             ).join(orphan_keys, "id", "left_anti")
             versions["documents"] = self.store.replace_buckets(
                 docs_after, "documents", touched_docs, bucket_col="bucket")
-        if rc_content is not None:
+        if rc_buckets:
             versions["refcounts"] = self.store.replace_buckets(
                 rc_content, "refcounts", rc_buckets, "rbucket")
         for df in (victim_rows, doomed, orphans):
@@ -584,12 +539,9 @@ class CrawlEngine:
         # in its pending-family buckets (they hold empty version dirs), which
         # the manifest + a dirlist can see without any Spark job — the
         # fixed-point epoch costs zero actions instead of a selection plan,
-        # a scratch write and a collect. (Legacy mixed-family stores keep
-        # live files below P until their next write, so they take the normal
-        # path and terminate via the selection count as before.)
-        if isinstance(self.store.read_manifest()["tables"].get("frontier"), dict) \
-                and not self.store.has_live_buckets(
-                    "frontier", list(range(cfg.num_partitions))):
+        # a scratch write and a collect.
+        if not self.store.has_live_buckets(
+                "frontier", list(range(cfg.num_partitions))):
             rep.wall_s = _time.time() - t0
             return rep
 
@@ -733,37 +685,12 @@ class CrawlEngine:
             )
             existing = seen_touched.join(
                 processed_keys, ["file_url", "user_id"], "left_semi")
-            # persisted per-bucket filter blobs (Bloom or cuckoo): read the
-            # touched buckets' blobs; no blobs yet → build from seen_touched
-            ftable = self._filter_table()
-            persisted_filters = (
-                self.store.read_buckets(self.spark, ftable, only=touched)
-                if ftable and self.store.exists(ftable) else None
-            )
-            # cuckoo overflow reseed: a blob that overflowed its kick budget
-            # is persisted with a NULL table and routes its bucket to the
-            # exact check. Rebuild such blobs here, from the bucket's seen
-            # rows this epoch is reading anyway. The gate is driver-side
-            # parquet footer null-counts over the touched blob files (no
-            # Spark job, O(touched) tiny footers); zero overflow — the
-            # overwhelmingly common case — adds nothing to the probe plan.
-            reseed_hosts: list[int] = []
-            if ftable == "cuckoos" and persisted_filters is not None:
-                reseed_hosts = self.store.buckets_with_nulls(
-                    ftable, "table", only=touched)
-                if reseed_hosts:
-                    persisted_filters = persisted_filters.where(
-                        ~F.col("host_hash").isin(reseed_hosts)
-                    ).unionByName(cuckoo_ops.build_host_cuckoos(
-                        seen_touched.where(
-                            F.col("host_hash").isin(reseed_hosts))))
-            if ftable == "cuckoos":
-                added_df = cuckoo_ops.anti_join_new_ids_cuckoo(
-                    ext_ids, existing, cuckoos=persisted_filters)
-            else:
-                added_df = seen.anti_join_new_ids(
-                    ext_ids, existing, use_bloom=cfg.use_bloom,
-                    blooms=persisted_filters)
+            # the touched buckets' persisted Bloom blobs (live url_seen rows
+            # imply the blooms table: both are written in the same commit)
+            persisted_blooms = self.store.read_buckets(
+                self.spark, "blooms", only=touched)
+            added_df = seen.anti_join_new_ids(
+                ext_ids, existing, blooms=persisted_blooms)
             removed_df = existing.select(
                 "file_url", "user_id", "id", "host_hash").join(
                 ext_ids, ["file_url", "user_id", "id"], "left_anti"
@@ -782,9 +709,7 @@ class CrawlEngine:
             rows_removed = self.store.scratch_rows("removed_epoch")
         else:
             seen_touched = self.spark.createDataFrame([], URL_SEEN)
-            ftable = self._filter_table()
-            persisted_filters = None
-            reseed_hosts = []
+            persisted_blooms = self.spark.createDataFrame([], seen.BLOOM_SCHEMA)
             added = self.store.materialize(self.spark, ext_ids, "added_epoch")
             removed = seen_touched.select("file_url", "user_id", "id", "host_hash")
             rows_added = self.store.scratch_rows("added_epoch")
@@ -816,23 +741,8 @@ class CrawlEngine:
         )
 
         def gates_for(touched_ids: list[int]):
-            """(firsts, orphans, rc_content, rc_write_buckets) from the
-            touched id buckets only. A legacy store (url_seen rows but no
-            refcounts table yet) pays a one-time full rebuild."""
-            from crawler_spark.schema import REFCOUNTS
-
-            legacy = False
-            if self.store.exists("refcounts"):
-                rc_old = self.store.read_buckets(
-                    self.spark, "refcounts", only=touched_ids
-                ).select("id", "user_id", "ref_count")
-            elif self.store.bucket_versions("url_seen"):
-                legacy = True
-                rc_old = self.url_seen().groupBy("id", "user_id").agg(
-                    F.count(F.lit(1)).alias("ref_count"))
-            else:
-                rc_old = self.spark.createDataFrame([], REFCOUNTS).select(
-                    "id", "user_id", "ref_count")
+            """(firsts, orphans, rc_content) from the touched id buckets only."""
+            rc_old = self._refcounts(touched_ids)
             merged = rc_old.join(rc_delta, ["id", "user_id"], "full_outer").select(
                 "id", "user_id",
                 (F.coalesce(F.col("ref_count"), F.lit(0))
@@ -844,64 +754,60 @@ class CrawlEngine:
             rc_content = merged.filter(F.col("ref_count") > 0).select(
                 doc_bucket_expr(F.col("id"), cfg.num_partitions).alias("rbucket"),
                 "id", "user_id", "ref_count")
-            write_buckets = list(range(cfg.num_partitions)) if legacy else touched_ids
-            return firsts, orphans, rc_content, write_buckets
+            return firsts, orphans, rc_content
 
-        if cfg.embed_documents:
-            def docs_for(firsts: DataFrame, orphan_keys: DataFrame,
-                         touched_docs: list[int]) -> DataFrame:
-                new_docs = (
-                    firsts.join(
-                        extracted.select("file_url", "user_id", "id", "obj_json",
-                                         "types", "type_list", "essential_text",
-                                         "site_url"),
-                        ["file_url", "user_id", "id"],
-                    )
-                    # F3: BreadcrumbList objects are never indexed. Exact
-                    # element match on the @type list (worker.py:221-226) — a
-                    # substring test on the display string would wrongly skip
-                    # e.g. `BreadcrumbListItem`.
-                    .filter(~F.array_contains("type_list", "BreadcrumbList"))
-                    .withColumn("bucket",
-                                doc_bucket_expr(F.col("id"), cfg.num_partitions))
-                    # bucket-align the ~1 KB pre-embed rows BEFORE the embed
-                    # projection, salted so a hot host's bucket spreads over
-                    # several tasks: the explicit repartition sets the embed
-                    # stage's parallelism (AQE would under-coalesce ahead of
-                    # the 6 KB/row expansion) and the 6 KB embedded rows are
-                    # never shuffled again — the bucket write below is
-                    # pre_partitioned (files per bucket ≤ salt width)
-                    .repartition(cfg.num_partitions * 2, F.col("bucket"),
-                                 F.pmod(F.hash("id"), F.lit(8)))
-                    .select(
-                        "bucket",
-                        doc_key_expr(F.col("id")).alias("id"),
-                        F.col("id").alias("url"),
-                        F.col("site_url").alias("site"),
-                        F.col("types").alias("type"),
-                        F.col("obj_json").alias("content"),
-                        F.col("essential_text"),
-                        F.lit(fr.epoch_ts(epoch)).alias("timestamp"),
-                        # filled inside the task-side writer kernel
-                        # (fill_missing_embeddings_transform): the packed
-                        # vectors are born next to the parquet writer and
-                        # never cross the Python→JVM socket
-                        F.lit(None).cast("binary").alias("embedding"),
-                    )
+        def docs_for(firsts: DataFrame, orphan_keys: DataFrame,
+                     touched_docs: list[int]) -> DataFrame:
+            new_docs = (
+                firsts.join(
+                    extracted.select("file_url", "user_id", "id", "obj_json",
+                                     "types", "type_list", "essential_text",
+                                     "site_url"),
+                    ["file_url", "user_id", "id"],
                 )
-                # only the touched doc buckets are read back and rewritten —
-                # untouched embedding bytes (the table's mass) are never moved
-                docs_touched_old = (
-                    self.store.read_buckets(self.spark, "documents", only=touched_docs)
-                    if self.store.exists("documents") else self.documents()
+                # F3: BreadcrumbList objects are never indexed. Exact
+                # element match on the @type list (worker.py:221-226) — a
+                # substring test on the display string would wrongly skip
+                # e.g. `BreadcrumbListItem`.
+                .filter(~F.array_contains("type_list", "BreadcrumbList"))
+                .withColumn("bucket",
+                            doc_bucket_expr(F.col("id"), cfg.num_partitions))
+                # bucket-align the ~1 KB pre-embed rows BEFORE the embed
+                # projection, salted so a hot host's bucket spreads over
+                # several tasks: the explicit repartition sets the embed
+                # stage's parallelism (AQE would under-coalesce ahead of
+                # the 6 KB/row expansion) and the 6 KB embedded rows are
+                # never shuffled again — the task-side writer below
+                # (replace_buckets_task_write) writes each task's slices
+                # where they are (files per bucket ≤ salt width)
+                .repartition(cfg.num_partitions * 2, F.col("bucket"),
+                             F.pmod(F.hash("id"), F.lit(8)))
+                .select(
+                    "bucket",
+                    doc_key_expr(F.col("id")).alias("id"),
+                    F.col("id").alias("url"),
+                    F.col("site_url").alias("site"),
+                    F.col("types").alias("type"),
+                    F.col("obj_json").alias("content"),
+                    F.col("essential_text"),
+                    F.lit(fr.epoch_ts(epoch)).alias("timestamp"),
+                    # filled inside the task-side writer kernel
+                    # (fill_missing_embeddings_transform): the packed
+                    # vectors are born next to the parquet writer and
+                    # never cross the Python→JVM socket
+                    F.lit(None).cast("binary").alias("embedding"),
                 )
-                return (
-                    docs_touched_old.join(orphan_keys, "id", "left_anti")
-                    .unionByName(new_docs)
-                )
-        else:
-            docs_for = None
-
+            )
+            # only the touched doc buckets are read back and rewritten —
+            # untouched embedding bytes (the table's mass) are never moved
+            docs_touched_old = (
+                self.store.read_buckets(self.spark, "documents", only=touched_docs)
+                if self.store.exists("documents") else self.documents()
+            )
+            return (
+                docs_touched_old.join(orphan_keys, "id", "left_anti")
+                .unionByName(new_docs)
+            )
         # --- frontier transitions + metrics ---
         # per_file covers every selected fetch job (zero-object and failed
         # files included via the extract kernel's marker rows), so `done`
@@ -992,47 +898,6 @@ class CrawlEngine:
         # sinks always run.
         diffs_empty = rows_added == 0 and rows_removed == 0
 
-        # incremental Bloom maintenance: OR this epoch's added ids into the
-        # touched buckets' blobs — O(added), never a rebuild across epochs.
-        # Invariant: a bucket with url_seen rows has a blob (it was touched
-        # when the rows landed), so the incremental fold covers a fresh store
-        # from its very first epoch. Only a LEGACY store (url_seen data from
-        # before the blooms table — detectable from the manifest alone) seeds
-        # its touched blobs from the bucket's full content once. (A bucket
-        # that still ends up blob-less — e.g. rows landed under
-        # use_bloom=False — is handled at probe time: no blob ⇒ maybe_seen,
-        # exact anti-join, see operators/seen.py.)
-        new_filters = None
-        if ftable and not diffs_empty:
-            legacy_seed = (
-                persisted_filters is None
-                and bool(self.store.bucket_versions("url_seen"))
-                and self.store.read_manifest()["epoch"] >= 0
-            )
-            added_sel = added.select("file_url", "user_id", "id", "host_hash")
-            if ftable == "cuckoos":
-                # cuckoo maintenance folds BOTH sides of the diff — removed
-                # ids actually clear filter state (the Bloom can only grow)
-                if legacy_seed:
-                    new_filters = cuckoo_ops.build_host_cuckoos(seen_content)
-                else:
-                    filters_in = (
-                        persisted_filters if persisted_filters is not None
-                        else self.spark.createDataFrame([], cuckoo_ops.CUCKOO_SCHEMA)
-                    )
-                    new_filters = cuckoo_ops.updated_cuckoos(
-                        filters_in, added_sel,
-                        removed=removed.select(
-                            "file_url", "user_id", "id", "host_hash"))
-            elif legacy_seed:
-                new_filters = seen.build_host_blooms(seen_content)
-            else:
-                blooms_in = (
-                    persisted_filters if persisted_filters is not None
-                    else self.spark.createDataFrame([], seen.BLOOM_SCHEMA)
-                )
-                new_filters = seen.updated_blooms(blooms_in, added_sel)
-
         def write_errors():
             # errors table is tiny (only failing files) — O(#errors) rewrite;
             # a clean epoch with no table yet skips the sink entirely. The
@@ -1066,20 +931,17 @@ class CrawlEngine:
             if not diffs_empty:
                 futures["url_seen"] = pool.submit(
                     self.store.replace_buckets, seen_content, "url_seen", diff_hosts)
-                if new_filters is not None:
-                    # reseed_hosts widens the write set beyond diff_hosts:
-                    # an overflow-rebuilt blob persists even when its bucket
-                    # had no id diff this epoch (updated_cuckoos passes
-                    # untouched blobs through, so new_filters covers it)
-                    futures[ftable] = pool.submit(
-                        self.store.replace_buckets, new_filters, ftable,
-                        sorted(set(diff_hosts) | set(reseed_hosts)))
-            elif reseed_hosts:
-                # unchanged re-crawl epoch that rebuilt overflowed blobs:
-                # persist just those buckets so the rebuild isn't redone
-                futures[ftable] = pool.submit(
-                    self.store.replace_buckets, persisted_filters, ftable,
-                    reseed_hosts)
+                # incremental Bloom maintenance: OR this epoch's added ids
+                # into the diff buckets' blobs — O(added), never a rebuild.
+                # url_seen, blooms and refcounts are written for the same
+                # diff buckets in the same commit, so a bucket with url_seen
+                # rows has a blob from its very first epoch. (A blob-less
+                # bucket is still handled at probe time: no blob ⇒
+                # maybe_seen, exact anti-join, see operators/seen.py.)
+                futures["blooms"] = pool.submit(
+                    self.store.replace_buckets,
+                    seen.updated_blooms(persisted_blooms, added_seen_cols),
+                    "blooms", diff_hosts)
             futures["frontier"] = pool.submit(self._write_frontier, frontier_after, touched)
             # per-epoch lineage is append-only: O(1) write, unioned at read time
             f_metrics = pool.submit(self.store.append, metrics, "metrics", f"{epoch:06d}")
@@ -1096,21 +958,20 @@ class CrawlEngine:
                     .distinct().collect()
                 )
                 touched_docs = sorted(int(r["b"]) for r in doc_touch)
-                firsts, orphans, rc_content, rc_buckets = gates_for(touched_docs)
+                firsts, orphans, rc_content = gates_for(touched_docs)
                 orphan_keys = orphans.select(doc_key_expr(F.col("id")).alias("id"))
                 futures["refcounts"] = pool.submit(
                     self.store.replace_buckets, rc_content, "refcounts",
-                    rc_buckets, "rbucket")
-                if docs_for is not None:
-                    # task-side pyarrow write + in-kernel embed fill:
-                    # uncompressed (the packed float32 mass shrinks ~0 under
-                    # any codec) and never re-encoded by the JVM writer —
-                    # the leg that dominates epoch wall and must scale N→4N
-                    futures["documents"] = pool.submit(
-                        self.store.replace_buckets_task_write,
-                        docs_for(firsts, orphan_keys, touched_docs),
-                        "documents", touched_docs, "bucket",
-                        fill_missing_embeddings_transform(), "none")
+                    touched_docs, "rbucket")
+                # task-side pyarrow write + in-kernel embed fill:
+                # uncompressed (the packed float32 mass shrinks ~0 under
+                # any codec) and never re-encoded by the JVM writer —
+                # the leg that dominates epoch wall and must scale N→4N
+                futures["documents"] = pool.submit(
+                    self.store.replace_buckets_task_write,
+                    docs_for(firsts, orphan_keys, touched_docs),
+                    "documents", touched_docs, "bucket",
+                    fill_missing_embeddings_transform(), "none")
             for name, fut in futures.items():
                 versions[name] = fut.result()
             ev = f_errors.result()
@@ -1123,7 +984,7 @@ class CrawlEngine:
             rep.fetch_failed = failed.count()
             # docs delta derived from the gates already in hand (scratch +
             # touched-bucket reads) — no full-table counts, no extra commit
-            if docs_for is not None and firsts is not None:
+            if firsts is not None:
                 new_docs_n = (
                     firsts.join(
                         extracted.select("file_url", "user_id", "id", "type_list"),

@@ -4,11 +4,13 @@ The reference embeds essential-field text through Azure OpenAI in batches of
 50 with backoff on 429 and binary batch-splitting on token-limit errors
 (``code/core/embedding_provider/azure_oai_embedding.py:50-98``,
 ``code/core/vector_db.py:286-316``). In this engine the whole stage is one
-Arrow-batched pandas UDF:
+Arrow-batch kernel that runs inside the task-side documents writer
+(:func:`fill_missing_embeddings_transform`):
 
 * batching is Arrow's job (``spark.sql.execution.arrow.maxRecordsPerBatch``);
-* retry/backoff/split live *inside* the UDF per batch (provider path —
-  :func:`embed_with_provider` / :func:`make_provider_embed_udf`);
+* retry/backoff/split live *inside* the kernel per batch (provider path —
+  :func:`embed_with_provider`, passed as ``embed_batch`` to
+  :func:`fill_missing_embeddings_transform` or :func:`embed_batches_arrow`);
 * tests/bench use the deterministic hash-seeded stub below — same shape
   (1536-dim float32, L2-normalized), zero network, reproducible bit-for-bit.
 
@@ -24,7 +26,7 @@ import time
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BinaryType, FloatType
+from pyspark.sql.types import BinaryType
 
 EMBED_DIM = 1536  # reference text-embedding-3-small (vector_db.py:209)
 TEXT_CAP = 20000  # reference truncation (vector_db.py:146-149)
@@ -122,33 +124,6 @@ def embed_with_provider(
     return out
 
 
-def make_provider_embed_udf(
-    provider_factory,
-    batch_size: int = PROVIDER_BATCH,
-    packed: bool = True,
-    max_retries: int = MAX_RETRIES,
-):
-    """Pandas-UDF factory wrapping :func:`embed_with_provider` for a real
-    deployment: ``provider_factory()`` runs once per executor task (connection
-    reuse), the retry ladder runs inside the Arrow batch. ``packed=True``
-    emits the binary storage format (see :func:`embed_binary_udf`)."""
-
-    if packed:
-        @pandas_udf(BinaryType())
-        def _udf(texts: pd.Series) -> pd.Series:
-            provider = provider_factory()
-            mat = embed_with_provider(
-                provider, list(texts), batch_size, max_retries).astype("<f4")
-            return pd.Series([row.tobytes() for row in mat], dtype="object")
-    else:
-        @pandas_udf(ArrayType(FloatType()))
-        def _udf(texts: pd.Series) -> pd.Series:
-            provider = provider_factory()
-            mat = embed_with_provider(provider, list(texts), batch_size, max_retries)
-            return pd.Series(list(mat), dtype="object")
-    return _udf
-
-
 def stub_embedding_batch(texts, dim: int = EMBED_DIM) -> np.ndarray:
     """Deterministic unit vectors for a whole batch — fully vectorized.
 
@@ -212,13 +187,6 @@ def stub_embedding(text: str | None, dim: int = EMBED_DIM) -> np.ndarray:
     return stub_embedding_batch([text], dim)[0]
 
 
-@pandas_udf(ArrayType(FloatType()))
-def embed_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched stub embedder (swap point for a real provider)."""
-    mat = stub_embedding_batch(list(texts))
-    return pd.Series(list(mat), dtype="object")
-
-
 @pandas_udf(BinaryType())
 def embed_binary_udf(texts: pd.Series) -> pd.Series:
     """Stub embedder emitting the packed storage format (see below).
@@ -228,7 +196,7 @@ def embed_binary_udf(texts: pd.Series) -> pd.Series:
     than a repeated float field at identical on-disk size (measured on this
     box: 36 s vs 3 s for 188 k × 1536), and at 10^10 docs the vector column
     write is the single largest sink cost. Unpack with
-    :func:`unpack_embedding_udf` (or ``np.frombuffer(b, dtype='<f4')``).
+    ``np.frombuffer(b, dtype='<f4')``.
     """
     mat = stub_embedding_batch(list(texts)).astype("<f4")
     return pd.Series([row.tobytes() for row in mat], dtype="object")
@@ -287,9 +255,14 @@ def fill_missing_embeddings_transform(
     carry a vector (re-read bucket content on a re-crawl) pass through
     untouched.
 
+    Call granularity: the writer sorts each Arrow batch by bucket, cuts it
+    into one zero-copy slice per bucket, and calls ``transform`` once per
+    slice, after that split. One input batch that spans k buckets therefore
+    makes k embed calls, each over that bucket's rows only.
+
     The documents sink unions re-read old rows with this epoch's new rows
     (embedding = null), and a union's partitions never mix legs, so in
-    practice every batch is all-null (fast path: one zero-copy BinaryArray
+    practice every slice is all-null (fast path: one zero-copy BinaryArray
     over the kernel's float32 matrix, as :func:`embed_batches_arrow`) or
     null-free (pass-through). The mixed path is kept correct for any future
     coalesce across the union.
@@ -325,11 +298,3 @@ def fill_missing_embeddings_transform(
 
     return transform
 
-
-@pandas_udf(ArrayType(FloatType()))
-def unpack_embedding_udf(blobs: pd.Series) -> pd.Series:
-    """Inverse of the packed storage format: binary → array<float>."""
-    return pd.Series(
-        [None if b is None else np.frombuffer(b, dtype="<f4") for b in blobs],
-        dtype="object",
-    )

@@ -14,7 +14,10 @@ and pre-filter the *incoming* side with a Bloom filter built from the current
 seen-set ids, so the exact ``left_anti`` join only shuffles candidate rows
 that *might* be duplicates plus Bloom false positives. Exactness is
 preserved: the Bloom only short-circuits definite-new rows; everything else
-goes through the exact anti-join (SURVEY.md §4 custom piece #2).
+goes through the exact anti-join (SURVEY.md §4 custom piece #2). This
+Bloom — one blob per bucket, persisted and OR-updated each epoch — is the
+engine's only seen-set pre-filter; NOTES.md records why no second filter
+kind is kept.
 """
 
 from __future__ import annotations
@@ -99,13 +102,13 @@ def split_by_bloom_blobs(
     seen set (stale bits of removed ids) only adds false positives — never
     false negatives — so persisted blobs stay valid without deletions.
 
-    A bucket with NO blob defaults to ``maybe_seen=True``: the invariant
-    "every bucket with url_seen rows has a blob" is not enforceable across
-    mixed ``use_bloom`` configurations (a bloom-off epoch can land seen rows
-    without a blob), and treating blob-less as definitely-new would silently
-    re-admit duplicate ids. Falling through to the exact anti-join costs
-    nothing when the bucket truly has no seen rows (empty build side) and
-    preserves exactness when it does.
+    A bucket with NO blob defaults to ``maybe_seen=True``. The engine writes
+    a bucket's url_seen rows and its blob in the same commit, so every
+    bucket with seen rows has a blob; the default is a safety net, because
+    treating a blob-less bucket as definitely-new would silently re-admit
+    duplicate ids. Falling through to the exact anti-join costs nothing when
+    the bucket truly has no seen rows (empty build side) and preserves
+    exactness when it does.
     """
     from pyspark.sql.types import BooleanType
 
@@ -205,44 +208,24 @@ def updated_blooms(
     )
 
 
-def diff_ids(extracted: DataFrame, existing: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(added, removed) id rows for the files being (re)processed.
-
-    J3/J4 of SURVEY.md §2.3 — set difference per (file_url, user_id, id),
-    exactly the reference's per-file diff (db.py:237-240) done set-wise for
-    the whole epoch batch.
-    """
-    added = extracted.join(existing, _ID_KEY, "left_anti")
-    removed = existing.join(extracted, _ID_KEY, "left_anti")
-    return added, removed
-
-
 def anti_join_new_ids(
     extracted: DataFrame,
     seen: DataFrame,
-    use_bloom: bool = True,
     blooms: DataFrame | None = None,
 ) -> DataFrame:
     """Rows of ``extracted`` whose (file_url, user_id, id) is not in ``seen``,
     with the partitioned Bloom pre-filter in front of the exact anti-join.
 
-    Both frames must carry ``host_hash`` when ``use_bloom`` is set. Pass
-    persisted ``blooms`` blobs (the epoch loop does) to skip the build pass;
-    they may be a superset of ``seen`` — supersets only cost false positives.
+    Both frames must carry ``host_hash``. Pass persisted ``blooms`` blobs
+    (the epoch loop does) to skip the build pass; they may be a superset of
+    ``seen`` — supersets only cost false positives.
     """
-    if not use_bloom:
-        return extracted.join(seen, _ID_KEY, "left_anti")
     if blooms is not None:
         fresh, maybe = split_by_bloom_blobs(extracted, blooms)
     else:
         fresh, maybe = split_by_bloom(extracted, seen)
     checked = maybe.join(seen.select(*_ID_KEY), _ID_KEY, "left_anti")
     return fresh.unionByName(checked)
-
-
-def ref_counts(seen: DataFrame) -> DataFrame:
-    """Reference counts per (id, user_id) — A1 (db.py:278-282) as one hash agg."""
-    return seen.groupBy("id", "user_id").agg(F.count(F.lit(1)).alias("ref_count"))
 
 
 def first_occurrences(added: DataFrame, seen_before: DataFrame) -> DataFrame:
@@ -267,11 +250,3 @@ def first_occurrences(added: DataFrame, seen_before: DataFrame) -> DataFrame:
         .dropDuplicates(["id", "user_id"])
     )
 
-
-def orphaned_ids(removed: DataFrame, seen_after: DataFrame) -> DataFrame:
-    """(id, user_id) whose last reference was removed this epoch (count→0),
-    i.e. vector-index delete candidates (worker.py:262-266)."""
-    return (
-        removed.select("id", "user_id").distinct()
-        .join(seen_after.select("id", "user_id").distinct(), ["id", "user_id"], "left_anti")
-    )

@@ -103,10 +103,8 @@ class SnapshotStore:
 
     def drop(self, name: str) -> None:
         """Remove ``name`` from the committed state (metadata-only; the data
-        dirs linger until :meth:`vacuum`). Used to invalidate *derived*
-        tables — e.g. seen-filter blobs whose recorded provenance no longer
-        matches the engine's ``seen_filter`` config, where a stale blob can
-        false-negative after deletions (operators/cuckoo.py)."""
+        dirs linger until :meth:`vacuum`), e.g. to invalidate a *derived*
+        table that is rebuilt from its source on the next write."""
         manifest = self.read_manifest()
         if manifest["tables"].pop(name, None) is None:
             return
@@ -238,9 +236,11 @@ class SnapshotStore:
         ``scripts/write_leg_ab.py`` — task-side write is both faster per
         core and scales 1→4 cores at ~0.87 vs ~0.72 for the JVM writer on
         this host). ``transform(record_batch) -> record_batch`` runs inside
-        the writer task before the split — the documents sink uses it to
-        fill missing embeddings, so new vectors are *born* next to the
-        writer and never cross a process boundary at all.
+        the writer task after the split: each Arrow batch is sorted by
+        bucket and cut into zero-copy per-bucket slices, and ``transform``
+        runs once per slice. The documents sink uses it to fill missing
+        embeddings, so new vectors are *born* next to the writer and never
+        cross a process boundary at all.
 
         Commit protocol (same guarantees as Spark's Hadoop commit protocol,
         collapsed onto the store's stage-then-rename layout): tasks write
@@ -367,9 +367,10 @@ class SnapshotStore:
     ) -> list[int]:
         """Bucket ids (within ``only``) whose live files hold NULLs in
         ``col``, from parquet footer statistics alone — no Spark job.
-        Missing statistics read as "no NULLs" (callers must treat the
-        result as best-effort, e.g. the cuckoo overflow reseed, where a
-        missed bucket merely stays on the exact-check path)."""
+        Missing statistics read as "no NULLs", so callers must treat the
+        result as best-effort. The engine has no caller; the method stays
+        because the benchmark's tracer (``perfbench/tracing.py``) wraps it by
+        name on every store it traces."""
         want = None if only is None else {int(b) for b in only}
         out: list[int] = []
         for b_str, ver in self.bucket_versions(name).items():

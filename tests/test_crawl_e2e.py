@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark.crawl import CrawlConfig, CrawlEngine
-from crawler_spark.sources.synth import corpus_pages_df, seeds_df, site_host
+from crawler_spark.sources.synth import chunk_url, corpus_pages_df, seeds_df, site_host
 from crawler_spark.sources.tables import SnapshotStore
 from tests.py_oracle import OracleState, crawl_fixed_point, pages_dict
 
@@ -367,6 +367,34 @@ def test_delete_site_wipes_ids_and_documents(spark, tmp_path, small_corpus):
     assert len(seeds_left) == N_SITES - 1
     assert_refcounts_consistent(engine)
 
+    # re-add the site and crawl it again: its ids return to buckets whose
+    # blobs still hold their stale bits, so only the exact anti-join keeps
+    # the seen set right
+    epoch = engine.store.read_manifest()["epoch"] + 1
+    engine.add_manual_files(spark.createDataFrame(
+        [{"site_url": victim, "user_id": "test:user001",
+          "file_url": chunk_url(0, c), "schema_map": "manual"}
+         for c in range(CHUNKS)]), epoch)
+    engine.run()
+    seen_again, docs_again = engine_state(engine)
+    assert seen_again == seen_before
+    assert set(docs_again) == set(docs_before)
+    assert_seen_invariants(engine)
+
+
+def assert_seen_invariants(engine):
+    """Every url_seen bucket with rows has a Bloom blob, url_seen holds no
+    duplicate keys, and refcounts equals url_seen grouped."""
+    seen_buckets = {r["host_hash"] for r in
+                    engine.url_seen().select("host_hash").distinct().collect()}
+    blob_buckets = {r["host_hash"] for r in engine.store.read(
+        engine.spark, "blooms").select("host_hash").collect()}
+    assert seen_buckets <= blob_buckets, (
+        f"url_seen buckets without a blob: {sorted(seen_buckets - blob_buckets)}")
+    keys = engine.url_seen().select("file_url", "user_id", "id")
+    assert keys.count() == keys.distinct().count(), "duplicate url_seen keys"
+    assert_refcounts_consistent(engine)
+
 
 def _page(url, body):
     from datetime import datetime, timezone
@@ -654,9 +682,11 @@ def test_engine_runs_on_txnlog_store(spark, tmp_path, small_corpus):
 
 
 def test_num_partitions_mismatch_fails_fast(spark, tmp_path, small_corpus):
-    """The bucket modulus is pinned in the manifest at bootstrap; reopening
-    the store with a different num_partitions must refuse (silently
-    misrouted bucket reads/writes would drop rows)."""
+    """The bucket modulus and the seen-filter kind are pinned in the
+    manifest at bootstrap; reopening the store with a different
+    num_partitions must refuse (silently misrouted bucket reads/writes would
+    drop rows), and so must a store whose layout record is missing or
+    names a non-Bloom filter."""
     from crawler_spark.crawl import CrawlConfig, CrawlEngine
     from crawler_spark.sources.tables import SnapshotStore
 
@@ -667,6 +697,19 @@ def test_num_partitions_mismatch_fails_fast(spark, tmp_path, small_corpus):
     with pytest.raises(ValueError, match="num_partitions"):
         CrawlEngine(spark, SnapshotStore(tmp_path / "state"), pages,
                     CrawlConfig(num_partitions=engine.cfg.num_partitions * 2))
+
+    # a store with a frontier whose layout record is missing or names
+    # another pre-filter kind is refused too, naming the field
+    for key, value in [("num_partitions", None),
+                       ("seen_filter_kind", None),
+                       ("seen_filter_kind", "none")]:
+        store = SnapshotStore(tmp_path / "state")
+        good = store.get_meta(key)
+        store.set_meta(**{key: value})
+        with pytest.raises(ValueError, match=key):
+            CrawlEngine(spark, store, pages, engine.cfg)
+        store.set_meta(**{key: good})
+    CrawlEngine(spark, SnapshotStore(tmp_path / "state"), pages, engine.cfg)
 
 
 def test_resume_from_checkpoint(spark, tmp_path, small_corpus):

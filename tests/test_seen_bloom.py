@@ -48,7 +48,7 @@ def test_bloom_no_false_negatives_and_exact_result(spark):
     # end result identical to the exact anti-join
     got = {
         tuple(r)
-        for r in anti_join_new_ids(incoming, seen, use_bloom=True)
+        for r in anti_join_new_ids(incoming, seen)
         .select("file_url", "user_id", "id").collect()
     }
     want = {
@@ -100,10 +100,10 @@ def test_updated_blooms_doubling_keeps_old_members(spark):
 
 
 def test_missing_blob_falls_through_to_exact_join(spark):
-    """A bucket with seen rows but NO persisted blob (e.g. rows landed under
-    use_bloom=False) must route its candidates to the exact anti-join, not
-    declare them definitely-new — otherwise duplicates silently re-enter the
-    seen set and ref-counts inflate."""
+    """A bucket with seen rows but NO persisted blob (the engine never
+    leaves one, but a lost blob must stay safe) must route its candidates to
+    the exact anti-join, not declare them definitely-new — otherwise
+    duplicates silently re-enter the seen set and ref-counts inflate."""
     seen = _ids_df(spark, [(h, f, i) for h in range(4) for f in range(2) for i in range(10)])
     incoming = _ids_df(
         spark,
@@ -117,7 +117,7 @@ def test_missing_blob_falls_through_to_exact_join(spark):
 
     got = {
         tuple(r)
-        for r in anti_join_new_ids(incoming, seen, use_bloom=True, blooms=no_blobs)
+        for r in anti_join_new_ids(incoming, seen, blooms=no_blobs)
         .select("file_url", "user_id", "id").collect()
     }
     want = {

@@ -229,8 +229,8 @@ def test_drop_removes_table_until_rewritten(spark, make_store):
 
 
 def test_buckets_with_nulls_footer_stats(spark, make_store):
-    """Driver-side footer gate used by the cuckoo overflow reseed: only
-    buckets whose files hold NULLs in the probed column are reported."""
+    """Driver-side footer gate: only buckets whose files hold NULLs in the
+    probed column are reported."""
     store = make_store()
     df = spark.createDataFrame(
         [{"host_hash": 0, "table": b"x"},
