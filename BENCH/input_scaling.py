@@ -1,6 +1,6 @@
 """Weak-scaling evidence: crawl throughput vs INPUT size at fixed cores.
 
-The north rule's N->4N criterion measures core scaling (BENCH/scaling.py);
+The north rule's N->4N criterion measures core scaling (BENCH/BASELINE.md);
 this companion measures the other axis a 10^10-URL frontier stresses —
 does per-URL cost stay flat as the frontier grows? Superlinear frontier
 management (an O(frontier) scan per epoch, an unbounded driver collect, a

@@ -3,8 +3,6 @@
 Run:  python bench.py
 Env:  SPARK_GRAFT_SF_DIR  (default /root/testdata/sf0.1)
       SPARK_GRAFT_CPUS    (default 32)
-      SPARK_GRAFT_SCALING (set to 1 to also run the N-vs-4N core scaling
-                           evidence — see BENCH/BASELINE.md)
 
 Output: one JSON line
   {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -125,7 +123,7 @@ def run_crawl_bench(spark, sf_tag: str, cores: int,
     scale_env = os.environ.get("SPARK_GRAFT_CRAWL_SCALE")
     if scale is not None:
         n_sites, chunks, items, hot = scale
-    elif scale_env:  # "sites,chunks,items,hot" override (used by BENCH/scaling.py)
+    elif scale_env:  # "sites,chunks,items,hot" override
         n_sites, chunks, items, hot = (int(x) for x in scale_env.split(","))
     else:
         n_sites, chunks, items, hot = _CRAWL_SCALE.get(sf_tag, _CRAWL_SCALE["sf0.1"])
@@ -153,7 +151,6 @@ def run_crawl_bench(spark, sf_tag: str, cores: int,
             num_partitions=max(cores, 8),
             per_host_budget=max(chunks, hot),
             salt_buckets=16,
-            collect_stats=False,
         )
         engine = CrawlEngine(spark, SnapshotStore(f"{tmp}/state"), pages, cfg)
         engine.bootstrap(seeds)
@@ -161,7 +158,7 @@ def run_crawl_bench(spark, sf_tag: str, cores: int,
         reports = engine.run()
         wall = time.time() - t0
 
-        # totals from committed state (no per-epoch counting jobs were run)
+        # totals from committed state
         from pyspark.sql import functions as F
         fetched = engine.frontier().filter(
             (F.col("status") == "done") & (F.col("job_type") == "process_file")).count()
@@ -192,8 +189,8 @@ def main() -> None:
 
     try:
         if "--crawl-only" in sys.argv:
-            # subprocess mode for the N-vs-4N scaling evidence (BENCH/scaling.py):
-            # fresh JVM per parallelism level, crawl throughput only
+            # subprocess mode (e.g. scripts/samewindow.py A/Bs): fresh JVM,
+            # crawl throughput only
             spark = build_session(app_name="crawler_spark_scaling", cores=CPUS, extra_conf=conf)
             spark.sparkContext.setLogLevel("ERROR")
             if os.environ.get("SPARK_GRAFT_CRAWL_WARMUP", "1") != "0":

@@ -34,7 +34,9 @@ and the Bloom (SURVEY.md §4).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import time
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,13 +70,13 @@ class CrawlConfig:
     salt_buckets: int = 16
     epoch_window_s: float = 60.0
     max_epochs: int = 50
-    #: per-epoch counters in EpochReport cost extra Spark jobs; bench turns
-    #: them off and derives totals from the committed state instead.
-    collect_stats: bool = True
 
 
 @dataclass
 class EpochReport:
+    """Per-epoch counters, every one read off a job or parquet footer the
+    epoch already runs — zero extra Spark jobs. A counter whose footer
+    lacks the null-count statistic it needs reports -1 (unknown)."""
     epoch: int
     selected: int = 0
     fetched_ok: int = 0
@@ -82,12 +84,7 @@ class EpochReport:
     ids_extracted: int = 0
     ids_added: int = 0
     ids_removed: int = 0
-    docs_added: int = 0
-    docs_deleted: int = 0
-    files_added: int = 0
-    files_removed: int = 0
     wall_s: float = 0.0
-    extra: dict = field(default_factory=dict)
 
 
 def _https(col):
@@ -113,8 +110,7 @@ class CrawlEngine:
         self.store = store
         self.cfg = config or CrawlConfig()
         self._fetcher = fetcher
-        # Column-pruned page projections; bodies only where needed.
-        self._pages = pages
+        # Column-pruned page projection; bodies only where needed.
         self._page_bodies = pages.select("url", "html")
         # A store's layout is pinned in its meta at bootstrap: the bucket
         # modulus every bucketed table is split by, and the pre-filter kind
@@ -311,18 +307,19 @@ class CrawlEngine:
         updated = updated.unionByName(new_rows).unionByName(removal_jobs)
 
         # the diff output is small (changed rows only) — cache it so the
-        # touched-bucket collect, the counts, and the write share one pass
+        # touched-bucket collect and the write share one pass. ONE job yields
+        # both the touched host buckets and the (added, removed) counts: each
+        # projection is tagged and counted per (host, tag)
         new_rows.cache(); removal_jobs.cache(); removed_rows.cache()
-        touched = [int(r[0]) for r in (
-            new_rows.select("host_hash")
-            .unionByName(removal_jobs.select("host_hash"))
-            .unionByName(removed_rows.select("host_hash"))
-            .distinct().collect()
-        )]
-        # counting costs two extra jobs; bench (collect_stats=False) derives
-        # totals from committed state instead
-        n_added = new_rows.count() if self.cfg.collect_stats else -1
-        n_removed = removal_jobs.count() if self.cfg.collect_stats else -1
+        per_host = (
+            new_rows.select("host_hash", F.lit(0).alias("_t"))
+            .unionByName(removal_jobs.select("host_hash", F.lit(1).alias("_t")))
+            .unionByName(removed_rows.select("host_hash", F.lit(2).alias("_t")))
+            .groupBy("host_hash", "_t").count().collect()
+        )
+        touched = sorted({int(r["host_hash"]) for r in per_host})
+        n_added = sum(r["count"] for r in per_host if r["_t"] == 0)
+        n_removed = sum(r["count"] for r in per_host if r["_t"] == 1)
 
         # stamp last_processed on discovered seeds (scheduler.py:21-30 analogue)
         seeds_df = self.store.read(self.spark, "seeds")
@@ -336,8 +333,6 @@ class CrawlEngine:
             .drop("_hit")
         )
         # three independent sinks over already-pinned inputs → one concurrent round
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=3) as pool:
             f_frontier = pool.submit(self._write_frontier, updated, touched)
             f_seeds = pool.submit(self.store.write, stamped, "seeds")
@@ -345,8 +340,7 @@ class CrawlEngine:
             v, sv, rv = f_frontier.result(), f_seeds.result(), f_robots.result()
         for df in (new_rows, removal_jobs, removed_rows, robots):
             df.unpersist()
-        self.store.commit(epoch, {"frontier": v, "seeds": sv, "robots": rv},
-                          lineage_row={"stage": "discover", "added": n_added, "removed": n_removed})
+        self.store.commit(epoch, {"frontier": v, "seeds": sv, "robots": rv})
         return n_added, n_removed
 
     def error_history(self, file_url: str | None = None, n: int = 50) -> DataFrame:
@@ -433,8 +427,7 @@ class CrawlEngine:
             host_hash_expr(host_from_url_expr(F.col("file_url")),
                            self.cfg.num_partitions)).distinct().collect()]
         v = self._write_frontier(updated, touched)
-        self.store.commit(epoch, {"frontier": v},
-                          lineage_row={"stage": "manual_add"})
+        self.store.commit(epoch, {"frontier": v})
 
     def remove_manual_files(self, keys: DataFrame, epoch: int) -> None:
         """Soft-delete files and enqueue their removal jobs (reference
@@ -458,8 +451,7 @@ class CrawlEngine:
         touched = [int(r[0]) for r in live.select("host_hash").distinct().collect()]
         v = self._write_frontier(updated, touched)
         live.unpersist()
-        self.store.commit(epoch, {"frontier": v},
-                          lineage_row={"stage": "manual_remove"})
+        self.store.commit(epoch, {"frontier": v})
 
     def delete_site(self, site_url: str, user_id: str, epoch: int) -> None:
         """Hard-delete a site: its frontier rows, seen ids, exclusively-owned
@@ -521,17 +513,14 @@ class CrawlEngine:
                 rc_content, "refcounts", rc_buckets, "rbucket")
         for df in (victim_rows, doomed, orphans):
             df.unpersist()
-        self.store.commit(epoch, versions,
-                          lineage_row={"stage": "delete_site", "site_url": site_url})
+        self.store.commit(epoch, versions)
 
     # ------------------------------------------------------------------
     # one epoch of the hot path (lifecycle 3.2)
     # ------------------------------------------------------------------
 
     def run_epoch(self, epoch: int) -> EpochReport:
-        import time as _time
-
-        t0 = _time.time()
+        t0 = time.time()
         rep = EpochReport(epoch=epoch)
         cfg = self.cfg
 
@@ -542,7 +531,7 @@ class CrawlEngine:
         # a scratch write and a collect.
         if not self.store.has_live_buckets(
                 "frontier", list(range(cfg.num_partitions))):
-            rep.wall_s = _time.time() - t0
+            rep.wall_s = time.time() - t0
             return rep
 
         # O(pending) selection input: reads only the pending-family buckets
@@ -564,14 +553,16 @@ class CrawlEngine:
         # reference it, and a flat parquet read keeps their analyzed trees
         # shallow — see the added/removed pinning note below
         selected = self.store.materialize(self.spark, selected, "selected_epoch")
-        # ONE job yields both the termination count and the epoch's touched
-        # host buckets (every frontier/url_seen mutation this epoch lives in
-        # a selected row's bucket — the bucket-replace write set)
-        host_counts = selected.groupBy("host_hash").count().collect()
+        # ONE job yields the termination count, the fetch-job count and the
+        # epoch's touched host buckets (every frontier/url_seen mutation this
+        # epoch lives in a selected row's bucket — the bucket-replace write set)
+        host_counts = selected.groupBy("host_hash", "job_type").count().collect()
         rep.selected = sum(r["count"] for r in host_counts)
-        touched = sorted(int(r["host_hash"]) for r in host_counts)
+        n_fetch_jobs = sum(r["count"] for r in host_counts
+                           if r["job_type"] == "process_file")
+        touched = sorted({int(r["host_hash"]) for r in host_counts})
         if rep.selected == 0:
-            rep.wall_s = _time.time() - t0
+            rep.wall_s = time.time() - t0
             return rep
 
         fetch_jobs = selected.filter(F.col("job_type") == "process_file")
@@ -643,8 +634,21 @@ class CrawlEngine:
             self.spark, extracted_raw, "extracted_epoch",
         )
         extracted = scratch.filter(F.col("id").isNotNull())
-        if cfg.collect_stats:
-            rep.ids_extracted = extracted.count()
+        # fetch/extract counters from the scratch's parquet footers (no job):
+        # a failed fetch emits exactly one marker row with a non-null
+        # fetch_error, and every extracted object one row with a non-null id
+        ext_rows = self.store.scratch_rows("extracted_epoch")
+        ext_nulls = self.store.scratch_null_counts(
+            "extracted_epoch", ["id", "fetch_error", "error"])
+
+        def non_null(col: str) -> int:
+            n = ext_nulls[col]
+            return -1 if n is None else ext_rows - n
+
+        rep.ids_extracted = non_null("id")
+        rep.fetch_failed = non_null("fetch_error")
+        rep.fetched_ok = (-1 if rep.fetch_failed < 0
+                          else n_fetch_jobs - rep.fetch_failed)
 
         # fetch accounting for metrics (A6): bytes + ids + status per url
         # (null-id marker rows keep zero-object AND failed files in the
@@ -676,8 +680,6 @@ class CrawlEngine:
         # first-contact epoch — the bench's whole crawl and, at 10^10 URLs,
         # every frontier-expansion epoch's fresh-host partition.
         seen_live = self.store.has_live_buckets("url_seen", only=touched)
-        from concurrent.futures import ThreadPoolExecutor
-
         if seen_live:
             seen_touched = self.store.read_buckets(self.spark, "url_seen", only=touched)
             processed_keys = (
@@ -714,9 +716,7 @@ class CrawlEngine:
             removed = seen_touched.select("file_url", "user_id", "id", "host_hash")
             rows_added = self.store.scratch_rows("added_epoch")
             rows_removed = 0
-        if cfg.collect_stats:
-            rep.ids_added = rows_added   # parquet footer counts — no jobs
-            rep.ids_removed = rows_removed
+        rep.ids_added, rep.ids_removed = rows_added, rows_removed
 
         # new content of the touched url_seen buckets (other buckets: zero I/O)
         added_seen_cols = added.select("file_url", "user_id", "id", "host_hash")
@@ -888,8 +888,6 @@ class CrawlEngine:
         # epoch's serial driver path is just (select-count → extract-pin →
         # sinks). Every bucket-replace write moves only this epoch's touched
         # buckets.
-        from concurrent.futures import ThreadPoolExecutor
-
         # emptiness probe on the pinned diffs — already known from the
         # scratch parquet footers (zero Spark jobs): an epoch that re-crawled
         # only unchanged content skips every id-derived sink — url_seen,
@@ -903,19 +901,15 @@ class CrawlEngine:
             # a clean epoch with no table yet skips the sink entirely. The
             # "any errors this epoch?" probe reads the extract scratch's
             # parquet null-count statistics driver-side (both error columns
-            # all-null ⇔ new_errors is empty) — no Spark job; columns missing
-            # statistics degrade to "maybe errors" and the write runs.
-            if not self.store.exists("errors"):
-                rows = self.store.scratch_rows("extracted_epoch")
-                nulls = self.store.scratch_null_counts(
-                    "extracted_epoch", ["fetch_error", "error"])
-                if nulls["fetch_error"] == rows and nulls["error"] == rows:
-                    return None
+            # all-null ⇔ new_errors is empty) — no Spark job; a column missing
+            # statistics (None) degrades to "maybe errors" and the write runs.
+            if (not self.store.exists("errors")
+                    and ext_nulls["fetch_error"] == ext_rows
+                    and ext_nulls["error"] == ext_rows):
+                return None
             return self.store.write(errors_after, "errors")
 
         versions = {}
-        touched_docs: list[int] = []
-        firsts = orphan_keys = None
         # the url_seen/bloom write set is the hosts whose id sets CHANGED —
         # a selected host whose re-crawl found identical content keeps its
         # current bucket versions (zero bytes move). Diff hosts come from the
@@ -943,7 +937,7 @@ class CrawlEngine:
                     seen.updated_blooms(persisted_blooms, added_seen_cols),
                     "blooms", diff_hosts)
             futures["frontier"] = pool.submit(self._write_frontier, frontier_after, touched)
-            # per-epoch lineage is append-only: O(1) write, unioned at read time
+            # per-epoch metrics are append-only: O(1) write, unioned at read time
             f_metrics = pool.submit(self.store.append, metrics, "metrics", f"{epoch:06d}")
             f_errors = pool.submit(write_errors)
             if not diffs_empty:
@@ -971,7 +965,7 @@ class CrawlEngine:
                     self.store.replace_buckets_task_write,
                     docs_for(firsts, orphan_keys, touched_docs),
                     "documents", touched_docs, "bucket",
-                    fill_missing_embeddings_transform(), "none")
+                    fill_missing_embeddings_transform())
             for name, fut in futures.items():
                 versions[name] = fut.result()
             ev = f_errors.result()
@@ -979,30 +973,9 @@ class CrawlEngine:
                 versions["errors"] = ev
             f_metrics.result()
 
-        if cfg.collect_stats:
-            rep.fetched_ok = done.count()
-            rep.fetch_failed = failed.count()
-            # docs delta derived from the gates already in hand (scratch +
-            # touched-bucket reads) — no full-table counts, no extra commit
-            if firsts is not None:
-                new_docs_n = (
-                    firsts.join(
-                        extracted.select("file_url", "user_id", "id", "type_list"),
-                        ["file_url", "user_id", "id"])
-                    .filter(~F.array_contains("type_list", "BreadcrumbList"))
-                    .count())
-                deleted_n = (
-                    self.store.read_buckets(self.spark, "documents", only=touched_docs)
-                    .join(orphan_keys, "id", "left_semi").count()
-                    if self.store.exists("documents") else 0)
-                rep.docs_added = new_docs_n - deleted_n
-                rep.docs_deleted = deleted_n
-        self.store.commit(epoch, versions, lineage_row={
-            "stage": "epoch", "selected": rep.selected, "fetched_ok": rep.fetched_ok,
-            "ids_added": rep.ids_added, "ids_removed": rep.ids_removed,
-        })
+        self.store.commit(epoch, versions)
 
-        rep.wall_s = _time.time() - t0
+        rep.wall_s = time.time() - t0
         return rep
 
     # ------------------------------------------------------------------

@@ -6,8 +6,10 @@ queue with visibility timeouts. This engine replaces all of that with
 
 * every state table (``frontier``, ``url_seen``, ``seeds``, ``documents``)
   is written as an immutable snapshot directory per version;
-* a tiny JSON *manifest* records, per epoch, which snapshot of each table is
-  current — committed atomically via write-temp + ``os.replace``;
+* a tiny JSON *manifest* records which snapshot of each table is current —
+  committed atomically via write-temp + ``os.replace``. It holds current
+  state only (epoch, table versions, layout meta), so its size does not grow
+  with the number of epochs;
 * resume = read the manifest, load the recorded snapshots (the reference's
   visibility-timeout / stale-job recovery collapses into "re-run the epoch
   from the last committed manifest").
@@ -16,7 +18,7 @@ On a real deployment this class is swapped for Iceberg tables (``MERGE
 INTO``, snapshot isolation, multi-table commit via an epoch manifest); the
 interface is deliberately shaped so only this module changes. Parquet
 snapshots keep the sandbox dependency-free while preserving the exact
-semantics tests need (atomic commit, resume, lineage).
+semantics tests need (atomic commit, resume).
 
 Scale note: snapshots are written partitioned by ``host_hash`` (bucket-style
 layout) so the next epoch's joins against ``url_seen``/``frontier`` scan only
@@ -56,22 +58,24 @@ class SnapshotStore:
 
     def read_manifest(self) -> dict:
         if not self._manifest_path.exists():
-            return {"epoch": -1, "tables": {}, "lineage": []}
+            return {"epoch": -1, "tables": {}}
         return json.loads(self._manifest_path.read_text())
 
-    def commit(self, epoch: int, table_versions: dict[str, int], lineage_row: dict | None = None) -> None:
-        """Atomically advance the store to ``epoch`` (os.replace = atomic)."""
+    def _write_manifest(self, manifest: dict) -> None:
+        """Replace the manifest atomically (write-temp + ``os.replace``)."""
+        tmp = self._manifest_path.with_suffix(".json.tmp")
+        tmp.write_text(json.dumps(manifest, indent=1))
+        os.replace(tmp, self._manifest_path)
+
+    def commit(self, epoch: int, table_versions: dict[str, int]) -> None:
+        """Atomically advance the store to ``epoch``."""
         manifest = self.read_manifest()
         manifest["epoch"] = epoch
         manifest["tables"].update({
             k: v if isinstance(v, dict) else int(v)
             for k, v in table_versions.items()
         })
-        if lineage_row is not None:
-            manifest.setdefault("lineage", []).append({"epoch": epoch, **lineage_row})
-        tmp = self._manifest_path.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, self._manifest_path)
+        self._write_manifest(manifest)
 
     # -- store metadata (layout invariants) ---------------------------------
 
@@ -82,9 +86,7 @@ class SnapshotStore:
         misrouting bucket reads/writes."""
         manifest = self.read_manifest()
         manifest.setdefault("meta", {}).update(kv)
-        tmp = self._manifest_path.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, self._manifest_path)
+        self._write_manifest(manifest)
 
     def get_meta(self, key: str, default=None):
         return self.read_manifest().get("meta", {}).get(key, default)
@@ -106,11 +108,8 @@ class SnapshotStore:
         dirs linger until :meth:`vacuum`), e.g. to invalidate a *derived*
         table that is rebuilt from its source on the next write."""
         manifest = self.read_manifest()
-        if manifest["tables"].pop(name, None) is None:
-            return
-        tmp = self._manifest_path.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, self._manifest_path)
+        if manifest["tables"].pop(name, None) is not None:
+            self._write_manifest(manifest)
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         version = self.read_manifest()["tables"].get(name)
@@ -164,8 +163,6 @@ class SnapshotStore:
         name: str,
         touched: list[int],
         bucket_col: str = "host_hash",
-        pre_partitioned: bool = False,
-        compression: str | None = None,
     ) -> dict:
         """Write new content for exactly the ``touched`` buckets of ``name``.
 
@@ -182,26 +179,13 @@ class SnapshotStore:
             self._schema_path(name).write_text(df.schema.json())
         if touched:
             stage = self.root / name / f"stage-{time.time_ns()}"
-            staged = (
-                df.filter(F.col(bucket_col).isin([int(b) for b in touched]))
-                .withColumn("_b", F.col(bucket_col))
-            )
-            if not pre_partitioned:
-                # co-locate each bucket's rows into one task before the
-                # directory split — otherwise every upstream task writes a
-                # sliver per bucket (tasks × buckets small files). Callers
-                # whose rows are already bucket-aligned (e.g. the documents
-                # sink, which must not shuffle 6 KB embedded rows) pass
-                # pre_partitioned=True to skip this exchange.
-                staged = staged.repartition(max(len(touched), 1), F.col("_b"))
-            writer = staged.write.mode("overwrite").partitionBy("_b")
-            if compression is not None:
-                # the documents sink passes "uncompressed": its mass is the
-                # packed float32 embedding column, which no codec shrinks —
-                # snappy/zstd only add a full pass over the table's bytes
-                # (A/B-measured, NOTES.md round-4 delta)
-                writer = writer.option("compression", compression)
-            writer.parquet(str(stage))
+            # co-locate each bucket's rows into one task before the
+            # directory split — otherwise every upstream task writes a sliver
+            # per bucket (tasks × buckets small files)
+            (df.filter(F.col(bucket_col).isin([int(b) for b in touched]))
+             .withColumn("_b", F.col(bucket_col))
+             .repartition(max(len(touched), 1), F.col("_b"))
+             .write.mode("overwrite").partitionBy("_b").parquet(str(stage)))
             for b in touched:
                 nxt = int(buckets.get(str(int(b)), -1)) + 1
                 target = self._bucket_dir(name, int(b), nxt)
@@ -224,7 +208,6 @@ class SnapshotStore:
         touched: list[int],
         bucket_col: str = "bucket",
         transform=None,
-        compression: str = "none",
     ) -> dict:
         """:meth:`replace_buckets`, but each task writes its parquet files
         itself (pyarrow C++) instead of handing rows back to the JVM writer.
@@ -268,7 +251,7 @@ class SnapshotStore:
             StructField("path", StringType()),
             StructField("rows", LongType()),
         ])
-        kernel = _bucket_writer_kernel(str(stage), bucket_col, transform, compression)
+        kernel = _bucket_writer_kernel(str(stage), bucket_col, transform)
         manifest_rows = staged.mapInArrow(kernel, man_schema).collect()
         listed: dict[int, list[str]] = {}
         for r in manifest_rows:
@@ -343,10 +326,10 @@ class SnapshotStore:
         punishes."""
         return parquet_rows(self.root / "scratch" / name)
 
-    def scratch_null_counts(self, name: str, cols: list[str]) -> dict[str, int]:
+    def scratch_null_counts(self, name: str, cols: list[str]) -> dict[str, int | None]:
         """Per-column null counts of a scratch table from parquet row-group
         statistics (written by Spark by default) — driver-side, no Spark job.
-        A column missing statistics is reported conservatively as 0 nulls."""
+        A column missing statistics is reported as ``None`` (unknown)."""
         return parquet_null_counts(self.root / "scratch" / name, cols)
 
     def scratch_column_values(self, name: str, col: str) -> set:
@@ -378,7 +361,7 @@ class SnapshotStore:
             if want is not None and b not in want:
                 continue
             d = self._bucket_dir(name, b, int(ver))
-            if d.exists() and parquet_null_counts(d, [col])[col] > 0:
+            if d.exists() and (parquet_null_counts(d, [col])[col] or 0) > 0:
                 out.append(b)
         return sorted(out)
 
@@ -390,7 +373,7 @@ class SnapshotStore:
         without launching a job. False for missing or non-bucketed tables."""
         return bool(self._live_bucket_paths(name, only))
 
-    # -- append-only tables (logs / lineage) --------------------------------
+    # -- append-only tables (per-epoch logs) --------------------------------
 
     def append(self, df: DataFrame, name: str, label: str) -> None:
         """Append a labeled part to an append-only table (e.g. per-epoch
@@ -434,7 +417,7 @@ class SnapshotStore:
         shutil.rmtree(self.root, ignore_errors=True)
 
 
-def _bucket_writer_kernel(stage_dir: str, bucket_col: str, transform, compression: str):
+def _bucket_writer_kernel(stage_dir: str, bucket_col: str, transform):
     """``mapInArrow`` kernel for :meth:`SnapshotStore.replace_buckets_task_write`.
 
     Keeps one open ``ParquetWriter`` per bucket seen by the task (bounded by
@@ -496,14 +479,18 @@ def _bucket_writer_kernel(stage_dir: str, bucket_col: str, transform, compressio
                     # just hashes every value until the 1 MB dict page
                     # overflows and falls back to PLAIN, and min/max stats
                     # memcmp 6 KB values for a footer nobody reads (the
-                    # engine's null-count gates read the JVM-written filter
-                    # tables, not this sink). Measured: -16% encode wall on
+                    # engine's null-count probes read the JVM-written extract
+                    # scratch, not this sink). Measured: -16% encode wall on
                     # the embedding-dominated documents schema.
                     small = [f.name for f in part.schema
                              if not pa.types.is_binary(f.type)
                              and not pa.types.is_large_binary(f.type)]
+                    # Uncompressed: the mass is packed float32 embeddings,
+                    # which no codec shrinks — a codec only adds a full pass
+                    # over the table's bytes (A/B-measured, NOTES.md
+                    # round-4 delta).
                     w = (pq.ParquetWriter(path, part.schema,
-                                          compression=compression,
+                                          compression="none",
                                           use_dictionary=small,
                                           write_statistics=small), path)
                     writers[v] = w
@@ -531,10 +518,10 @@ def parquet_rows(path: str | Path) -> int:
     )
 
 
-def parquet_null_counts(path: str | Path, cols: list[str]) -> dict[str, int]:
+def parquet_null_counts(path: str | Path, cols: list[str]) -> dict[str, int | None]:
     """Per-column null counts summed over a parquet directory's row-group
-    statistics (pyarrow, driver-side). Columns whose statistics are absent
-    in any row group are reported as 0 (conservative: "maybe non-null")."""
+    statistics (pyarrow, driver-side). A column whose statistics are absent
+    in any row group is reported as ``None``: its null count is unknown."""
     import pyarrow.parquet as pq
 
     out = dict.fromkeys(cols, 0)
@@ -551,12 +538,5 @@ def parquet_null_counts(path: str | Path, cols: list[str]) -> dict[str, int]:
                 else:
                     out[c] += st.null_count
     for c in missing:
-        out[c] = 0
+        out[c] = None
     return out
-
-
-def wait_for_files(path: Path, timeout: float = 5.0) -> None:
-    """Best-effort barrier for tests on slow filesystems."""
-    deadline = time.time() + timeout
-    while time.time() < deadline and not path.exists():
-        time.sleep(0.05)

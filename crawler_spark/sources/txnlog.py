@@ -82,8 +82,6 @@ class TxnLogStore(SnapshotStore):
         state["tables"].update(action.get("tables", {}))
         for name in action.get("drop_tables", []):
             state["tables"].pop(name, None)
-        if action.get("lineage_row") is not None:
-            state.setdefault("lineage", []).append(action["lineage_row"])
         state.setdefault("meta", {}).update(action.get("meta", {}))
         return state
 
@@ -105,21 +103,19 @@ class TxnLogStore(SnapshotStore):
         if cp:
             start, state = cp[0] + 1, cp[1]
         else:
-            start, state = 0, {"epoch": -1, "tables": {}, "lineage": []}
+            start, state = 0, {"epoch": -1, "tables": {}}
         for p in entries:
             if int(p.stem) >= start:
                 state = self._apply(state, json.loads(p.read_text()))
         self._fold_cache = (last_seq, json.loads(json.dumps(state)))
         return state
 
-    def commit(self, epoch: int, table_versions: dict, lineage_row: dict | None = None) -> None:
+    def commit(self, epoch: int, table_versions: dict) -> None:
         action = {
             "epoch": epoch,
             "tables": {k: v if isinstance(v, dict) else int(v)
                        for k, v in table_versions.items()},
         }
-        if lineage_row is not None:
-            action["lineage_row"] = {"epoch": epoch, **lineage_row}
         seq = self._append_action(action)
         self._maybe_checkpoint(seq, self.read_manifest())
 

@@ -57,7 +57,6 @@ def main() -> None:
     cfg = CrawlConfig(
         num_partitions=max(cores, 8),
         per_host_budget=max(args.chunks, args.hot_chunks),
-        collect_stats=False,
     )
     engine = CrawlEngine(spark, SnapshotStore(f"{tmp}/state"), pages, cfg)
     engine.bootstrap(seeds_df(spark, args.sites))

@@ -735,6 +735,62 @@ def test_resume_from_checkpoint(spark, tmp_path, small_corpus):
     assert resumed.store.read_manifest()["epoch"] >= 1
 
 
+def test_epoch_counters_need_no_actions(spark, tmp_path, small_corpus, monkeypatch):
+    """Every EpochReport counter (and discover's (added, removed)) comes from
+    a job or parquet footer the epoch already runs: with ``DataFrame.count``
+    disabled the crawl still runs (a 404 manual file and a manual removal
+    included), every counter is known, and the summed counters agree with
+    the committed state."""
+    from crawler_spark.sources.synth import chunk_url
+
+    pages, seeds = small_corpus
+    engine = build_engine(spark, tmp_path, pages)
+    engine.bootstrap(seeds)
+
+    def no_count(self):
+        raise AssertionError("an epoch counter ran a DataFrame.count() job")
+
+    with monkeypatch.context() as m:
+        for cls in type(pages).__mro__:  # the concrete class overrides count
+            if "count" in vars(cls):
+                m.setattr(cls, "count", no_count)
+        assert engine.discover(0) == (N_SITES * CHUNKS, 0)
+        reports = engine.run()
+        epoch = engine.store.read_manifest()["epoch"] + 1
+        engine.add_manual_files(spark.createDataFrame(
+            [{"site_url": site_host(0), "user_id": "test:user001",
+              "file_url": f"https://{site_host(0)}/missing.json",
+              "schema_map": "manual_test"}]), epoch)
+        engine.remove_manual_files(spark.createDataFrame(
+            [{"file_url": chunk_url(1, 0), "user_id": "test:user001"}]), epoch)
+        reports += engine.run()
+
+    fields = ("selected", "fetched_ok", "fetch_failed", "ids_extracted",
+              "ids_added", "ids_removed")
+    assert all(getattr(r, f) >= 0 for r in reports for f in fields)
+    total = {f: sum(getattr(r, f) for r in reports) for f in fields}
+
+    seen_rows = len(engine.url_seen().collect())
+    assert total["ids_added"] - total["ids_removed"] == seen_rows
+    assert total["ids_removed"] == ITEMS  # the removed file's ids
+
+    frontier = engine.frontier()
+    done_files = frontier.filter(
+        (F.col("job_type") == "process_file") & (F.col("status") == "done"))
+    assert total["fetched_ok"] == len(done_files.collect()) == N_SITES * CHUNKS
+
+    metrics = engine.store.read_appended(spark, "metrics").collect()
+    removals_run = frontier.filter(
+        (F.col("job_type") == "process_removed_file")
+        & (F.col("status") == "done")).collect()
+    assert len(removals_run) == 1
+    assert total["selected"] == len(metrics) + len(removals_run)
+    # the missing file fails once per retry until it settles as an error
+    assert total["fetch_failed"] == sum(
+        r["status_code"] == 404 for r in metrics) == 3
+    assert total["ids_extracted"] == sum(r["num_ids_extracted"] for r in metrics)
+
+
 def test_politeness_budget_and_order(spark, tmp_path):
     """budget=1 → one fetch per host per epoch, FIFO (queued_at, file_url)."""
     pages = corpus_pages_df(spark, 1, 4, items_per_chunk=2)

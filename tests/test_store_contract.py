@@ -11,7 +11,8 @@ this file.
 Contract surface exercised (exactly what ``CrawlEngine`` calls):
   write/commit/read visibility · bucket-level replace with per-bucket
   versioning and O(touched) reads · crash re-run overwrite · append-only
-  parts · manifest meta pinning · vacuum retention.
+  parts · manifest meta pinning · current-state-only manifest · footer
+  null counts · vacuum retention.
 """
 
 from __future__ import annotations
@@ -148,6 +149,38 @@ def test_vacuum_keeps_live_versions(spark, make_store):
         store.commit(e, {"t": store.write(_df(spark, [(0, f"v{e}", e)]), "t")})
     store.vacuum(keep_last=1)
     assert [r["k"] for r in store.read(spark, "t").collect()] == ["v3"]
+
+
+def test_manifest_size_independent_of_epoch_count(make_store):
+    """The manifest holds current state only: committing the same table set
+    again and again leaves it the same size (no per-commit history)."""
+    import json
+
+    store = make_store()
+    tables = {"t": 0, "b": {"buckets": {"0": 3, "1": 5}}}
+    sizes = {}
+    for n, epoch in enumerate(range(10, 40), start=1):
+        store.commit(epoch, tables)
+        sizes[n] = len(json.dumps(store.read_manifest()))
+    assert "lineage" not in store.read_manifest()
+    assert sizes[10] == sizes[30]
+
+
+def test_null_counts_unknown_without_statistics(make_store):
+    """A scratch column whose parquet footer carries no statistics reports
+    ``None`` (unknown), not 0 nulls; with statistics the count is exact."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = make_store()
+    tbl = pa.table({"a": ["x", None, None], "b": [1, 2, None]})
+    for name, stats in (("bare", False), ("stats", True)):
+        d = store.root / "scratch" / name
+        d.mkdir(parents=True)
+        pq.write_table(tbl, str(d / "part-0.parquet"), write_statistics=stats)
+    assert store.scratch_null_counts("bare", ["a", "b"]) == {"a": None, "b": None}
+    assert store.scratch_null_counts("stats", ["a", "b"]) == {"a": 2, "b": 1}
+    assert store.scratch_rows("bare") == 3
 
 
 # -- txn-log-specific behaviors (the Delta-shaped commit protocol) ----------
