@@ -545,7 +545,7 @@ class CrawlEngine:
         )
         # politeness selection: budget applies to the *site host*; file hosts
         # equal site hosts in this corpus but we key on the row's host column.
-        selected, _deferred = politeness.select_within_budget(
+        selected = politeness.select_within_budget(
             pending, robots, cfg.per_host_budget, cfg.salt_buckets, cfg.epoch_window_s
         )
         selected = politeness.salted_repartition(selected, cfg.num_partitions, cfg.salt_buckets)

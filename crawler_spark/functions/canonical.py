@@ -5,37 +5,32 @@ Fidelity targets (reference semantics, reimplemented — not copied):
 * site-URL normalization: strip scheme, strip a leading ``www.``, strip
   trailing slashes (reference ``code/core/db.py:13-34``). Must be
   byte-identical — it is the canonical-URL invariant of the whole engine.
-* RFC-3986 relative resolution for robots/sitemap URLs (reference uses
-  ``urllib.parse.urljoin`` at ``code/core/master.py:60,77,85,104``).
 * vector-doc key: ``sha256(url).hexdigest()[:32]`` (reference
   ``code/core/vector_db.py:245-247``) — expressed as a built-in Spark
   expression (``substring(sha2(url,256),1,32)``), JVM-side.
 * partition key: murmur3(host) — Spark's built-in ``hash()`` IS murmur3-32,
   so the partitioner needs no Python at all.
 
-Scale note: normalization/host extraction run over every frontier row each
-epoch, so the wrappers are Arrow-batched pandas UDFs operating on
-``pandas.Series`` with vectorized ``.str`` ops where possible.
+Scale note: host extraction and hashing run over every frontier row and
+every extracted ``@id`` each epoch, so the engine and the driver catalog
+use only the JVM ``*_expr`` functions below — no Python UDF.
+:func:`normalize_site_url` is the pure-Python fidelity core that
+:func:`normalize_site_url_expr` is tested against. RFC-3986 resolution of
+robots/sitemap URLs (``urllib.parse.urljoin``, reference
+``code/core/master.py:60,77,85,104``) lives in the sitemap parser,
+``functions/sitemap.py``.
 """
 
 from __future__ import annotations
 
 import re
-from urllib.parse import urljoin, urlparse
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 _SCHEME_RE = re.compile(r"^https?://")
 _WWW_RE = re.compile(r"^www\.")
 
-
-# ---------------------------------------------------------------------------
-# pure-Python cores
-# ---------------------------------------------------------------------------
 
 def normalize_site_url(site_url: str | None) -> str | None:
     """Canonical site key: no scheme, no leading ``www.``, no trailing ``/``.
@@ -50,56 +45,14 @@ def normalize_site_url(site_url: str | None) -> str | None:
     return stripped.rstrip("/")
 
 
-def host_of(url: str | None) -> str:
-    """Registrable host of a URL; tolerant of scheme-less input."""
-    if not url:
-        return ""
-    candidate = url if "://" in url else f"http://{url}"
-    return urlparse(candidate).netloc.lower()
-
-
-def absolutize(base: str, maybe_relative: str) -> str:
-    """RFC-3986 resolution, identical to ``urllib.parse.urljoin``."""
-    return urljoin(base, maybe_relative)
-
-
-# ---------------------------------------------------------------------------
-# vectorized wrappers
-# ---------------------------------------------------------------------------
-
-@pandas_udf(StringType())
-def normalize_site_url_udf(urls: pd.Series) -> pd.Series:
-    # Vectorized: three .str passes over the whole Arrow batch.
-    out = urls.str.replace(_SCHEME_RE, "", regex=True)
-    out = out.str.replace(_WWW_RE, "", regex=True)
-    out = out.str.rstrip("/")
-    # reference passes falsy values through untouched
-    return out.where(~(urls.isna() | (urls == "")), urls)
-
-
-@pandas_udf(StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(host_of, na_action="ignore").fillna("")
-
-
-@pandas_udf(StringType())
-def urljoin_udf(bases: pd.Series, rels: pd.Series) -> pd.Series:
-    return pd.Series(
-        [urljoin(b, r) if isinstance(b, str) and isinstance(r, str) else None
-         for b, r in zip(bases, rels)],
-        dtype="object",
-    )
-
-
 def normalize_site_url_expr(col: Column) -> Column:
-    """Pure-SQL twin of the normalizer: JVM-side, codegen-friendly.
-
-    Used in hot paths where the input is guaranteed non-empty; the pandas UDF
-    above is the byte-fidelity reference for edge cases.
+    """JVM-side twin of :func:`normalize_site_url`, byte-identical to it.
+    ``\\z`` anchors at the true end: Java's ``$`` also matches before a final
+    line terminator, which would strip ``a.com/\\n`` to ``a.com\\n``.
     """
     c = F.regexp_replace(col, r"^https?://", "")
     c = F.regexp_replace(c, r"^www\.", "")
-    return F.regexp_replace(c, r"/+$", "")
+    return F.regexp_replace(c, r"/+\z", "")
 
 
 def doc_key_expr(url_col: Column) -> Column:
@@ -129,12 +82,21 @@ def host_hash_expr(host_col: Column, num_partitions: int) -> Column:
 
 
 def host_from_url_expr(url_col: Column) -> Column:
-    """JVM-side host extraction via ``parse_url`` (no Python).
+    """JVM-side host extraction via ``try_parse_url`` (no Python).
 
-    Tolerates scheme-less URLs by prepending ``http://`` when absent,
-    mirroring :func:`host_of`.
+    Tolerates scheme-less URLs by prepending ``http://`` when absent. A URL
+    that ``java.net.URI`` rejects (a space, ``|``, a bad ``%`` escape) takes
+    its host from the authority by regex instead, so ``https://ex.com/a b``
+    keeps host ``ex.com`` and that site's robots delay and budget.
+    ``parse_url`` would raise on it under ANSI mode and fail the whole epoch
+    — on every re-run. Ids without a host (``_:b0``, ``#org``, ``""``) get a
+    NULL host, and NULL hosts share one fixed bucket.
     """
     with_scheme = F.when(
         url_col.contains("://"), url_col
     ).otherwise(F.concat(F.lit("http://"), url_col))
-    return F.lower(F.parse_url(with_scheme, F.lit("HOST")))
+    host = F.try_parse_url(with_scheme, F.lit("HOST"))
+    rejected = F.try_parse_url(with_scheme, F.lit("PROTOCOL")).isNull()
+    authority = F.nullif(F.regexp_extract(
+        with_scheme, r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^@/?#]*@)?([^:/?#]+)", 1), F.lit(""))
+    return F.lower(F.when(host.isNotNull(), host).when(rejected, authority))

@@ -10,7 +10,7 @@ Arrow-batch kernel that runs inside the task-side documents writer
 * batching is Arrow's job (``spark.sql.execution.arrow.maxRecordsPerBatch``);
 * retry/backoff/split live *inside* the kernel per batch (provider path —
   :func:`embed_with_provider`, passed as ``embed_batch`` to
-  :func:`fill_missing_embeddings_transform` or :func:`embed_batches_arrow`);
+  :func:`fill_missing_embeddings_transform`);
 * tests/bench use the deterministic hash-seeded stub below — same shape
   (1536-dim float32, L2-normalized), zero network, reproducible bit-for-bit.
 
@@ -24,9 +24,6 @@ import hashlib
 import time
 
 import numpy as np
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType
 
 EMBED_DIM = 1536  # reference text-embedding-3-small (vector_db.py:209)
 TEXT_CAP = 20000  # reference truncation (vector_db.py:146-149)
@@ -39,10 +36,6 @@ def _is_rate_limit(msg: str) -> bool:
     # reference azure_oai_embedding.py:73
     return "429" in msg or "RateLimitReached" in msg or "rate limit" in msg.lower()
 
-
-#: set True to reproduce the reference's loose classifier bit-for-bit
-#: (azure_oai_embedding.py:86 matches any message containing "token")
-TOKEN_LIMIT_REFERENCE_PARITY = False
 
 _TOKEN_LIMIT_PHRASES = (
     "maximum context length",
@@ -58,10 +51,8 @@ def _is_token_limit(msg: str) -> bool:
     containing "token" (azure_oai_embedding.py:86), which misclassifies e.g.
     "invalid authentication token" as a token-limit — the batch then binary-
     splits to single items and every item silently becomes a zero vector
-    instead of the stage failing. Default: only genuine context-length
+    instead of the stage failing. Here only genuine context-length
     phrases trigger the split/zero path; everything else raises."""
-    if TOKEN_LIMIT_REFERENCE_PARITY:
-        return "maximum context length" in msg or "token" in msg.lower()
     low = msg.lower()
     return any(p in low for p in _TOKEN_LIMIT_PHRASES)
 
@@ -182,67 +173,6 @@ def stub_embedding_batch(texts, dim: int = EMBED_DIM) -> np.ndarray:
     return out
 
 
-def stub_embedding(text: str | None, dim: int = EMBED_DIM) -> np.ndarray:
-    """Single-row convenience wrapper over :func:`stub_embedding_batch`."""
-    return stub_embedding_batch([text], dim)[0]
-
-
-@pandas_udf(BinaryType())
-def embed_binary_udf(texts: pd.Series) -> pd.Series:
-    """Stub embedder emitting the packed storage format (see below).
-
-    Vectors are stored as little-endian float32 bytes (1536 × 4 = 6144 B)
-    rather than ``array<float>``: parquet encodes a binary column ~12× faster
-    than a repeated float field at identical on-disk size (measured on this
-    box: 36 s vs 3 s for 188 k × 1536), and at 10^10 docs the vector column
-    write is the single largest sink cost. Unpack with
-    ``np.frombuffer(b, dtype='<f4')``.
-    """
-    mat = stub_embedding_batch(list(texts)).astype("<f4")
-    return pd.Series([row.tobytes() for row in mat], dtype="object")
-
-
-def embed_batches_arrow(
-    embed_batch=stub_embedding_batch,
-    dim: int = EMBED_DIM,
-    text_col: str = "essential_text",
-    out_col: str = "embedding",
-):
-    """``DataFrame.mapInArrow`` kernel appending a packed-binary embedding.
-
-    The pandas-UDF path (:func:`embed_binary_udf`) pays per-row Python costs
-    on BOTH sides of the kernel: Arrow→pandas conversion of every input
-    column, then one Python ``bytes`` object + Series slot per output row.
-    This kernel removes all of it — pass-through columns stay as Arrow
-    buffers (never touch pandas), and the output BinaryArray is built
-    zero-copy over the kernel's own (n × dim) float32 matrix with a computed
-    offsets vector. Measured ~15-20% faster per core than the pandas UDF at
-    sf-bench scale; the win is pure Python/memcpy overhead, which is also
-    the term that contends across executor cores (N→4N scaling).
-
-    ``embed_batch`` is any ``list[str|None] -> (n × dim) float32 ndarray``;
-    deployments swap in ``lambda ts: embed_with_provider(provider, ts)`` to
-    keep the reference's retry/backoff/split semantics (T9) on this path.
-    """
-    import pyarrow as pa
-
-    item = 4 * dim
-
-    def fn(batches):
-        for b in batches:
-            texts = b.column(text_col).to_pylist()
-            n = len(texts)
-            mat = np.ascontiguousarray(embed_batch(texts).astype("<f4", copy=False))
-            offsets = np.arange(0, (n + 1) * item, item, dtype=np.int32)
-            emb = pa.BinaryArray.from_buffers(
-                pa.binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(mat)])
-            arrays = [b.column(i) for i in range(b.num_columns)] + [emb]
-            names = list(b.schema.names) + [out_col]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return fn
-
-
 def fill_missing_embeddings_transform(
     embed_batch=stub_embedding_batch,
     dim: int = EMBED_DIM,
@@ -263,9 +193,19 @@ def fill_missing_embeddings_transform(
     The documents sink unions re-read old rows with this epoch's new rows
     (embedding = null), and a union's partitions never mix legs, so in
     practice every slice is all-null (fast path: one zero-copy BinaryArray
-    over the kernel's float32 matrix, as :func:`embed_batches_arrow`) or
-    null-free (pass-through). The mixed path is kept correct for any future
-    coalesce across the union.
+    over the kernel's float32 matrix, no per-row Python object) or null-free
+    (pass-through). The mixed path is kept correct for any future coalesce
+    across the union.
+
+    Vectors are stored as little-endian float32 bytes (1536 × 4 = 6144 B)
+    rather than ``array<float>``: parquet encodes a binary column ~12×
+    faster than a repeated float field at identical on-disk size. Unpack
+    with ``np.frombuffer(b, dtype='<f4')``. A ``None`` text packs to a zero
+    vector (reference oversize sentinel).
+
+    ``embed_batch`` is any ``list[str|None] -> (n × dim) float32 ndarray``;
+    deployments pass ``lambda ts: embed_with_provider(provider, ts)`` to
+    keep the reference's retry/backoff/split semantics (T9).
     """
     import pyarrow as pa
 

@@ -224,13 +224,6 @@ def type_list(type_tag: Any) -> list[str]:
 # Spark wrappers
 # ---------------------------------------------------------------------------
 
-#: output schema of :func:`explode_jsonld` — one row per extracted object.
-EXTRACTED_SCHEMA = (
-    "file_url string, id string, obj_json string, types string, "
-    "type_list array<string>, essential_text string, position int, num_ids int, "
-    "error string"
-)
-
 _EXTRACT_COLS = ("file_url", "id", "obj_json", "types", "type_list",
                  "essential_text", "position", "num_ids", "error")
 
@@ -265,42 +258,34 @@ def _object_rows(file_url, body) -> list[tuple]:
     ]
 
 
-def explode_jsonld(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """``mapInPandas`` kernel: fetched file rows → extracted object rows.
-
-    Input columns: ``file_url`` (string), ``body`` (binary or string).
-    Emits one row per ``@id``-bearing object with the byte-fidelity
-    ``essential_text`` already computed (the reference computes it just
-    before embedding — hoisting it here keeps one Python hop per row total).
-    Callers filter ``id IS NOT NULL`` (see :func:`_object_rows`).
-    """
-    for pdf in batches:
-        rows: list[tuple] = []
-        for file_url, body in zip(pdf["file_url"], pdf["body"]):
-            rows.extend(_object_rows(file_url, body))
-        yield pd.DataFrame(rows, columns=list(_EXTRACT_COLS))
-
-
-#: :func:`explode_jsonld_with_meta` output — extraction plus the fetch
-#: metadata threaded through the SAME pass, so the epoch scans page bodies
-#: exactly once and never caches them (bytes stream kernel → scratch).
+#: :func:`explode_jsonld_with_meta` output — one row per extracted object,
+#: plus the fetch metadata threaded through the SAME pass, so the epoch
+#: scans page bodies exactly once and never caches them (bytes stream
+#: kernel → scratch).
 #: ``status_code``/``fetch_error`` come from the fetch stage (real values
 #: from the HTTP kernel, synthesized 200/404 from the pages-join stand-in)
 #: so fetch failures land in the scratch too — the epoch needs no second
 #: pass or anti-join to find them, and metrics/processing_errors report the
 #: transport's actual error instead of a hardcoded 404.
 EXTRACTED_META_SCHEMA = (
-    EXTRACTED_SCHEMA + ", user_id string, site_url string, "
+    "file_url string, id string, obj_json string, types string, "
+    "type_list array<string>, essential_text string, position int, num_ids int, "
+    "error string, user_id string, site_url string, "
     "queued_at timestamp, content_length bigint, "
     "status_code int, fetch_error string"
 )
 
 
 def explode_jsonld_with_meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Like :func:`explode_jsonld`, with per-file metadata passed through.
+    """``mapInPandas`` kernel: fetched file rows → extracted object rows,
+    with per-file metadata passed through.
 
     Input columns: ``file_url, body, user_id, site_url, queued_at,
-    status_code, fetch_error``; each emitted row carries its file's metadata
+    status_code, fetch_error``. Emits one row per ``@id``-bearing object
+    with the byte-fidelity ``essential_text`` already computed (the
+    reference computes it just before embedding — hoisting it here keeps
+    one Python hop per row total); callers filter ``id IS NOT NULL`` (see
+    :func:`_object_rows`). Each emitted row carries its file's metadata
     plus ``content_length = len(body)``. Rows whose fetch failed
     (``fetch_error`` non-null) emit a single marker row with no extract
     error — the failure is the transport's, not the parser's. One Python

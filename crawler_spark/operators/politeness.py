@@ -55,12 +55,12 @@ def select_within_budget(
     default_budget: int,
     salt_buckets: int = 16,
     epoch_window_s: float = 60.0,
-) -> tuple[DataFrame, DataFrame]:
-    """(selected, deferred) split of pending frontier rows for this epoch.
+) -> DataFrame:
+    """The pending frontier rows selected for this epoch.
 
     ``robots`` is the small (host, crawl_delay) politeness table — broadcast.
-    Deferred rows stay ``pending`` and compete again next epoch with their
-    original ``queued_at`` (FIFO fairness preserved).
+    Rows not selected stay ``pending`` and compete again next epoch with
+    their original ``queued_at`` (FIFO fairness preserved).
     """
     if robots is not None:
         pending = pending.join(
@@ -85,12 +85,7 @@ def select_within_budget(
     # phase 2: exact top-k over ≤ budget·S rows per host
     final = Window.partitionBy("host").orderBy(*_priority())
     ranked = survivors.withColumn("host_rank", F.row_number().over(final))
-    selected = ranked.filter(F.col("host_rank") <= F.col("host_budget")).drop("host_rank", "host_budget")
-
-    deferred = pending.drop("host_budget").join(
-        selected.select("file_url", "user_id"), ["file_url", "user_id"], "left_anti"
-    )
-    return selected, deferred
+    return ranked.filter(F.col("host_rank") <= F.col("host_budget")).drop("host_rank", "host_budget")
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, salt_buckets: int = 16) -> DataFrame:

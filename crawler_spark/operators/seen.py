@@ -10,12 +10,13 @@ first-add (count==1) and last-remove (count==0) — reference
 Scale design (north_rule): the seen set at 10^10 URLs dominates the join
 cost. We keep it partitioned by ``host_hash`` (bucket layout → partition
 pruning: an epoch only reads seen-set buckets whose hosts are being crawled)
-and pre-filter the *incoming* side with a Bloom filter built from the current
-seen-set ids, so the exact ``left_anti`` join only shuffles candidate rows
-that *might* be duplicates plus Bloom false positives. Exactness is
-preserved: the Bloom only short-circuits definite-new rows; everything else
-goes through the exact anti-join (SURVEY.md §4 custom piece #2). This
-Bloom — one blob per bucket, persisted and OR-updated each epoch — is the
+and pre-filter the *incoming* side with a Bloom filter over the seen-set
+ids, so the exact ``left_anti`` join only shuffles candidate rows that
+*might* be duplicates plus Bloom false positives. Exactness is preserved:
+the Bloom only short-circuits definite-new rows; everything else goes
+through the exact anti-join (SURVEY.md §4 custom piece #2). This Bloom —
+one blob per bucket, persisted and OR-updated each epoch by
+:func:`updated_blooms`, which also creates a bucket's first blob — is the
 engine's only seen-set pre-filter; NOTES.md records why no second filter
 kind is kept.
 """
@@ -62,36 +63,11 @@ def _composite(pdf: pd.DataFrame) -> pd.Series:
     return pdf["file_url"].astype(str) + "\x1f" + pdf["user_id"].astype(str) + "\x1f" + pdf["id"].astype(str)
 
 
-def build_host_blooms(seen: DataFrame, bits_per_item: int = _BITS_PER_ITEM) -> DataFrame:
-    """One Bloom blob per ``host_hash`` bucket over the seen-set composite key.
-
-    The north_rule's *partitioned* Bloom URL-seen pre-filter: blobs are built
-    where the data lives (``applyInPandas`` per bucket — one pass, no
-    driver-side state) and sized to the bucket (``bits_per_item`` × rows).
-    """
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        m = max(1 << 10, int(bits_per_item * n))
-        m += (-m) % 8  # byte-align
-        bits = np.zeros(m, dtype=bool)
-        pos = _bloom_positions(_composite(pdf), m)
-        bits[pos.ravel()] = True
-        return pd.DataFrame([{
-            "host_hash": int(pdf["host_hash"].iloc[0]),
-            "bloom": np.packbits(bits).tobytes(),
-            "m_bits": m,
-            "n_items": n,
-        }])
-
-    return seen.groupBy("host_hash").applyInPandas(build, schema=BLOOM_SCHEMA)
-
-
 def split_by_bloom_blobs(
     incoming: DataFrame, blooms: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """(definitely_new, maybe_seen) split of ``incoming`` by per-bucket Bloom
-    blobs (``BLOOM_SCHEMA`` rows — persisted in the store or freshly built).
+    blobs (``BLOOM_SCHEMA`` rows, as persisted by :func:`updated_blooms`).
 
     Implemented as a *cogrouped* pandas op: each bucket's candidate rows meet
     that bucket's single Bloom blob — the blob is never replicated per row,
@@ -133,13 +109,6 @@ def split_by_bloom_blobs(
         flagged.filter(~F.col("maybe_seen")).drop("maybe_seen"),
         flagged.filter(F.col("maybe_seen")).drop("maybe_seen"),
     )
-
-
-def split_by_bloom(incoming: DataFrame, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Build-then-probe convenience: per-bucket Blooms from ``seen``, then
-    :func:`split_by_bloom_blobs`. The epoch loop persists blobs instead
-    (see :func:`updated_blooms`) so they are never rebuilt from scratch."""
-    return split_by_bloom_blobs(incoming, build_host_blooms(seen))
 
 
 #: blob growth headroom: a fresh bucket blob is sized for 4× its first batch
@@ -209,21 +178,16 @@ def updated_blooms(
 
 
 def anti_join_new_ids(
-    extracted: DataFrame,
-    seen: DataFrame,
-    blooms: DataFrame | None = None,
+    extracted: DataFrame, seen: DataFrame, blooms: DataFrame
 ) -> DataFrame:
     """Rows of ``extracted`` whose (file_url, user_id, id) is not in ``seen``,
     with the partitioned Bloom pre-filter in front of the exact anti-join.
 
-    Both frames must carry ``host_hash``. Pass persisted ``blooms`` blobs
-    (the epoch loop does) to skip the build pass; they may be a superset of
+    Both frames must carry ``host_hash``. ``blooms`` are the persisted
+    per-bucket blobs (:func:`updated_blooms`); they may be a superset of
     ``seen`` — supersets only cost false positives.
     """
-    if blooms is not None:
-        fresh, maybe = split_by_bloom_blobs(extracted, blooms)
-    else:
-        fresh, maybe = split_by_bloom(extracted, seen)
+    fresh, maybe = split_by_bloom_blobs(extracted, blooms)
     checked = maybe.join(seen.select(*_ID_KEY), _ID_KEY, "left_anti")
     return fresh.unionByName(checked)
 

@@ -1,30 +1,23 @@
-"""Similarity search over embedding columns: brute-force and LSH-bucketed.
-
-Two paths, same contract (top-k cosine neighbors per query):
+"""Similarity search over embedding columns: exact top-k, sign-bucketed
+IVF top-k, and learned (k-means) buckets.
 
 * ``brute_force_topk`` — exact: broadcast the (small) query set against the
   candidate table, JVM higher-order dot products, per-query window top-k.
-  This is the ground truth and right up to ~10^7 candidates × few queries.
-* ``lsh_topk`` — the 10^10-scale path: sign-random-projection LSH buckets
-  candidates by a b-bit sketch; each query probes its own bucket plus the
-  ``n_probe`` nearest buckets by sketch hamming distance, so the pairwise
-  stage touches ~``n_probe / 2^b`` of the corpus. Recall is tunable
-  (b, n_probe); exactness is NOT claimed — tests measure recall against the
-  brute-force truth.
-
-Projections are deterministic (seeded hash), generated driver-side as a
-``b × dim`` float array and broadcast — no RNG state on executors.
+  This is the ground truth and right up to ~10^7 candidates × few queries
+  (the catalog's ``ann_cosine_topk``).
+* ``ivf_signbucket_topk`` — the bucketed path (the catalog's
+  ``ann_ivf_bucketed``): candidates bucket by a 4-bit sign code, each query
+  multi-probes its own bucket plus the hamming-1 neighbours, so the pair
+  stage scores ~5/16 of the corpus. Recall is measured against
+  ``brute_force_topk``, not claimed.
+* ``kmeans_bucket_assign`` — data-adaptive buckets for corpora a fixed sign
+  code cannot split (the catalog's ``dedup_embedding_ivf``).
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 
 def _as_double(col: str) -> F.Column:
@@ -39,6 +32,18 @@ def _dot(a: str, b: str) -> F.Column:
     return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
 
 
+def _topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Cosine-scored per-query top-k of (query_id, qv, qn) × (neighbor_id,
+    cv, cn) pairs; ties break on the smaller neighbor_id."""
+    scored = pairs.withColumn("cosine", _dot("qv", "cv") / (F.col("qn") * F.col("cn")))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "cosine")
+    )
+
+
 def brute_force_topk(
     queries: DataFrame, candidates: DataFrame, k: int = 5,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -50,101 +55,33 @@ def brute_force_topk(
     c = candidates.select(
         F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
     ).withColumn("cn", _norm("cv"))
-    scored = (
-        F.broadcast(q).join(c, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _dot("qv", "cv") / (F.col("qn") * F.col("cn")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _topk(F.broadcast(q).join(c, F.col("query_id") != F.col("neighbor_id")), k)
 
 
-def _projections(dim: int, bits: int, seed: int = 7) -> np.ndarray:
-    raw = hashlib.sha256(f"lsh|{seed}|{dim}|{bits}".encode()).digest()
-    rng = np.random.default_rng(int.from_bytes(raw[:8], "big"))
-    return rng.standard_normal((bits, dim))
+def ivf_signbucket_topk(emb: DataFrame, query_pred: Column, k: int = 3) -> DataFrame:
+    """Sign-bucketed cosine top-k: (query_id, rank, neighbor_id, cosine).
 
-
-def _sketch_udf(bits: int, seed: int = 7):
-    """Sign-sketch UDF with executor-side plane generation.
-
-    The hyperplanes are derived deterministically from (seed, dim, bits) on
-    each executor from the first Arrow batch's vector length — identical on
-    every task, and the driver never runs a job to discover ``dim`` (an
-    operator that may sit mid-pipeline must not force an extra action).
+    Rows of ``emb`` (``vec_id``, ``embedding``) matching ``query_pred`` are
+    the queries, the rest the candidates. Bucket = 4-bit sign code over the
+    first four dimensions (float sign is exact in any engine). Candidates
+    shuffle once on bucket;
+    each query probes its own bucket plus the four hamming-1 neighbours (an
+    aligned dimension near zero is exactly when its sign bit is noisy).
+    Probe buckets are distinct per query, so no pair is scored twice.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    plane_cache: dict[int, np.ndarray] = {}
-
-    @pandas_udf(LongType())
-    def sketch(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())              # (n, dim) per Arrow batch
-        dim = mat.shape[1]
-        planes = plane_cache.get(dim)
-        if planes is None:
-            planes = plane_cache.setdefault(dim, _projections(dim, bits, seed))
-        signs = mat @ planes.T > 0                   # (n, bits)
-        weights = (1 << np.arange(bits)).astype(np.int64)
-        return pd.Series(signs @ weights)
-
-    return sketch
-
-
-def lsh_topk(
-    queries: DataFrame, candidates: DataFrame, k: int = 5,
-    bits: int = 8, n_probe: int = 3,
-    id_col: str = "vec_id", vec_col: str = "embedding", dim: int | None = None,
-) -> DataFrame:
-    """Approximate cosine top-k via sign-random-projection bucketing.
-
-    Candidates shuffle once on their bucket id; each query fans out to the
-    ``n_probe`` buckets nearest its own sketch (hamming), then the bucketed
-    pairwise scoring + window top-k run exactly like brute force but on a
-    ~``n_probe/2^bits`` slice of the corpus.
-    """
-    # dim is discovered executor-side inside the sketch UDF — no driver
-    # action; the explicit param remains only for API compatibility
-    del dim
-    sketch = _sketch_udf(bits)
-
-    c = candidates.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    ).withColumn("cn", _norm("cv")).withColumn("bucket", sketch(F.col("cv")))
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn", _norm("qv")).withColumn("qbucket", sketch(F.col("qv")))
-
-    # probe set: all 2^bits buckets ranked by hamming to the query's sketch
-    all_buckets = F.expr(f"sequence(0, {(1 << bits) - 1})")
-    probes = (
-        q.withColumn("bucket", F.explode(all_buckets))
-        .withColumn("ham", F.bit_count(F.expr("qbucket ^ bucket")))
-        .withColumn(
-            "probe_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy("ham", "bucket")),
-        )
-        .filter(F.col("probe_rank") <= n_probe)
-        .select("query_id", "qv", "qn", "bucket")
-    )
-
-    scored = (
-        F.broadcast(probes)
-        .join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _dot("qv", "cv") / (F.col("qn") * F.col("cn")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    v = emb.withColumn("_vd", _as_double("embedding"))
+    bucket = sum((F.col("_vd")[i] > 0).cast("int") * (1 << i) for i in range(4))
+    v = v.withColumn("_bucket", bucket).withColumn("_nrm", _norm("_vd"))
+    q = v.filter(query_pred).select(
+        F.col("vec_id").alias("query_id"), F.col("_vd").alias("qv"),
+        F.col("_nrm").alias("qn"),
+        F.explode(F.array(*[
+            F.col("_bucket").bitwiseXOR(F.lit(m)) for m in (0, 1, 2, 4, 8)
+        ])).alias("bucket"))
+    c = v.filter(~query_pred).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("_vd").alias("cv"),
+        F.col("_nrm").alias("cn"), F.col("_bucket").alias("bucket"))
+    return _topk(F.broadcast(q).join(c, "bucket"), k)
 
 
 def kmeans_bucket_assign(

@@ -968,30 +968,18 @@ GROUP BY source
 # =====================================================================
 
 def q_ann_topk(spark, sf_dir):
-    """Brute-force cosine top-5 per query vector (rank-only output).
-
-    Queries = vec_id < 10 (broadcast), candidates = the rest. Dot products
-    run as JVM higher-order fns over double-cast arrays; ranks are emitted
-    without the float score so the comparison is precision-proof.
-    At 10^10 scale the same plan shape holds with the IVF variant
-    (crawler_spark.operators.similarity) pre-bucketing candidates.
+    """Exact cosine top-5 per query vector (rank-only output):
+    ``similarity.brute_force_topk`` with queries = vec_id < 10 (broadcast)
+    and candidates = the rest. Ranks are emitted without the float score
+    so the comparison is precision-proof. ``ann_ivf_bucketed`` is the
+    bucketed path of the same question.
     """
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "vd", F.expr("transform(embedding, x -> cast(x AS double))"))
-    norm = F.sqrt(F.expr("aggregate(vd, 0D, (acc, x) -> acc + x * x)"))
-    emb = emb.withColumn("nrm", norm)
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("vd").alias("qv"), F.col("nrm").alias("qn"))
-    c = emb.filter(F.col("vec_id") >= 10).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("vd").alias("cv"), F.col("nrm").alias("cn"))
-    dot = F.expr("aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
-    scored = F.broadcast(q).join(c).withColumn("cosine", dot / (F.col("qn") * F.col("cn")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    from crawler_spark.operators.similarity import brute_force_topk
+
+    emb = _t(spark, sf_dir, "embeddings")
+    return brute_force_topk(
+        emb.filter(F.col("vec_id") < 10), emb.filter(F.col("vec_id") >= 10), k=5,
+    ).select("query_id", "rank", "neighbor_id")
 
 
 SQL_ANN_TOPK = """
@@ -1017,10 +1005,10 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     cosine exactly 1.0 while the sf0.01 corpus' max organic pairwise cosine is
     0.513 — the 0.95 threshold is precision-proof across engines. Output is
     integer ids only. Scale shape: a sign-sketch bucket equi-join (the
-    `ann_ivf_bucketed` / `similarity.lsh_topk` shape) — one shuffle on the
-    bucket key, no all-pairs stage. For near-dups that are close-but-not-
-    identical, recall is tuned by widening probes/tables (lsh_topk does);
-    the single-table variant here keeps the oracle bit-deterministic.
+    `ann_ivf_bucketed` shape) — one shuffle on the bucket key, no all-pairs
+    stage. For near-dups that are close-but-not-identical, recall is tuned
+    by multi-probing neighbour buckets (`ann_ivf_bucketed` does); the
+    single-probe variant here keeps the oracle bit-deterministic.
     """
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     base = emb.unionByName(
@@ -1162,54 +1150,18 @@ WHERE list_cosine_similarity(a.vd, b.vd) >= 0.95
 
 
 def q_ann_ivf_bucketed(spark, sf_dir):
-    """IVF/LSH-bucketed ANN: the 10^10-scale path of `ann_cosine_topk`.
-
-    Buckets = 4-bit sign code over the first four dimensions (float sign is
-    exact in both engines). Candidates shuffle once on bucket; each query
-    MULTI-PROBES its own bucket plus the four hamming-1 neighbors (the
-    aligned dimension being near zero is exactly when the sign bit is
-    noisy), so the pairwise stage touches ~5/16 of the corpus instead of
-    all of it — the n_probe=5 analogue of operators/similarity.lsh_topk.
-    Probe buckets are distinct per query, so no pair is scored twice.
-    Output is rank-only (no float column).
+    """IVF-bucketed ANN: the scale path of `ann_cosine_topk`
+    (``similarity.ivf_signbucket_topk``, top-3). Buckets = 4-bit sign code
+    over the first four dimensions; each query multi-probes its own bucket
+    plus the four hamming-1 neighbours, so the pairwise stage touches ~5/16
+    of the corpus instead of all of it. Output is rank-only (no float
+    column).
     """
-    return ivf_signbucket_topk(_t(spark, sf_dir, "embeddings"))
+    from crawler_spark.operators.similarity import ivf_signbucket_topk
 
-
-def ivf_signbucket_topk(emb, k: int = 3, query_pred=None):
-    """The catalog IVF shape over any (vec_id, embedding) frame — reused by
-    the planted-corpus recall test (tests/test_similarity.py). ``query_pred``
-    defaults to the catalog's ``vec_id < 10``; candidates are the rest."""
-    emb = emb.withColumn(
-        "vd", F.expr("transform(embedding, x -> cast(x AS double))"))
-    if query_pred is None:
-        query_pred = F.col("vec_id") < 10
-    bucket = (
-        (F.col("vd")[0] > 0).cast("int")
-        + (F.col("vd")[1] > 0).cast("int") * 2
-        + (F.col("vd")[2] > 0).cast("int") * 4
-        + (F.col("vd")[3] > 0).cast("int") * 8
-    )
-    norm = F.sqrt(F.expr("aggregate(vd, 0D, (acc, x) -> acc + x * x)"))
-    v = emb.withColumn("bucket", bucket).withColumn("nrm", norm)
-    q = v.filter(query_pred).select(
-        F.col("vec_id").alias("query_id"), F.col("vd").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.explode(F.array(*[
-            F.col("bucket").bitwiseXOR(F.lit(m)) for m in (0, 1, 2, 4, 8)
-        ])).alias("bucket"))
-    c = v.filter(~query_pred).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("vd").alias("cv"),
-        F.col("nrm").alias("cn"), "bucket")
-    dot = F.expr("aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
-    scored = F.broadcast(q).join(c, "bucket").withColumn(
-        "cosine", dot / (F.col("qn") * F.col("cn")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    return ivf_signbucket_topk(
+        _t(spark, sf_dir, "embeddings"), F.col("vec_id") < 10, k=3,
+    ).select("query_id", "rank", "neighbor_id")
 
 
 SQL_ANN_IVF = """
@@ -3402,12 +3354,12 @@ def q_hits_hosts(spark, sf_dir):
 
 def _hits_half_sql(scores: str, raw: str, out: str, score_on: str, group_on: str) -> str:
     return f"""
-{raw} AS (
+{raw} AS MATERIALIZED (
   SELECT e.{group_on} AS host_id, CAST(sum(p.s) AS BIGINT) AS raw
   FROM edges e JOIN {scores} p ON p.host_id = e.{score_on}
   GROUP BY e.{group_on}
 ),
-{out} AS (
+{out} AS MATERIALIZED (
   SELECT n.host_id,
          CAST(COALESCE(r.raw, 0)
               // greatest((SELECT CAST(sum(raw) AS BIGINT) FROM {raw})
@@ -3416,18 +3368,21 @@ def _hits_half_sql(scores: str, raw: str, out: str, score_on: str, group_on: str
 )"""
 
 
+# Every CTE is MATERIALIZED: each half-step reads its raw CTE twice (join +
+# normalizing sum), so an inlined chain re-evaluates all earlier steps per
+# reference (DuckDB 1.0.0, sf0.001: ~227 s inlined, ~0.02 s materialized).
 SQL_HITS_HOSTS = f"""
-WITH edges AS (
+WITH edges AS MATERIALIZED (
   SELECT DISTINCT src, dst FROM (
     SELECT l_orderkey % {_PR_HOSTS} AS src, l_partkey % {_PR_HOSTS} AS dst
     FROM lineitem
   ) WHERE (src * 31 + dst * 17) % 7 < 3
 ),
-nodes AS (
+nodes AS MATERIALIZED (
   SELECT DISTINCT src AS host_id FROM edges
   UNION SELECT DISTINCT dst FROM edges
 ),
-a0 AS (SELECT host_id, {_HITS_UNIT} AS s FROM nodes),
+a0 AS MATERIALIZED (SELECT host_id, {_HITS_UNIT} AS s FROM nodes),
 {",".join(
     _hits_half_sql(f"a{i}", f"h{i + 1}r", f"h{i + 1}", "dst", "src")
     + ","

@@ -216,9 +216,9 @@ class SnapshotStore:
         embedding column: with the JVM writer those bytes cross the
         Python→JVM Arrow socket and a second encode pipeline; here they go
         straight from the task's numpy buffers to parquet (A/B:
-        ``scripts/write_leg_ab.py`` — task-side write is both faster per
+        ``BENCH/write_leg_ab.json`` — task-side write is both faster per
         core and scales 1→4 cores at ~0.87 vs ~0.72 for the JVM writer on
-        this host). ``transform(record_batch) -> record_batch`` runs inside
+        a 4-core host). ``transform(record_batch) -> record_batch`` runs inside
         the writer task after the split: each Arrow batch is sorted by
         bucket and cut into zero-copy per-bucket slices, and ``transform``
         runs once per slice. The documents sink uses it to fill missing
@@ -389,7 +389,10 @@ class SnapshotStore:
         return table_root.exists() and any(table_root.glob("a*"))
 
     def vacuum(self, keep_last: int = 2) -> None:
-        """Drop snapshot directories older than the last ``keep_last`` per table."""
+        """Drop snapshot directories older than the last ``keep_last`` per
+        table, and every ``stage-*`` directory a crashed bucket write left
+        behind. Run it between epochs, never while a write is in flight: an
+        in-flight write's stage directory looks the same as a crashed one."""
         def _sweep(dir_: Path, current: int) -> None:
             for child in dir_.iterdir():
                 if child.name.startswith("v"):
@@ -412,6 +415,8 @@ class SnapshotStore:
                         _sweep(bdir, int(ver))
             else:
                 _sweep(table_root, int(current))
+        for stage in self.root.glob("*/stage-*"):
+            shutil.rmtree(stage, ignore_errors=True)
 
     def destroy(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)

@@ -148,6 +148,56 @@ def test_breadcrumb_exact_element_match(spark, tmp_path):
     assert f"{base}/chunk0.json#schema-2" not in indexed_urls  # exact match skipped
 
 
+def test_malformed_urls_do_not_stall_the_crawl(spark, tmp_path):
+    """`@id`s and a sitemap `<loc>` that `java.net.URI` rejects (a space, a
+    `|`) must not fail the epoch: a failed epoch re-runs on the same rows, so
+    one such URL would stop the crawl for good. The `<loc>` keeps its site's
+    host, so its site's politeness group, not a pooled one, governs it."""
+    import json
+    from datetime import datetime, timezone
+
+    from crawler_spark.schema import PAGES
+
+    base, other = (f"https://{site_host(i)}" for i in range(2))
+    ids0 = [f"{base}/chunk0.json#a b", f"{base}/q?x=1|2", f"{base}/chunk0.json#ok"]
+    ids1 = [f"{base}/chunk 1.json#schema-0"]
+    ids2 = [f"{other}/chunk0.json#x"]
+
+    def body(ids):
+        return json.dumps([{"@type": "Thing", "@id": i, "name": f"n{k}"}
+                           for k, i in enumerate(ids)]).encode()
+
+    def site_rows(host_url, files):
+        locs = "".join(f'<url contentType="schema.org/Thing"><loc>{f}</loc></url>'
+                       for f in files)
+        return [
+            {"url": f"{host_url}/robots.txt",
+             "html": b"User-agent: *\nSchemaMap: /schema_map.xml\n"},
+            {"url": f"{host_url}/schema_map.xml",
+             "html": f'<?xml version="1.0"?><urlset>{locs}</urlset>'.encode()},
+        ] + [{"url": f"{host_url}{f}", "html": body(ids)} for f, ids in files.items()]
+
+    ts = datetime(2026, 1, 1, tzinfo=timezone.utc)
+    rows = [
+        {**r, "warc_ts": ts, "text": "", "lang": "en"}
+        for r in site_rows(base, {"/chunk0.json": ids0, "/chunk 1.json": ids1})
+        + site_rows(other, {"/chunk0.json": ids2})
+    ]
+    engine = build_engine(spark, tmp_path, spark.createDataFrame(rows, PAGES))
+    engine.bootstrap(seeds_df(spark, 2))
+    reports = engine.run()
+
+    assert reports[-1].selected == 0, "crawl did not reach fixed point"
+    seen, docs = engine_state(engine)
+    assert {i for _, _, i in seen} == set(ids0 + ids1 + ids2)
+    assert {d["url"] for d in docs.values()} == set(ids0 + ids1 + ids2)
+    assert_refcounts_consistent(engine)
+    files = {r["file_url"]: (r["host"], r["host_hash"]) for r in engine.frontier()
+             .filter(F.col("job_type") == "process_file").collect()}
+    assert files[f"{base}/chunk 1.json"] == files[f"{base}/chunk0.json"]
+    assert files[f"{base}/chunk 1.json"][0] == site_host(0)
+
+
 def test_dynamic_add_remove_phases(spark, tmp_path):
     """Phases mirror test_dynamic_updates.py: {0,1,2} → +{3,4} → −{1}."""
     user = "test:user001"

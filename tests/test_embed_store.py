@@ -11,7 +11,6 @@ import pytest
 from crawler_spark.functions.embed import (
     EMBED_DIM,
     embed_with_provider,
-    stub_embedding,
     stub_embedding_batch,
 )
 from crawler_spark.sources.tables import SnapshotStore
@@ -28,7 +27,7 @@ def test_batch_embedding_deterministic_and_normalized():
     assert np.allclose(norms, 1.0, atol=1e-5)
     # distinct texts → distinct vectors; same text → same vector
     assert not np.array_equal(a[0], a[1])
-    assert np.array_equal(a[0], stub_embedding(texts[0]))
+    assert np.array_equal(a[0], stub_embedding_batch([texts[0]])[0])
 
 
 def test_batch_embedding_none_is_zero_vector():
@@ -41,13 +40,13 @@ def test_batch_embedding_chunk_boundaries_consistent():
     """Values must not depend on where the row falls in the internal chunks."""
     texts = [f"t{i}" for i in range(2500)]  # spans multiple 1024-row chunks
     whole = stub_embedding_batch(texts)
-    per_row = np.stack([stub_embedding(t) for t in texts[:5] + texts[1020:1030]])
+    per_row = np.stack([stub_embedding_batch([t])[0] for t in texts[:5] + texts[1020:1030]])
     assert np.array_equal(whole[:5], per_row[:5])
     assert np.array_equal(whole[1020:1030], per_row[5:])
 
 
 def test_binary_packing_roundtrip():
-    vec = stub_embedding("roundtrip me")
+    vec = stub_embedding_batch(["roundtrip me"])[0]
     blob = vec.astype("<f4").tobytes()
     assert len(blob) == EMBED_DIM * 4
     assert np.array_equal(np.frombuffer(blob, dtype="<f4"), vec)
@@ -227,37 +226,6 @@ def test_store_materialize_pins_data(spark, tmp_path):
     assert again.count() == 7
 
 
-def test_map_in_arrow_embed_matches_pandas_udf(spark):
-    """The zero-copy ``mapInArrow`` embed kernel (the documents-sink hot
-    path) must produce byte-identical packed vectors to the reference-shaped
-    pandas-UDF path, preserve pass-through columns, and handle None/empty
-    text (zero vector) — the same contract `embed_binary_udf` carries."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from crawler_spark.functions.embed import embed_batches_arrow, embed_binary_udf
-    from pyspark.sql.types import (
-        BinaryType, LongType, StringType, StructField, StructType)
-
-    rows = [(i, f"essential text {i}" if i % 7 else ("" if i % 3 else None))
-            for i in range(500)]
-    df = spark.createDataFrame(rows, "k: long, essential_text: string")
-    out_schema = StructType([
-        StructField("k", LongType()),
-        StructField("essential_text", StringType()),
-        StructField("embedding", BinaryType()),
-    ])
-    got = (df.mapInArrow(embed_batches_arrow(), out_schema)
-             .orderBy("k").collect())
-    want = (df.withColumn("embedding", embed_binary_udf(F.col("essential_text")))
-              .orderBy("k").collect())
-    assert len(got) == len(want) == 500
-    for g, w in zip(got, want):
-        assert g.k == w.k and g.essential_text == w.essential_text
-        assert bytes(g.embedding) == bytes(w.embedding)
-        assert len(bytes(g.embedding)) == 4 * EMBED_DIM
-
-
 def test_replace_buckets_task_write_matches_jvm_writer(spark, tmp_path):
     """The task-side pyarrow writer (documents-sink hot path) must be a
     drop-in for `replace_buckets`: identical committed table content,
@@ -294,13 +262,13 @@ def test_replace_buckets_task_write_matches_jvm_writer(spark, tmp_path):
 def test_fill_missing_embeddings_transform_paths():
     """All-null batches embed zero-copy, null-free batches pass through,
     mixed batches fill only the null rows — all byte-identical to the
-    stub embedder."""
+    stub embedder, and a ``None`` text packs to a zero vector."""
     import pyarrow as pa
 
     from crawler_spark.functions.embed import fill_missing_embeddings_transform
 
     tr = fill_missing_embeddings_transform()
-    texts = [f"doc {i}" for i in range(50)]
+    texts = [f"doc {i}" if i != 6 else None for i in range(50)]
     want = stub_embedding_batch(texts).astype("<f4")
 
     allnull = pa.RecordBatch.from_pydict({
@@ -309,6 +277,7 @@ def test_fill_missing_embeddings_transform_paths():
     out = tr(allnull)
     got = [bytes(v.as_py()) for v in out.column("embedding")]
     assert got == [want[i].tobytes() for i in range(50)]
+    assert got[6] == bytes(4 * EMBED_DIM)  # None text → zero vector
 
     nonull = out
     assert tr(nonull) is nonull  # pass-through, no copy

@@ -31,6 +31,7 @@ from crawler_spark.functions.sitemap import (
     schema_maps_from_robots,
 )
 from tests.conftest import load_reference_function
+from tests.test_canonical import URL_CASES
 
 # --------------------------------------------------------------------------
 # C1 normalize_site_url
@@ -38,22 +39,6 @@ from tests.conftest import load_reference_function
 
 ref_normalize = load_reference_function("code/core/db.py", "normalize_site_url", {"re": re})
 
-URL_CASES = [
-    "https://www.imdb.com",
-    "http://example.com",
-    "www.site.org",
-    "site.com",
-    "https://example.com/",
-    "https://www.example.com/path/",
-    "HTTPS://www.example.com",  # scheme regex is case-sensitive in the reference
-    "httpx://weird",
-    "",
-    None,
-    "https://wwwx.example.com",
-    "http://www.www.double.com",
-    "ftp://www.example.com/",
-    "https://example.com//",
-]
 
 
 def test_normalize_known_cases():

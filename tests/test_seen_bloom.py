@@ -5,9 +5,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from crawler_spark.operators.seen import (
+    BLOOM_SCHEMA,
     anti_join_new_ids,
-    build_host_blooms,
-    split_by_bloom,
     split_by_bloom_blobs,
     updated_blooms,
 )
@@ -29,6 +28,16 @@ def _ids_df(spark, rows):
     )
 
 
+def _no_blobs(spark):
+    """An empty blooms table (``BLOOM_SCHEMA``, no rows)."""
+    return spark.createDataFrame([], BLOOM_SCHEMA)
+
+
+def _first_blobs(spark, rows):
+    """Blobs as the engine creates them: ``rows`` folded into no blobs."""
+    return updated_blooms(_no_blobs(spark), rows)
+
+
 def test_bloom_no_false_negatives_and_exact_result(spark):
     seen = _ids_df(spark, [(h, f, i) for h in range(6) for f in range(4) for i in range(30)])
     # half overlapping, half new (new files + new hosts)
@@ -39,7 +48,8 @@ def test_bloom_no_false_negatives_and_exact_result(spark):
         + [(77, 0, i) for i in range(10)],                                      # unseen host bucket
     )
 
-    fresh, maybe = split_by_bloom(incoming, seen)
+    blooms = _first_blobs(spark, seen)
+    fresh, maybe = split_by_bloom_blobs(incoming, blooms)
     fresh_keys = {tuple(r) for r in fresh.select("file_url", "user_id", "id").collect()}
     seen_keys = {tuple(r) for r in seen.select("file_url", "user_id", "id").collect()}
     # no false negatives: nothing marked definitely-new is actually seen
@@ -48,7 +58,7 @@ def test_bloom_no_false_negatives_and_exact_result(spark):
     # end result identical to the exact anti-join
     got = {
         tuple(r)
-        for r in anti_join_new_ids(incoming, seen)
+        for r in anti_join_new_ids(incoming, seen, blooms=blooms)
         .select("file_url", "user_id", "id").collect()
     }
     want = {
@@ -70,7 +80,7 @@ def test_updated_blooms_incremental_no_false_negatives(spark):
     """OR-ing an epoch's added ids into persisted blobs must keep EVERY key
     ever inserted matching (old and new), across multiple increments."""
     epoch1 = _ids_df(spark, [(h, f, i) for h in range(4) for f in range(2) for i in range(20)])
-    blooms = build_host_blooms(epoch1)
+    blooms = _first_blobs(spark, epoch1)
 
     epoch2 = _ids_df(spark, [(h, 5, i) for h in range(4) for i in range(15)]
                      + [(9, 0, i) for i in range(10)])  # 9%8=1: bucket 1 extra
@@ -89,12 +99,13 @@ def test_updated_blooms_doubling_keeps_old_members(spark):
     """Over-capacity blobs double; pre-doubling keys must still match
     (the bitmap-copy trick guarantees pos mod 2m lands on a set bit)."""
     first = _ids_df(spark, [(0, 0, i) for i in range(10)])
-    blooms = build_host_blooms(first)  # sized for ~10 items (min 1024 bits)
+    blooms = _first_blobs(spark, first)  # sized for 4×10 items (min 1024 bits)
+    m_first = blooms.collect()[0]["m_bits"]
     # push far past capacity to force >=1 doubling
     flood = _ids_df(spark, [(0, 1, i) for i in range(2000)])
     blooms2 = updated_blooms(blooms, flood)
     blob = blooms2.collect()[0]
-    assert blob["m_bits"] > build_host_blooms(first).collect()[0]["m_bits"]
+    assert blob["m_bits"] > m_first
     fresh, _ = split_by_bloom_blobs(first.unionByName(flood), blooms2)
     assert fresh.count() == 0
 
@@ -110,7 +121,7 @@ def test_missing_blob_falls_through_to_exact_join(spark):
         [(h, 0, i) for h in range(4) for i in range(5)]   # true dups
         + [(h, 7, i) for h in range(4) for i in range(5)],  # genuinely new
     )
-    no_blobs = build_host_blooms(seen).limit(0)  # blooms table exists, no rows
+    no_blobs = _no_blobs(spark)  # blooms table exists, no rows
 
     fresh, maybe = split_by_bloom_blobs(incoming, no_blobs)
     assert fresh.count() == 0, "blob-less bucket rows must go to the exact join"

@@ -1,10 +1,10 @@
-"""ANN operators: brute-force exactness + LSH recall against it."""
+"""ANN operators: brute-force exactness + bucketed recall against it."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from crawler_spark.operators.similarity import brute_force_topk, lsh_topk
+from crawler_spark.operators.similarity import brute_force_topk, ivf_signbucket_topk
 
 
 def test_brute_force_matches_duckdb_shape(spark, sf_dir):
@@ -25,9 +25,9 @@ def test_brute_force_matches_duckdb_shape(spark, sf_dir):
 
 
 def _planted_corpus(spark, n_clusters=20, per_cluster=25, dim=32, noise=0.15):
-    """Clustered vectors: true neighbors have high cosine (the regime LSH is
-    for) — testdata embeddings are near-random, where no sublinear ANN can
-    beat the probed fraction."""
+    """Clustered vectors: true neighbors have high cosine (the regime
+    bucketed ANN is for) — testdata embeddings are near-random, where no
+    sublinear ANN can beat the probed fraction."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -42,45 +42,21 @@ def _planted_corpus(spark, n_clusters=20, per_cluster=25, dim=32, noise=0.15):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
 
 
-def test_lsh_recall_vs_brute_force(spark):
-    emb = _planted_corpus(spark)
-    q = emb.filter(F.col("vec_id") % 25 == 0)  # one query per cluster
-    truth = brute_force_topk(q, emb, k=5).select("query_id", "neighbor_id")
-    approx = lsh_topk(q, emb, k=5, bits=8, n_probe=24, dim=32).select("query_id", "neighbor_id")
-
-    t = {(r[0], r[1]) for r in truth.collect()}
-    a = {(r[0], r[1]) for r in approx.collect()}
-    recall = len(t & a) / len(t)
-    # 24/256 buckets probed (<10% of the corpus scanned) yet high recall,
-    # because same-cluster vectors share sketch bits
-    assert recall >= 0.8, f"LSH recall too low: {recall:.2f}"
-
-
 def test_catalog_ivf_multiprobe_recall(spark):
     """The catalog `ann_ivf_bucketed` shape (4-bit sign code over the first
     four dims, hamming-1 multi-probe — r3 advice item #7) on the planted
     corpus: one sign bit flipping under noise is exactly the case the
     hamming-1 probes recover, so recall vs brute-force top-3 must be high
     while only ~5/16 of the corpus is scored."""
-    from crawler_spark.plans.queries import ivf_signbucket_topk
-
     emb = _planted_corpus(spark)
     q = emb.filter(F.col("vec_id") % 25 == 0)
     truth = brute_force_topk(q, emb.join(q, "vec_id", "left_anti"), k=3)
-    approx = ivf_signbucket_topk(emb, k=3, query_pred=F.col("vec_id") % 25 == 0)
+    approx = ivf_signbucket_topk(emb, F.col("vec_id") % 25 == 0, k=3)
 
     t = {(r["query_id"], r["neighbor_id"]) for r in truth.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(t & a) / len(t)
     assert recall >= 0.85, f"catalog IVF multi-probe recall too low: {recall:.2f}"
-
-
-def test_lsh_full_probe_equals_brute_force(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    truth = brute_force_topk(q, emb, k=5).select("query_id", "neighbor_id")
-    full = lsh_topk(q, emb, k=5, bits=4, n_probe=16).select("query_id", "neighbor_id")
-    assert {(r[0], r[1]) for r in full.collect()} == {(r[0], r[1]) for r in truth.collect()}
 
 
 def _anisotropic_corpus(spark, n=400, dim=16):

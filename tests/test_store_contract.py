@@ -12,7 +12,7 @@ Contract surface exercised (exactly what ``CrawlEngine`` calls):
   write/commit/read visibility · bucket-level replace with per-bucket
   versioning and O(touched) reads · crash re-run overwrite · append-only
   parts · manifest meta pinning · current-state-only manifest · footer
-  null counts · vacuum retention.
+  null counts · vacuum retention and stage-dir sweep.
 """
 
 from __future__ import annotations
@@ -149,6 +149,21 @@ def test_vacuum_keeps_live_versions(spark, make_store):
         store.commit(e, {"t": store.write(_df(spark, [(0, f"v{e}", e)]), "t")})
     store.vacuum(keep_last=1)
     assert [r["k"] for r in store.read(spark, "t").collect()] == ["v3"]
+
+
+def test_vacuum_removes_crashed_stage_dirs(spark, make_store):
+    """A bucket write that crashed before its rename leaves
+    ``<table>/stage-<ns>/`` behind; vacuum (run between epochs) removes it
+    and committed buckets still read."""
+    store = make_store()
+    base = _df(spark, [(b, f"k{b}", b) for b in range(3)])
+    store.commit(0, {"t": store.replace_buckets(base, "t", [0, 1, 2])})
+    leftover = store.root / "t" / "stage-123"
+    (leftover / "_b=1").mkdir(parents=True)
+    (leftover / "_b=1" / "part-0.parquet").write_bytes(b"partial")
+    store.vacuum()
+    assert not leftover.exists()
+    assert sorted(r["k"] for r in store.read(spark, "t").collect()) == ["k0", "k1", "k2"]
 
 
 def test_manifest_size_independent_of_epoch_count(make_store):
