@@ -22,8 +22,10 @@ driver loop that each iteration
 5. **indexes** first-occurrence objects task-side: the embed kernel fills
    essential-fields text → embedding and writes the ``documents`` parquet
    buckets inside the same task (``replace_buckets_task_write``), so the
-   wide embedding column never crosses Python→JVM; orphan deletes apply
-   bucket-locally;
+   wide embedding column never crosses Python→JVM. Each touched bucket gets
+   a delta holding its new docs plus the keys of its orphaned docs, merged
+   on read; an epoch reads and moves no old document row unless a bucket's
+   chain is due for compaction;
 6. **commits** frontier/url_seen/documents/metrics snapshots atomically via
    the store manifest — crash anywhere ⇒ re-run epoch from last commit.
 
@@ -59,7 +61,7 @@ from crawler_spark.functions.sitemap import (
 )
 from crawler_spark.operators import frontier as fr
 from crawler_spark.operators import politeness, seen
-from crawler_spark.schema import FRONTIER, REFCOUNTS, URL_SEEN
+from crawler_spark.schema import DOCUMENTS, FRONTIER, REFCOUNTS, URL_SEEN
 from crawler_spark.sources.tables import SnapshotStore
 
 
@@ -117,7 +119,9 @@ class CrawlEngine:
         # whose blobs cover every url_seen bucket that holds rows. Opening a
         # store whose record is missing or different would misroute bucket
         # reads/writes (data loss) or probe blobs that miss seen ids
-        # (duplicate re-adds): refuse it.
+        # (duplicate re-adds): refuse it. So is a store whose bucketed
+        # tables predate per-bucket version chains (``bucket_layout``):
+        # their manifest entries have no chains to read.
         if store.exists("frontier"):
             for key, want in self._layout().items():
                 got = store.get_meta(key)
@@ -129,7 +133,8 @@ class CrawlEngine:
     def _layout(self) -> dict:
         """Layout facts ``bootstrap`` records and ``__init__`` checks."""
         return {"num_partitions": self.cfg.num_partitions,
-                "seen_filter_kind": "blooms"}
+                "seen_filter_kind": "blooms",
+                "bucket_layout": "chains"}
 
     # ------------------------------------------------------------------
     # bootstrap / state access
@@ -205,10 +210,22 @@ class CrawlEngine:
 
     def documents(self) -> DataFrame:
         if not self.store.exists("documents"):
-            from crawler_spark.schema import DOCUMENTS
-
             return self.spark.createDataFrame([], DOCUMENTS)
         return self.store.read(self.spark, "documents")
+
+    def _write_documents(self, new_docs: DataFrame, orphans: DataFrame,
+                         touched_docs: list[int]) -> dict:
+        """The one documents write, shared by the epoch and ``delete_site``:
+        add ``new_docs`` (``DOCUMENTS`` rows; the writer fills null
+        embeddings) and delete the docs of the ``orphans``' ids in the
+        ``touched_docs`` buckets — a delta per bucket, or a compacted base
+        (``replace_buckets_task_write``)."""
+        deletes = orphans.select(
+            doc_bucket_expr(F.col("id"), self.cfg.num_partitions).alias("bucket"),
+            doc_key_expr(F.col("id")).alias("id"))
+        return self.store.replace_buckets_task_write(
+            new_docs, "documents", touched_docs, "bucket",
+            fill_missing_embeddings_transform(), deletes)
 
     def _refcounts(self, buckets: list[int]) -> DataFrame:
         """(id, user_id, ref_count) rows of the ``buckets`` id buckets. No
@@ -488,7 +505,6 @@ class CrawlEngine:
         rc_content = merged.filter(F.col("ref_count") > 0).select(
             doc_bucket_expr(F.col("id"), self.cfg.num_partitions).alias("rbucket"),
             "id", "user_id", "ref_count")
-        orphan_keys = orphans.select(doc_key_expr(F.col("id")).alias("id"))
         touched_docs = [int(r[0]) for r in orphans.select(
             doc_bucket_expr(F.col("id"), self.cfg.num_partitions)).distinct().collect()]
 
@@ -503,11 +519,8 @@ class CrawlEngine:
         # Bloom blobs keep the doomed ids' bits: stale bits cost only false
         # positives, which the exact anti-join absorbs (operators/seen.py)
         if self.store.exists("documents"):
-            docs_after = self.store.read_buckets(
-                self.spark, "documents", only=touched_docs
-            ).join(orphan_keys, "id", "left_anti")
-            versions["documents"] = self.store.replace_buckets(
-                docs_after, "documents", touched_docs, bucket_col="bucket")
+            versions["documents"] = self._write_documents(
+                self.spark.createDataFrame([], DOCUMENTS), orphans, touched_docs)
         if rc_buckets:
             versions["refcounts"] = self.store.replace_buckets(
                 rc_content, "refcounts", rc_buckets, "rbucket")
@@ -672,6 +685,7 @@ class CrawlEngine:
             "file_url", "user_id", "id", "queued_at",
             host_hash_expr(host_from_url_expr(F.col("file_url")), cfg.num_partitions)
             .alias("host_hash"),
+            doc_bucket_expr(F.col("id"), cfg.num_partitions).alias("doc_bucket"),
         )
         # never-crawled hosts (no data files in the touched seen buckets —
         # a manifest+dirlist check, no job): every extracted id is new and
@@ -694,9 +708,9 @@ class CrawlEngine:
             added_df = seen.anti_join_new_ids(
                 ext_ids, existing, blooms=persisted_blooms)
             removed_df = existing.select(
-                "file_url", "user_id", "id", "host_hash").join(
-                ext_ids, ["file_url", "user_id", "id"], "left_anti"
-            )
+                "file_url", "user_id", "id", "host_hash",
+                doc_bucket_expr(F.col("id"), cfg.num_partitions).alias("doc_bucket"),
+            ).join(ext_ids, ["file_url", "user_id", "id"], "left_anti")
             # pin the (small) diffs to scratch: SIX downstream sinks reference
             # them, and a cache() would leave each sink's logical plan carrying
             # the full bloom+anti-join lineage — the driver re-analyzes and
@@ -756,9 +770,8 @@ class CrawlEngine:
                 "id", "user_id", "ref_count")
             return firsts, orphans, rc_content
 
-        def docs_for(firsts: DataFrame, orphan_keys: DataFrame,
-                     touched_docs: list[int]) -> DataFrame:
-            new_docs = (
+        def new_docs_for(firsts: DataFrame) -> DataFrame:
+            return (
                 firsts.join(
                     extracted.select("file_url", "user_id", "id", "obj_json",
                                      "types", "type_list", "essential_text",
@@ -770,14 +783,13 @@ class CrawlEngine:
                 # substring test on the display string would wrongly skip
                 # e.g. `BreadcrumbListItem`.
                 .filter(~F.array_contains("type_list", "BreadcrumbList"))
-                .withColumn("bucket",
-                            doc_bucket_expr(F.col("id"), cfg.num_partitions))
+                .withColumnRenamed("doc_bucket", "bucket")
                 # bucket-align the ~1 KB pre-embed rows BEFORE the embed
                 # projection, salted so a hot host's bucket spreads over
                 # several tasks: the explicit repartition sets the embed
                 # stage's parallelism (AQE would under-coalesce ahead of
                 # the 6 KB/row expansion) and the 6 KB embedded rows are
-                # never shuffled again — the task-side writer below
+                # never shuffled again — the task-side writer
                 # (replace_buckets_task_write) writes each task's slices
                 # where they are (files per bucket ≤ salt width)
                 .repartition(cfg.num_partitions * 2, F.col("bucket"),
@@ -798,16 +810,7 @@ class CrawlEngine:
                     F.lit(None).cast("binary").alias("embedding"),
                 )
             )
-            # only the touched doc buckets are read back and rewritten —
-            # untouched embedding bytes (the table's mass) are never moved
-            docs_touched_old = (
-                self.store.read_buckets(self.spark, "documents", only=touched_docs)
-                if self.store.exists("documents") else self.documents()
-            )
-            return (
-                docs_touched_old.join(orphan_keys, "id", "left_anti")
-                .unionByName(new_docs)
-            )
+
         # --- frontier transitions + metrics ---
         # per_file covers every selected fetch job (zero-object and failed
         # files included via the extract kernel's marker rows), so `done`
@@ -914,12 +917,19 @@ class CrawlEngine:
         # a selected host whose re-crawl found identical content keeps its
         # current bucket versions (zero bytes move). Diff hosts come from the
         # pinned diff scratch driver-side (pyarrow column read, no job).
+        # The documents/refcounts write set comes from the same scratch:
+        # firsts ⊆ added and orphans ⊆ removed make the added∪removed ids'
+        # doc buckets an exact cover for both.
         diff_hosts: list[int] = []
+        touched_docs: list[int] = []
         if not diffs_empty:
             dh = self.store.scratch_column_values("added_epoch", "host_hash")
+            db = self.store.scratch_column_values("added_epoch", "doc_bucket")
             if rows_removed:
                 dh |= self.store.scratch_column_values("removed_epoch", "host_hash")
+                db |= self.store.scratch_column_values("removed_epoch", "doc_bucket")
             diff_hosts = sorted(int(h) for h in dh)
+            touched_docs = sorted(int(b) for b in db)
         with ThreadPoolExecutor(max_workers=6) as pool:
             futures = {}
             if not diffs_empty:
@@ -941,31 +951,17 @@ class CrawlEngine:
             f_metrics = pool.submit(self.store.append, metrics, "metrics", f"{epoch:06d}")
             f_errors = pool.submit(write_errors)
             if not diffs_empty:
-                # the touched-id-bucket collect overlaps the sinks above;
-                # firsts ⊆ added and orphans ⊆ removed make the added∪removed
-                # id buckets an exact cover for both documents and refcounts
-                # (a trivial scan now — the diffs are pinned scratch parquet)
-                doc_touch = (
-                    added.select(F.col("id").alias("k"))
-                    .unionByName(removed.select(F.col("id").alias("k")))
-                    .select(doc_bucket_expr(F.col("k"), cfg.num_partitions).alias("b"))
-                    .distinct().collect()
-                )
-                touched_docs = sorted(int(r["b"]) for r in doc_touch)
                 firsts, orphans, rc_content = gates_for(touched_docs)
-                orphan_keys = orphans.select(doc_key_expr(F.col("id")).alias("id"))
                 futures["refcounts"] = pool.submit(
                     self.store.replace_buckets, rc_content, "refcounts",
                     touched_docs, "rbucket")
-                # task-side pyarrow write + in-kernel embed fill:
-                # uncompressed (the packed float32 mass shrinks ~0 under
-                # any codec) and never re-encoded by the JVM writer —
-                # the leg that dominates epoch wall and must scale N→4N
+                # task-side pyarrow write + in-kernel embed fill of the new
+                # docs, plus the orphans' delete keys: a delta per touched
+                # bucket, so the old embedding rows (the table's mass) are
+                # neither read nor rewritten
                 futures["documents"] = pool.submit(
-                    self.store.replace_buckets_task_write,
-                    docs_for(firsts, orphan_keys, touched_docs),
-                    "documents", touched_docs, "bucket",
-                    fill_missing_embeddings_transform())
+                    self._write_documents, new_docs_for(firsts), orphans,
+                    touched_docs)
             for name, fut in futures.items():
                 versions[name] = fut.result()
             ev = f_errors.result()

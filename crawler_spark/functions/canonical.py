@@ -64,11 +64,12 @@ def doc_bucket_expr(id_url_col: Column, num_buckets: int) -> Column:
     """Bucket of a vector document = host bucket of its own ``@id`` URL.
 
     The documents table is bucket-versioned on this (see
-    ``SnapshotStore.replace_buckets``). Host-of-id — NOT a hash of the doc
-    key — gives the layout write locality: an epoch's new docs and orphan
-    deletes both belong to the hosts being crawled, so the epoch rewrites a
-    few host buckets instead of scattering one row into every bucket of the
-    table (which would degenerate bucket-replace into a full rewrite).
+    ``SnapshotStore.replace_buckets_task_write``). Host-of-id — NOT a hash
+    of the doc key — gives the layout locality: an epoch's new docs and
+    orphan delete keys both belong to the hosts being crawled, so the epoch
+    appends a delta to a few host buckets instead of one to every bucket of
+    the table, and compaction, when a chain comes due, rewrites only those
+    buckets.
     """
     return host_hash_expr(host_from_url_expr(id_url_col), num_buckets)
 

@@ -182,15 +182,15 @@ def fill_missing_embeddings_transform(
     """Arrow-batch transform for the task-side documents writer
     (``SnapshotStore.replace_buckets_task_write``): rows whose ``embedding``
     is null get one computed from ``essential_text``; rows that already
-    carry a vector (re-read bucket content on a re-crawl) pass through
-    untouched.
+    carry a vector (a bucket's live rows, read back only when the writer
+    compacts its chain into a new base) pass through untouched.
 
     Call granularity: the writer sorts each Arrow batch by bucket, cuts it
     into one zero-copy slice per bucket, and calls ``transform`` once per
     slice, after that split. One input batch that spans k buckets therefore
     makes k embed calls, each over that bucket's rows only.
 
-    The documents sink unions re-read old rows with this epoch's new rows
+    A compacting write unions the read-back rows with this epoch's new rows
     (embedding = null), and a union's partitions never mix legs, so in
     practice every slice is all-null (fast path: one zero-copy BinaryArray
     over the kernel's float32 matrix, no per-row Python object) or null-free

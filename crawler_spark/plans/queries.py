@@ -327,7 +327,9 @@ GROUP BY l_returnflag, l_linestatus
 
 
 def q_shipping_priority(spark, sf_dir):
-    """TPC-H Q3 shape: selective join pipeline + grouped top-k."""
+    """TPC-H Q3 shape: selective join pipeline + grouped top-k. No join
+    side is hinted: customer grows with the scale factor, so AQE picks the
+    join strategy from runtime sizes."""
     c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1995-03-15").cast("timestamp"))
@@ -336,7 +338,7 @@ def q_shipping_priority(spark, sf_dir):
     disc = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
         .agg(F.sum(_cents(disc)).alias("revenue_cents"))
         .orderBy(F.desc("revenue_cents"), F.asc("l_orderkey"))
@@ -359,7 +361,9 @@ ORDER BY revenue_cents DESC, l_orderkey LIMIT 10
 
 
 def q_region_revenue(spark, sf_dir):
-    """TPC-H Q5 shape: star join with every dim broadcast (zero dim shuffles)."""
+    """TPC-H Q5 shape: star join. Only nation and region are hinted as
+    broadcast (fixed size at any scale factor); customer grows with it, so
+    AQE picks its join strategy from runtime sizes."""
     region = _t(spark, sf_dir, "region")
     nation = _t(spark, sf_dir, "nation")
     customer = _t(spark, sf_dir, "customer")
@@ -368,7 +372,7 @@ def q_region_revenue(spark, sf_dir):
     disc = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name", "n_name")
@@ -1609,12 +1613,14 @@ SELECT user_id, rnk, event_id, ts, props FROM (
 
 
 def q_lookup_join(spark, sf_dir):
-    """J5 — id→object lookup as a broadcast hash join (replaces the
-    reference's O(n·m) nested loop at worker.py:219), rolled up per brand."""
+    """J5 — id→object lookup as a hash join (replaces the reference's
+    O(n·m) nested loop at worker.py:219), rolled up per brand. ``part`` grows
+    with the scale factor, so it is not hinted: AQE broadcasts it while it
+    fits the threshold and shuffle-joins it beyond."""
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 48)
     part = _t(spark, sf_dir, "part")
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n_items"),

@@ -20,13 +20,24 @@ interface is deliberately shaped so only this module changes. Parquet
 snapshots keep the sandbox dependency-free while preserving the exact
 semantics tests need (atomic commit, resume).
 
-Scale note: snapshots are written partitioned by ``host_hash`` (bucket-style
-layout) so the next epoch's joins against ``url_seen``/``frontier`` scan only
-matching buckets and partition pruning applies.
+Scale note: bucketed tables are split by a hash bucket (``host_hash`` for
+crawl state, the host of the ``@id`` for documents), and every bucket is
+versioned on its own, so an epoch reads and writes only the buckets it
+touches.
+
+Each bucket is a *chain* of version directories merged on read: a base,
+then deltas that add rows, each optionally carrying delete keys that drop
+rows of older versions (Iceberg v2 merge-on-read delete files with its
+sequence-number rule). Copy-on-write tables (``url_seen``, ``frontier``,
+``blooms``, ``refcounts``) always have a chain of one; ``documents`` grows
+deltas and compacts a bucket back to one base only when its chain outgrows
+a fixed share of the base, so a re-crawl writes its new docs and delete
+keys instead of rewriting its buckets' unchanged embeddings.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -35,7 +46,26 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    BooleanType, IntegerType, LongType, StringType, StructField, StructType)
+
+#: merge-on-read compaction policy (``replace_buckets_task_write``): the next
+#: write to a bucket rewrites it as one base once its deltas' rows plus
+#: delete keys reach ``COMPACT_RATIO`` × its base rows, or once it has
+#: ``MAX_DELTAS`` deltas. Reads then scan at most about twice the base rows.
+COMPACT_RATIO = 1.0
+MAX_DELTAS = 8
+
+#: a version's delete keys live in this subdirectory; Spark's file index
+#: skips ``_``-prefixed names, so a plain read of the version dir sees only
+#: its data files
+DELETES_DIR = "_deletes"
+
+#: (bucket, version) of a data or delete-key file, from its path
+_LINK_RE = rf"/b(\d+)/v(\d+)/(?:{DELETES_DIR}/)?[^/]+$"
+
+#: marks delete-key rows in the writer job's input
+_DELETE_FLAG = "_delete"
 
 
 class SnapshotStore:
@@ -44,6 +74,13 @@ class SnapshotStore:
         root/
           MANIFEST.json            # {"epoch": k, "tables": {name: version}, ...}
           <table>/v<version>/      # immutable parquet snapshot
+          <table>/b<bucket>/v<version>/            # one link of a bucket chain
+          <table>/b<bucket>/v<version>/_deletes/   # its delete keys, if any
+
+    A bucketed table's manifest entry is ``{"buckets": {b: head version},
+    "chains": {b: [link, ...]}}``, oldest link first. A link is ``{"v": n}``
+    for a copy-on-write version, and ``{"v": n, "rows": r, "deletes": d}``
+    for one written by the task-side writer.
     """
 
     def __init__(self, root: str | Path):
@@ -135,17 +172,23 @@ class SnapshotStore:
         writer.parquet(str(target))
         return version
 
-    # -- bucketed tables: partition-level replace -----------------------------
+    # -- bucketed tables: per-bucket version chains ---------------------------
     #
     # The reference updates state with per-row MERGE (db.py:205-213). The
-    # scale-safe snapshot equivalent is *bucket-level* replace: each table is
-    # a set of hash buckets (host_hash for crawl state, an id-hash for
+    # scale-safe snapshot equivalent works per *bucket*: each table is a set
+    # of hash buckets (host_hash for crawl state, the host of the @id for
     # documents), each bucket independently versioned in the manifest. An
     # epoch that touches 1% of hosts writes ~1% of the table's bytes instead
     # of a full rewrite, and reads of untouched buckets are skipped entirely
     # (the epoch passes an explicit bucket list — physical partition pruning
-    # by path, no full-table listing). Same commit/rollback semantics: new
-    # bucket versions are invisible until the manifest commit lands.
+    # by path, no full-table listing). New versions are invisible until the
+    # manifest commit lands.
+    #
+    # ``replace_buckets`` is copy-on-write: a touched bucket's new version
+    # holds its complete content, and its chain restarts there. An emptied
+    # bucket gets an empty version directory. ``replace_buckets_task_write``
+    # is merge-on-read: it appends a delta (rows to add plus delete keys) to
+    # each touched bucket's chain, or compacts the chain into a new base.
 
     def _bucket_dir(self, name: str, bucket: int, version: int) -> Path:
         return self.root / name / f"b{bucket:05d}" / f"v{version}"
@@ -153,9 +196,37 @@ class SnapshotStore:
     def _schema_path(self, name: str) -> Path:
         return self.root / name / "schema.json"
 
-    def bucket_versions(self, name: str) -> dict[str, int]:
+    def _bucket_entry(self, name: str) -> dict:
+        """A copy of ``name``'s manifest entry (empty for a new table)."""
         v = self.read_manifest()["tables"].get(name)
-        return dict(v["buckets"]) if isinstance(v, dict) else {}
+        if not isinstance(v, dict):
+            return {"buckets": {}, "chains": {}}
+        return {"buckets": dict(v["buckets"]),
+                "chains": {b: list(c) for b, c in v["chains"].items()}}
+
+    def _pin_schema(self, name: str, df: DataFrame) -> None:
+        """Record the schema of a table's first write; reads of a table
+        without data files return an empty frame of it."""
+        if not self._schema_path(name).exists():
+            self._schema_path(name).parent.mkdir(parents=True, exist_ok=True)
+            self._schema_path(name).write_text(df.schema.json())
+
+    def bucket_versions(self, name: str) -> dict[str, int]:
+        """The head version of each bucket: the version last written."""
+        return self._bucket_entry(name)["buckets"]
+
+    def bucket_chains(self, name: str) -> dict[str, list[dict]]:
+        """Each bucket's live chain of version links, oldest first."""
+        return self._bucket_entry(name)["chains"]
+
+    def _chain_dirs(self, name: str, only: list[int] | None = None) -> list[Path]:
+        """Version directories of the live chains of the ``only`` buckets
+        (or of all buckets), oldest link first within a bucket."""
+        want = None if only is None else {int(b) for b in only}
+        return [self._bucket_dir(name, int(b), int(link["v"]))
+                for b, chain in self.bucket_chains(name).items()
+                if want is None or int(b) in want
+                for link in chain]
 
     def replace_buckets(
         self,
@@ -164,19 +235,20 @@ class SnapshotStore:
         touched: list[int],
         bucket_col: str = "host_hash",
     ) -> dict:
-        """Write new content for exactly the ``touched`` buckets of ``name``.
+        """Write new content for exactly the ``touched`` buckets of ``name``
+        (copy-on-write).
 
         ``df`` must hold the *complete* new content of those buckets (rows of
         other buckets are filtered out defensively). Buckets not in
         ``touched`` keep their current version — zero I/O. Returns the
         manifest entry to pass to :meth:`commit`; nothing is visible until
-        the commit lands. A bucket whose new content is empty gets an empty
-        version directory (deletes work without tombstones).
+        the commit lands. Each touched bucket's chain restarts at its new
+        version; a bucket whose new content is empty gets an empty version
+        directory.
         """
-        buckets = self.bucket_versions(name)
-        if not self._schema_path(name).exists():
-            self._schema_path(name).parent.mkdir(parents=True, exist_ok=True)
-            self._schema_path(name).write_text(df.schema.json())
+        entry = self._bucket_entry(name)
+        buckets, chains = entry["buckets"], entry["chains"]
+        self._pin_schema(name, df)
         if touched:
             stage = self.root / name / f"stage-{time.time_ns()}"
             # co-locate each bucket's rows into one task before the
@@ -198,8 +270,9 @@ class SnapshotStore:
                 else:
                     target.mkdir()  # bucket emptied this epoch
                 buckets[str(int(b))] = nxt
+                chains[str(int(b))] = [{"v": nxt}]
             shutil.rmtree(stage, ignore_errors=True)
-        return {"buckets": buckets}
+        return entry
 
     def replace_buckets_task_write(
         self,
@@ -208,99 +281,151 @@ class SnapshotStore:
         touched: list[int],
         bucket_col: str = "bucket",
         transform=None,
+        deletes: DataFrame | None = None,
     ) -> dict:
-        """:meth:`replace_buckets`, but each task writes its parquet files
-        itself (pyarrow C++) instead of handing rows back to the JVM writer.
+        """Write the next version of each ``touched`` bucket of ``name``: a
+        delta, or a compacted base. Returns the manifest entry to pass to
+        :meth:`commit`; nothing is visible until the commit lands.
 
-        Built for the documents sink, whose mass is the 6 KB packed-float32
-        embedding column: with the JVM writer those bytes cross the
-        Python→JVM Arrow socket and a second encode pipeline; here they go
-        straight from the task's numpy buffers to parquet (A/B:
-        ``BENCH/write_leg_ab.json`` — task-side write is both faster per
-        core and scales 1→4 cores at ~0.87 vs ~0.72 for the JVM writer on
-        a 4-core host). ``transform(record_batch) -> record_batch`` runs inside
-        the writer task after the split: each Arrow batch is sorted by
-        bucket and cut into zero-copy per-bucket slices, and ``transform``
-        runs once per slice. The documents sink uses it to fill missing
-        embeddings, so new vectors are *born* next to the writer and never
-        cross a process boundary at all.
+        ``df`` holds the rows to add. ``deletes`` holds ``bucket_col`` plus
+        the key columns of rows to remove. Once committed, a touched bucket
+        reads as its old rows minus those a delete key matches, plus the
+        ``df`` rows: a delete key removes rows of older versions only.
+
+        * **Delta.** The new version holds the ``df`` rows, and the delete
+          keys in ``_deletes/``; no old row is read or moved. A bucket with
+          nothing to add or delete still gets an (empty) delta, so the head
+          version of every touched bucket is the version just written.
+        * **Base.** A bucket with no chain yet, or whose chain is due (its
+          deltas' rows plus delete keys reach ``COMPACT_RATIO`` × its base
+          rows, or it has ``MAX_DELTAS`` deltas), is compacted in the same
+          job: its live rows minus the delete keys are read back and
+          written with the ``df`` rows as one base, which restarts its
+          chain. A copy-on-write base has no row count and is always due.
+
+        Link row counts come from the writer's own (bucket, path, rows)
+        manifest, so the policy costs no footer read and no extra job.
+
+        Each task writes its parquet files itself (pyarrow C++) instead of
+        handing rows back to the JVM writer. Built for the documents sink,
+        whose mass is the 6 KB packed-float32 embedding column: with the JVM
+        writer those bytes cross the Python→JVM Arrow socket and a second
+        encode pipeline; here they go straight from the task's numpy buffers
+        to parquet (A/B: ``BENCH/write_leg_ab.json`` — task-side write is
+        both faster per core and scales 1→4 cores at ~0.87 vs ~0.72 for the
+        JVM writer on a 4-core host). ``transform(record_batch) ->
+        record_batch`` runs inside the writer task after the split, on rows
+        to add only: each Arrow batch is sorted by bucket and cut into
+        zero-copy per-bucket slices, and ``transform`` runs once per slice.
+        The documents sink uses it to fill missing embeddings, so new
+        vectors are *born* next to the writer and never cross a process
+        boundary at all.
 
         Commit protocol (same guarantees as Spark's Hadoop commit protocol,
         collapsed onto the store's stage-then-rename layout): tasks write
         uniquely-named files under ``stage/_b=<bucket>/`` and *return* the
-        (bucket, path, rows) manifest of what they wrote; only files listed
-        by successful tasks are moved into the new bucket versions (Spark
-        surfaces one attempt's output per partition, so a retried/
-        speculated attempt's leftovers stay unlisted and are deleted with
-        the stage dir). Nothing is visible until :meth:`commit`.
+        (bucket, path, rows, deletes) manifest of what they wrote; only
+        files listed by successful tasks are moved into the new bucket
+        versions (Spark surfaces one attempt's output per partition, so a
+        retried/speculated attempt's leftovers stay unlisted and are deleted
+        with the stage dir).
         """
-        from pyspark.sql.types import (
-            IntegerType, LongType, StringType, StructField)
-
-        buckets = self.bucket_versions(name)
-        if not self._schema_path(name).exists():
-            self._schema_path(name).parent.mkdir(parents=True, exist_ok=True)
-            self._schema_path(name).write_text(df.schema.json())
+        entry = self._bucket_entry(name)
+        buckets, chains = entry["buckets"], entry["chains"]
+        self._pin_schema(name, df)
         if not touched:
-            return {"buckets": buckets}
+            return entry
+        touched = sorted({int(b) for b in touched})
+        bases = {b for b in touched if _compacts(chains.get(str(b)))}
+        deltas = [b for b in touched if b not in bases]
+        keys = [] if deletes is None else [
+            c for c in deletes.columns if c != bucket_col]
+
+        def adds(frame: DataFrame) -> DataFrame:
+            return frame.select(*df.columns, F.lit(False).alias(_DELETE_FLAG))
+
+        parts = [adds(df.filter(F.col(bucket_col).isin(touched)))]
+        old = sorted(b for b in bases if str(b) in chains)
+        if old:  # compaction: the live rows come along into the new base
+            live = self.read_buckets(df.sparkSession, name, only=old)
+            if deletes is not None:
+                live = live.join(
+                    deletes.filter(F.col(bucket_col).isin(old)).select(*keys),
+                    keys, "left_anti")
+            parts.append(adds(live))
+        if deletes is not None and deltas:
+            types = {f.name: f.dataType for f in df.schema}
+            parts.append(deletes.filter(F.col(bucket_col).isin(deltas)).select(
+                *[F.col(c) if c in deletes.columns
+                  else F.lit(None).cast(types[c]).alias(c) for c in df.columns],
+                F.lit(True).alias(_DELETE_FLAG)))
+        staged = functools.reduce(DataFrame.union, parts)
+
         stage = self.root / name / f"stage-{time.time_ns()}"
         stage.mkdir(parents=True, exist_ok=True)
-        staged = df.filter(F.col(bucket_col).isin([int(b) for b in touched]))
-        man_schema = StructType([
-            StructField("bucket", IntegerType()),
-            StructField("path", StringType()),
-            StructField("rows", LongType()),
-        ])
-        kernel = _bucket_writer_kernel(str(stage), bucket_col, transform)
-        manifest_rows = staged.mapInArrow(kernel, man_schema).collect()
-        listed: dict[int, list[str]] = {}
-        for r in manifest_rows:
-            listed.setdefault(int(r.bucket), []).append(r.path)
+        kernel = _bucket_writer_kernel(str(stage), bucket_col, transform, keys)
+        listed: dict[int, list] = {}
+        for r in staged.mapInArrow(kernel, _WRITER_MANIFEST).collect():
+            listed.setdefault(int(r.bucket), []).append(r)
         for b in touched:
-            nxt = int(buckets.get(str(int(b)), -1)) + 1
-            target = self._bucket_dir(name, int(b), nxt)
+            nxt = int(buckets.get(str(b), -1)) + 1
+            target = self._bucket_dir(name, b, nxt)
             if target.exists():  # uncommitted leftover: epoch re-run
                 shutil.rmtree(target)
             target.mkdir(parents=True)
-            for path in listed.get(int(b), ()):  # empty bucket → empty dir
-                os.replace(path, target / Path(path).name)
-            buckets[str(int(b))] = nxt
+            link = {"v": nxt, "rows": 0, "deletes": 0}
+            for r in listed.get(b, ()):
+                dest = target / DELETES_DIR if r.deletes else target
+                dest.mkdir(exist_ok=True)
+                os.replace(r.path, dest / Path(r.path).name)
+                link["deletes" if r.deletes else "rows"] += int(r.rows)
+            chains[str(b)] = [link] if b in bases else [*chains[str(b)], link]
+            buckets[str(b)] = nxt
         shutil.rmtree(stage, ignore_errors=True)
-        return {"buckets": buckets}
-
-    def _live_bucket_paths(self, name: str, only: list[int] | None = None) -> list[str]:
-        want = None if only is None else {int(b) for b in only}
-        paths = []
-        for b, ver in self.bucket_versions(name).items():
-            if want is not None and int(b) not in want:
-                continue
-            d = self._bucket_dir(name, int(b), int(ver))
-            if any(d.glob("*.parquet")):
-                paths.append(str(d))
-        return paths
+        return entry
 
     def read_buckets(
         self, spark: SparkSession, name: str, only: list[int] | None = None
     ) -> DataFrame:
         """Read a bucketed table — all buckets, or just ``only`` (an epoch
-        reads exactly the buckets it crawls: O(touched), not O(table))."""
-        paths = self._live_bucket_paths(name, only)
-        if not paths:
+        reads exactly the buckets it crawls: O(touched), not O(table)).
+
+        Each bucket reads as its chain merged: the rows of every link, minus
+        the rows a delete key of a *later* link of the same bucket matches
+        (Iceberg's sequence-number rule, so a key deleted at version k and
+        re-added at k+1 is live). Chains without delete keys are a plain
+        parquet read."""
+        dirs = self._chain_dirs(name, only)
+        data = [str(d) for d in dirs if any(d.glob("*.parquet"))]
+        if not data:
             schema = StructType.fromJson(json.loads(self._schema_path(name).read_text()))
             return spark.createDataFrame([], schema)
-        return spark.read.parquet(*paths)
+        rows = spark.read.parquet(*data)
+        dels = [str(d / DELETES_DIR) for d in dirs if (d / DELETES_DIR).is_dir()]
+        if not dels:
+            return rows
+        keys = spark.read.parquet(*dels)
+
+        def link(group: int):
+            return F.regexp_extract(
+                F.col("_metadata.file_path"), _LINK_RE, group).cast("int")
+
+        live = rows.select("*", link(1).alias("_b"), link(2).alias("_v"))
+        kill = keys.select(*[F.col(k).alias(f"_k_{k}") for k in keys.columns],
+                           link(1).alias("_kb"), link(2).alias("_kv"))
+        cond = [F.col(k) == F.col(f"_k_{k}") for k in keys.columns]
+        cond += [F.col("_b") == F.col("_kb"), F.col("_v") < F.col("_kv")]
+        return live.join(kill, cond, "left_anti").select(*rows.columns)
 
     def table_bytes(self, name: str) -> int:
-        """Total bytes of the table's *live* snapshot files (tests use the
-        delta across an epoch to assert write amplification)."""
+        """Total bytes of the table's *live* files — every link of every
+        bucket chain, delete keys included (tests use the delta across an
+        epoch to assert write amplification)."""
         v = self.read_manifest()["tables"].get(name)
-        if isinstance(v, dict):
-            dirs = [self._bucket_dir(name, int(b), int(ver))
-                    for b, ver in v["buckets"].items()]
-        elif v is None:
+        if v is None:
             return 0
-        else:
-            dirs = [self._table_dir(name, int(v))]
+        dirs = (self._chain_dirs(name) if isinstance(v, dict)
+                else [self._table_dir(name, int(v))])
         return sum(f.stat().st_size for d in dirs if d.exists()
                    for f in d.rglob("*") if f.is_file())
 
@@ -354,24 +479,17 @@ class SnapshotStore:
         result as best-effort. The engine has no caller; the method stays
         because the benchmark's tracer (``perfbench/tracing.py``) wraps it by
         name on every store it traces."""
-        want = None if only is None else {int(b) for b in only}
-        out: list[int] = []
-        for b_str, ver in self.bucket_versions(name).items():
-            b = int(b_str)
-            if want is not None and b not in want:
-                continue
-            d = self._bucket_dir(name, b, int(ver))
-            if d.exists() and (parquet_null_counts(d, [col])[col] or 0) > 0:
-                out.append(b)
-        return sorted(out)
+        return sorted({
+            int(d.parent.name[1:]) for d in self._chain_dirs(name, only)
+            if d.exists() and (parquet_null_counts(d, [col])[col] or 0) > 0})
 
     def has_live_buckets(self, name: str, only: list[int] | None = None) -> bool:
-        """True if any of the ``only`` buckets (or any bucket) of a bucketed
-        table currently holds data files. Driver-side manifest + dirlist
+        """True if any link of the ``only`` buckets' chains (or of any
+        bucket's) holds data files. Driver-side manifest + dirlist
         check — lets the epoch loop skip whole Spark plans (selection on an
         all-settled frontier, seen-set anti-joins on never-crawled hosts)
         without launching a job. False for missing or non-bucketed tables."""
-        return bool(self._live_bucket_paths(name, only))
+        return any(any(d.glob("*.parquet")) for d in self._chain_dirs(name, only))
 
     # -- append-only tables (per-epoch logs) --------------------------------
 
@@ -389,18 +507,21 @@ class SnapshotStore:
         return table_root.exists() and any(table_root.glob("a*"))
 
     def vacuum(self, keep_last: int = 2) -> None:
-        """Drop snapshot directories older than the last ``keep_last`` per
-        table, and every ``stage-*`` directory a crashed bucket write left
-        behind. Run it between epochs, never while a write is in flight: an
-        in-flight write's stage directory looks the same as a crashed one."""
-        def _sweep(dir_: Path, current: int) -> None:
+        """Drop the version directories no live chain holds that are older
+        than the last ``keep_last`` versions of their table or bucket, and
+        every ``stage-*`` directory a crashed bucket write left behind. Every
+        link of a live bucket chain stays, however old: a base under its
+        deltas is live data. Run it between epochs, never while a write is
+        in flight: an in-flight write's stage directory looks the same as a
+        crashed one."""
+        def _sweep(dir_: Path, current: int, live: set[int]) -> None:
             for child in dir_.iterdir():
                 if child.name.startswith("v"):
                     try:
                         v = int(child.name[1:])
                     except ValueError:
                         continue
-                    if v <= current - keep_last:
+                    if v not in live and v <= current - keep_last:
                         shutil.rmtree(child, ignore_errors=True)
 
         manifest = self.read_manifest()
@@ -409,12 +530,13 @@ class SnapshotStore:
             if not table_root.exists():
                 continue
             if isinstance(current, dict):
-                for b, ver in current["buckets"].items():
+                for b, chain in current["chains"].items():
                     bdir = table_root / f"b{int(b):05d}"
                     if bdir.exists():
-                        _sweep(bdir, int(ver))
+                        _sweep(bdir, int(current["buckets"][b]),
+                               {int(link["v"]) for link in chain})
             else:
-                _sweep(table_root, int(current))
+                _sweep(table_root, int(current), {int(current)})
         for stage in self.root.glob("*/stage-*"):
             shutil.rmtree(stage, ignore_errors=True)
 
@@ -422,12 +544,37 @@ class SnapshotStore:
         shutil.rmtree(self.root, ignore_errors=True)
 
 
-def _bucket_writer_kernel(stage_dir: str, bucket_col: str, transform):
+#: what each writer task returns: one row per file it wrote
+_WRITER_MANIFEST = StructType([
+    StructField("bucket", IntegerType()),
+    StructField("path", StringType()),
+    StructField("rows", LongType()),
+    StructField("deletes", BooleanType()),
+])
+
+
+def _compacts(chain: list[dict] | None) -> bool:
+    """Whether the next task-side write to a bucket with this chain writes a
+    base: the bucket is new, its base has no row count (a copy-on-write
+    version), or its deltas are due (see ``COMPACT_RATIO``)."""
+    if not chain or "rows" not in chain[0]:
+        return True
+    deltas = chain[1:]
+    pending = sum(link["rows"] + link["deletes"] for link in deltas)
+    return (len(deltas) >= MAX_DELTAS
+            or pending >= COMPACT_RATIO * chain[0]["rows"])
+
+
+def _bucket_writer_kernel(stage_dir: str, bucket_col: str, transform,
+                          keys: list[str]):
     """``mapInArrow`` kernel for :meth:`SnapshotStore.replace_buckets_task_write`.
 
-    Keeps one open ``ParquetWriter`` per bucket seen by the task (bounded by
-    the table's bucket modulus), splits each Arrow batch by the bucket
-    column, and yields (bucket, path, rows) manifest rows on completion.
+    Keeps one open ``ParquetWriter`` per (bucket, kind) seen by the task
+    (bounded by twice the table's bucket modulus), splits each Arrow batch
+    by the ``_delete`` flag and then by the bucket column, and yields
+    (bucket, path, rows, deletes) manifest rows on completion. Rows to add
+    keep every column but the flag and go to ``_b=<bucket>/``; delete-key
+    rows keep only the ``keys`` columns and go to ``_b=<bucket>/_deletes/``.
     File names carry the partition id plus a fresh uuid, so retried/
     speculated attempts can never collide.
 
@@ -438,8 +585,10 @@ def _bucket_writer_kernel(stage_dir: str, bucket_col: str, transform):
     post-transform 6 KB embedding rows once per batch — on a 16 GB epoch
     that is 16 GB of pure memcpy on the exact resource (DRAM bandwidth)
     that contends across executor cores, i.e. it taxed the N→4N scaling of
-    the engine's single heaviest leg. The transform now runs per slice;
-    its output feeds the parquet writer directly.
+    the engine's single heaviest leg. The transform now runs per slice of
+    rows to add; its output feeds the parquet writer directly. The writer's
+    input is a union whose partitions never mix kinds, so the flag split is
+    a pass-through in practice.
     """
 
     def kernel(batches):
@@ -452,62 +601,74 @@ def _bucket_writer_kernel(stage_dir: str, bucket_col: str, transform):
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        writers: dict[int, tuple] = {}
-        counts: dict[int, int] = {}
+        writers: dict[tuple[int, bool], tuple] = {}
+        counts: dict[tuple[int, bool], int] = {}
         ctx = TaskContext.get()
         tid = ctx.partitionId() if ctx is not None else 0
         tag = uuid.uuid4().hex[:12]
-        for b in batches:
-            if b.num_rows == 0:
+
+        def write(part, v: int, is_del: bool) -> None:
+            part = pa.Table.from_batches([part])
+            w = writers.get((v, is_del))
+            if w is None:
+                d = os.path.join(stage_dir, f"_b={v}",
+                                 *([DELETES_DIR] if is_del else []))
+                os.makedirs(d, exist_ok=True)
+                path = os.path.join(d, f"part-{tid:05d}-{tag}.parquet")
+                # Dictionary-encode and keep footer statistics only for
+                # non-binary columns: a high-entropy 6 KB packed-float32
+                # embedding value never repeats, so dictionary encoding
+                # just hashes every value until the 1 MB dict page
+                # overflows and falls back to PLAIN, and min/max stats
+                # memcmp 6 KB values for a footer nobody reads (the
+                # engine's null-count probes read the JVM-written extract
+                # scratch, not this sink). Measured: -16% encode wall on
+                # the embedding-dominated documents schema.
+                small = [f.name for f in part.schema
+                         if not pa.types.is_binary(f.type)
+                         and not pa.types.is_large_binary(f.type)]
+                # Uncompressed: the mass is packed float32 embeddings,
+                # which no codec shrinks — a codec only adds a full pass
+                # over the table's bytes (A/B-measured, NOTES.md
+                # round-4 delta).
+                w = (pq.ParquetWriter(path, part.schema,
+                                      compression="none",
+                                      use_dictionary=small,
+                                      write_statistics=small), path)
+                writers[(v, is_del)] = w
+                counts[(v, is_del)] = 0
+            w[0].write_table(part)
+            counts[(v, is_del)] += part.num_rows
+
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            col = b.column(bucket_col)
-            if pc.count_distinct(col).as_py() > 1:
-                b = b.take(pc.sort_indices(col))
+            flag = batch.column(_DELETE_FLAG)
+            kinds = pc.unique(flag).to_pylist()
+            for is_del in kinds:
+                b = batch if len(kinds) == 1 else batch.filter(
+                    pc.equal(flag, is_del))
                 col = b.column(bucket_col)
-            vals = col.to_numpy()
-            edges = [0, *(np.flatnonzero(np.diff(vals)) + 1).tolist(),
-                     len(vals)]
-            for i in range(len(edges) - 1):
-                v = int(vals[edges[i]])
-                part = b.slice(edges[i], edges[i + 1] - edges[i])
-                if transform is not None:
-                    part = transform(part)
-                part = pa.Table.from_batches([part])
-                w = writers.get(v)
-                if w is None:
-                    d = os.path.join(stage_dir, f"_b={v}")
-                    os.makedirs(d, exist_ok=True)
-                    path = os.path.join(d, f"part-{tid:05d}-{tag}.parquet")
-                    # Dictionary-encode and keep footer statistics only for
-                    # non-binary columns: a high-entropy 6 KB packed-float32
-                    # embedding value never repeats, so dictionary encoding
-                    # just hashes every value until the 1 MB dict page
-                    # overflows and falls back to PLAIN, and min/max stats
-                    # memcmp 6 KB values for a footer nobody reads (the
-                    # engine's null-count probes read the JVM-written extract
-                    # scratch, not this sink). Measured: -16% encode wall on
-                    # the embedding-dominated documents schema.
-                    small = [f.name for f in part.schema
-                             if not pa.types.is_binary(f.type)
-                             and not pa.types.is_large_binary(f.type)]
-                    # Uncompressed: the mass is packed float32 embeddings,
-                    # which no codec shrinks — a codec only adds a full pass
-                    # over the table's bytes (A/B-measured, NOTES.md
-                    # round-4 delta).
-                    w = (pq.ParquetWriter(path, part.schema,
-                                          compression="none",
-                                          use_dictionary=small,
-                                          write_statistics=small), path)
-                    writers[v] = w
-                    counts[v] = 0
-                w[0].write_table(part)
-                counts[v] += part.num_rows
+                if pc.count_distinct(col).as_py() > 1:
+                    b = b.take(pc.sort_indices(col))
+                    col = b.column(bucket_col)
+                b = b.select(keys if is_del else [
+                    c for c in b.schema.names if c != _DELETE_FLAG])
+                vals = col.to_numpy()
+                edges = [0, *(np.flatnonzero(np.diff(vals)) + 1).tolist(),
+                         len(vals)]
+                for i in range(len(edges) - 1):
+                    part = b.slice(edges[i], edges[i + 1] - edges[i])
+                    if transform is not None and not is_del:
+                        part = transform(part)
+                    write(part, int(vals[edges[i]]), is_del)
         man = pa.schema([("bucket", pa.int32()), ("path", pa.string()),
-                         ("rows", pa.int64())])
-        for v, (w, path) in writers.items():
+                         ("rows", pa.int64()), ("deletes", pa.bool_())])
+        for (v, is_del), (w, path) in writers.items():
             w.close()
             yield pa.RecordBatch.from_pylist(
-                [{"bucket": v, "path": path, "rows": counts[v]}], schema=man)
+                [{"bucket": v, "path": path, "rows": counts[(v, is_del)],
+                  "deletes": is_del}], schema=man)
 
     return kernel
 

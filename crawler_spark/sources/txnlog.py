@@ -15,8 +15,12 @@ commit protocol of log-structured table formats (Delta Lake's
   replay cost stays O(recent commits), not O(history) — same role as
   Delta's ``_last_checkpoint``.
 
-Data files (snapshot dirs, bucket dirs, appended parts) are inherited from
-``SnapshotStore`` unchanged — table formats differ in metadata, not bytes.
+Data files (snapshot dirs, bucket chain links with their delete keys,
+appended parts) are inherited from ``SnapshotStore`` unchanged — table
+formats differ in metadata, not bytes. A bucketed table's action carries
+its whole manifest entry, head versions plus per-bucket chains, so the fold
+yields the chains a read merges (as Iceberg's manifests list a snapshot's
+data and delete files).
 The engine runs against either store; ``tests/test_store_contract.py`` and
 the e2e smoke in ``tests/test_crawl_e2e.py`` prove the seam drop-in.
 """

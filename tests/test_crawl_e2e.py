@@ -8,12 +8,16 @@ Reference analogues (SURVEY.md §5): ``testing/test_dynamic_updates.py``
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark.crawl import CrawlConfig, CrawlEngine
 from crawler_spark.sources.synth import chunk_url, corpus_pages_df, seeds_df, site_host
 from crawler_spark.sources.tables import SnapshotStore
+from crawler_spark.sources.txnlog import TxnLogStore
 from tests.py_oracle import OracleState, crawl_fixed_point, pages_dict
 
 N_SITES = 3
@@ -839,6 +843,234 @@ def test_epoch_counters_need_no_actions(spark, tmp_path, small_corpus, monkeypat
     assert total["fetch_failed"] == sum(
         r["status_code"] == 404 for r in metrics) == 3
     assert total["ids_extracted"] == sum(r["num_ids_extracted"] for r in metrics)
+
+
+# -- merge-on-read documents: churn, compaction, spread churn, crash resume --
+
+USER = "test:user001"
+
+
+class SimulatedCrash(RuntimeError):
+    pass
+
+
+def _churned(pages, tag):
+    """``pages`` with every ``@id`` of site 0's chunk files replaced."""
+    body = F.decode(F.col("html"), "utf-8")
+    return pages.withColumn("html", F.when(
+        F.col("url").startswith(f"https://{site_host(0)}/chunk"),
+        F.encode(F.regexp_replace(body, "#schema-", f"#schema{tag}-"), "utf-8"),
+    ).otherwise(F.col("html")))
+
+
+def _recrawl_site0(spark, store, pages, cfg):
+    """Re-queue every chunk file of site 0 and crawl to fixed point."""
+    engine = CrawlEngine(spark, store, pages, cfg)
+    epoch = store.read_manifest()["epoch"] + 1
+    engine.add_manual_files(spark.createDataFrame(
+        [{"site_url": site_host(0), "user_id": USER,
+          "file_url": chunk_url(0, c), "schema_map": "manual"}
+         for c in range(CHUNKS)]), epoch)
+    engine.run()
+    return engine
+
+
+def _doc_bucket(spark, host, num_partitions):
+    return str(spark.createDataFrame([(host,)], "h string").select(
+        F.pmod(F.hash("h"), F.lit(num_partitions)).alias("b")).first()["b"])
+
+
+def frontier_state(engine):
+    return sorted(
+        (r["file_url"], r["job_type"], r["status"], r["is_active"],
+         r["number_of_items"]) for r in engine.frontier().collect())
+
+
+def assert_matches_oracle(engine, pages):
+    """url_seen, documents (keys + essential text), the live files' frontier
+    rows and refcounts equal the plain-Python oracle's crawl of ``pages``."""
+    oracle = crawl_fixed_point(
+        pages_dict(pages.collect()),
+        [(site_host(i), USER) for i in range(N_SITES)])
+    seen, docs = engine_state(engine)
+    assert seen == oracle.url_seen
+    assert {k: d["essential_text"] for k, d in docs.items()} == {
+        k: d["essential_text"] for k, d in oracle.documents.items()}
+    live_files = {r["file_url"]: r["number_of_items"] for r in engine.frontier()
+                  .filter((F.col("job_type") == "process_file")
+                          & F.col("is_active") & (F.col("status") == "done"))
+                  .collect()}
+    assert live_files == {k[0]: v["n_items"] for k, v in oracle.files.items()
+                          if v["active"]}
+    assert_refcounts_consistent(engine)
+
+
+STORES = [pytest.param(SnapshotStore, id="parquet"),
+          pytest.param(TxnLogStore, id="txnlog")]
+
+
+def _crawl(spark, store, pages, seeds):
+    engine = CrawlEngine(spark, store, pages,
+                         CrawlConfig(num_partitions=8, salt_buckets=4))
+    engine.bootstrap(seeds)
+    engine.run()
+    return engine
+
+
+@pytest.mark.parametrize("store_cls", STORES)
+def test_churn_forces_compaction_and_matches_oracle(
+        spark, tmp_path, small_corpus, store_cls):
+    """Re-crawling site 0 with every id replaced puts a delta (its new docs
+    and the old ones' delete keys) on its documents bucket; doing it again
+    finds the chain due and compacts it back to one base. Frontier,
+    url_seen, documents and refcounts match the oracle throughout."""
+    pages, seeds = small_corpus
+    engine = _crawl(spark, store_cls(tmp_path / "state"), pages, seeds)
+    store, cfg = engine.store, engine.cfg
+    b = _doc_bucket(spark, site_host(0), cfg.num_partitions)
+    assert len(store.bucket_chains("documents")[b]) == 1
+
+    pages_a = _churned(pages, "A")
+    assert_matches_oracle(_recrawl_site0(spark, store, pages_a, cfg), pages_a)
+    chain = store.bucket_chains("documents")[b]
+    assert len(chain) == 2 and chain[1]["deletes"] == CHUNKS * ITEMS
+
+    pages_b = _churned(pages, "B")
+    assert_matches_oracle(_recrawl_site0(spark, store, pages_b, cfg), pages_b)
+    compacted = store.bucket_chains("documents")[b]
+    assert len(compacted) == 1 and compacted[0]["v"] > chain[-1]["v"]
+    assert compacted[0]["deletes"] == 0
+
+
+@pytest.mark.parametrize("store_cls", STORES)
+def test_crash_around_documents_write_resumes(
+        spark, tmp_path, small_corpus, store_cls):
+    """A crash between the documents write and the epoch's commit — after a
+    delta write, inside a compaction's read-back, and after a compacted base
+    was written — resumes, with a fresh engine and store handle, to the
+    uninterrupted run's state and the oracle's."""
+    pages, seeds = small_corpus
+    pages_a, pages_b = _churned(pages, "A"), _churned(pages, "B")
+    ref = _crawl(spark, store_cls(tmp_path / "ref"), pages, seeds)
+    cfg = ref.cfg
+    # the crashing run starts from a hard-linked copy of the cold crawl:
+    # a store never modifies a file in place
+    root = tmp_path / "state"
+    shutil.copytree(tmp_path / "ref", root, copy_function=os.link)
+    _recrawl_site0(spark, ref.store, pages_a, cfg)
+    ref = _recrawl_site0(spark, ref.store, pages_b, cfg)
+
+    def crash_after_write():
+        store = store_cls(root)
+        real = store.replace_buckets_task_write
+
+        def write_then_crash(*args, **kwargs):
+            real(*args, **kwargs)
+            raise SimulatedCrash("after the documents write")
+        store.replace_buckets_task_write = write_then_crash
+        return store
+
+    def crash_in_compaction():
+        store = store_cls(root)
+        real = store.read_buckets
+
+        def read(spark_, name, *args, **kwargs):
+            if name == "documents":  # only a compaction reads documents
+                raise SimulatedCrash("inside the compaction")
+            return real(spark_, name, *args, **kwargs)
+        store.read_buckets = read
+        return store
+
+    with pytest.raises(SimulatedCrash):  # recrawl 1: a delta
+        _recrawl_site0(spark, crash_after_write(), pages_a, cfg)
+    CrawlEngine(spark, store_cls(root), pages_a, cfg).run()
+
+    with pytest.raises(SimulatedCrash):  # recrawl 2: a compaction
+        _recrawl_site0(spark, crash_in_compaction(), pages_b, cfg)
+    with pytest.raises(SimulatedCrash):
+        CrawlEngine(spark, crash_after_write(), pages_b, cfg).run()
+    got = CrawlEngine(spark, store_cls(root), pages_b, cfg)
+    got.run()
+
+    b = _doc_bucket(spark, site_host(0), cfg.num_partitions)
+    assert len(got.store.bucket_chains("documents")[b]) == 1
+    assert engine_state(got) == engine_state(ref)
+    assert frontier_state(got) == frontier_state(ref)
+    assert_matches_oracle(got, pages_b)
+
+
+#: Spark jobs of the working re-crawl epoch below, as measured. The touched
+#: doc buckets come from the diff scratch driver-side, and a documents delta
+#: reads no old docs, so neither costs a job.
+WORKING_EPOCH_JOBS = 59
+
+
+def test_working_epoch_job_budget(spark, tmp_path, small_corpus):
+    """One working re-crawl epoch (ids added and removed; url_seen, blooms,
+    refcounts and documents written) launches at most ``WORKING_EPOCH_JOBS``
+    Spark jobs, counted with ``statusTracker``."""
+    pages, seeds = small_corpus
+    engine = _crawl(spark, SnapshotStore(tmp_path / "state"), pages, seeds)
+    churned = CrawlEngine(spark, engine.store, _churned(pages, "A"), engine.cfg)
+    epoch = engine.store.read_manifest()["epoch"] + 1
+    churned.add_manual_files(spark.createDataFrame(
+        [{"site_url": site_host(0), "user_id": USER,
+          "file_url": chunk_url(0, c), "schema_map": "manual"}
+         for c in range(CHUNKS)]), epoch)
+    churned.discover(epoch + 1)
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    rep = churned.run_epoch(epoch + 1)
+    jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+    assert rep.ids_added == rep.ids_removed == CHUNKS * ITEMS
+    assert jobs <= WORKING_EPOCH_JOBS, f"working epoch ran {jobs} Spark jobs"
+
+
+def test_spread_churn_writes_only_new_docs(spark, tmp_path):
+    """One changed file on every site, so every documents bucket churns:
+    the documents bytes an epoch writes (new docs plus delete keys) stay
+    within twice the new docs' own bytes. Rewriting the touched buckets
+    would move every unchanged doc with them (here 4x the new docs)."""
+    n_sites, chunks = 16, 4
+    pages = corpus_pages_df(spark, n_sites, chunks, items_per_chunk=ITEMS)
+    cfg = CrawlConfig(num_partitions=8, salt_buckets=4)
+    engine = CrawlEngine(spark, SnapshotStore(tmp_path / "state"), pages, cfg)
+    engine.bootstrap(seeds_df(spark, n_sites))
+    engine.run()
+
+    changed = [chunk_url(s, 0) for s in range(n_sites)]
+    body = F.decode(F.col("html"), "utf-8")
+    pages_b = pages.withColumn("html", F.when(
+        F.col("url").isin(changed),
+        F.encode(F.regexp_replace(body, "#schema-", "#schemaX-"), "utf-8"),
+    ).otherwise(F.col("html")))
+    docs_root = tmp_path / "state" / "documents"
+    before = {str(f) for f in docs_root.rglob("*.parquet")}
+    vers_before = engine.store.bucket_versions("documents")
+
+    engine_b = CrawlEngine(spark, engine.store, pages_b, cfg)
+    epoch = engine.store.read_manifest()["epoch"] + 1
+    engine_b.add_manual_files(spark.createDataFrame(
+        [{"site_url": site_host(s), "user_id": USER, "file_url": url,
+          "schema_map": "manual"} for s, url in enumerate(changed)]), epoch)
+    engine_b.run()
+
+    vers_after = engine.store.bucket_versions("documents")
+    assert {b for b, v in vers_after.items() if vers_before[b] != v} == set(
+        vers_before), "the churn must reach every documents bucket"
+    written = sum(f.stat().st_size for f in docs_root.rglob("*.parquet")
+                  if str(f) not in before)
+    new_docs = engine_b.documents().filter(F.col("url").contains("#schemaX-"))
+    new_bytes = new_docs.select(F.sum(
+        F.octet_length("id") + F.octet_length("url") + F.octet_length("site")
+        + F.octet_length("type") + F.octet_length("content")
+        + F.octet_length("essential_text") + F.octet_length("embedding")
+    )).first()[0]
+    assert new_docs.count() > 0
+    assert written <= 2 * new_bytes, (
+        f"documents wrote {written}B for {new_bytes}B of new docs")
+    assert_refcounts_consistent(engine_b)
 
 
 def test_politeness_budget_and_order(spark, tmp_path):

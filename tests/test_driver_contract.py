@@ -133,6 +133,17 @@ def test_pair_queries_have_no_cartesian_plan(name, spark, sf_dir):
         assert bad not in plan, f"{name}: {bad} in physical plan — all-pairs join"
 
 
+@pytest.mark.parametrize("name, hints", [
+    ("shipping_priority", 0), ("region_revenue", 2), ("lookup_join", 0)])
+def test_broadcast_hints_only_on_fixed_size_dims(name, hints, spark, sf_dir):
+    """Plans stay safe at 100x scale: only nation and region (a fixed size
+    at any scale factor) carry a broadcast hint. customer and part grow
+    with the scale factor, so AQE picks their join strategy at runtime."""
+    fn, _ = CATALOG[name]
+    plan = fn(spark, sf_dir)._jdf.queryExecution().analyzed().toString()
+    assert plan.count("strategy=broadcast") == hints, plan
+
+
 def test_simhash_is_scan_side(spark, sf_dir):
     """The SimHash signature must be a pure scan-side fold: zero Exchange.
 

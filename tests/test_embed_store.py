@@ -13,7 +13,7 @@ from crawler_spark.functions.embed import (
     embed_with_provider,
     stub_embedding_batch,
 )
-from crawler_spark.sources.tables import SnapshotStore
+from crawler_spark.sources.tables import SnapshotStore, parquet_rows
 
 
 def test_batch_embedding_deterministic_and_normalized():
@@ -227,10 +227,12 @@ def test_store_materialize_pins_data(spark, tmp_path):
 
 
 def test_replace_buckets_task_write_matches_jvm_writer(spark, tmp_path):
-    """The task-side pyarrow writer (documents-sink hot path) must be a
-    drop-in for `replace_buckets`: identical committed table content,
-    identical bucket-version bookkeeping, empty touched buckets get empty
-    versions, and untouched buckets keep their bytes."""
+    """The task-side pyarrow writer (documents-sink hot path): a bucket's
+    first write is a base identical to what `replace_buckets` writes (same
+    committed content, same bucket-version bookkeeping). Later writes are
+    deltas: new rows plus delete keys in the next version, no old row read
+    or moved, an emptied bucket reads empty, and untouched buckets keep
+    their version and bytes."""
     from pyspark.sql import functions as F
 
     df = (spark.range(2000)
@@ -244,19 +246,41 @@ def test_replace_buckets_task_write_matches_jvm_writer(spark, tmp_path):
     vb = b.replace_buckets_task_write(df, "docs", [0, 1, 2, 3], bucket_col="bucket")
     a.commit(0, {"docs": va}); b.commit(0, {"docs": vb})
     assert vb["buckets"] == va["buckets"]
+    assert vb["chains"] == {str(k): [{"v": 0, "rows": 500, "deletes": 0}]
+                            for k in range(4)}
     ra = sorted(tuple(r) for r in a.read(spark, "docs").collect())
     rb = sorted(tuple(r) for r in b.read(spark, "docs").collect())
     assert ra == rb and len(rb) == 2000
 
-    # second epoch: replace bucket 1 with fewer rows, bucket 2 with nothing;
-    # buckets 0/3 untouched keep version 0
-    upd = df.filter((F.col("bucket") == 1) & (F.col("id") < 100))
-    vb2 = b.replace_buckets_task_write(upd, "docs", [1, 2], bucket_col="bucket")
+    def version_files(bucket, version):
+        d = tmp_path / "task" / "docs" / f"b{bucket:05d}" / f"v{version}"
+        return {str(f): f.stat().st_size for f in d.rglob("*") if f.is_file()}
+
+    untouched = {k: version_files(k, 0) for k in (0, 3)}
+
+    # second epoch: bucket 1 keeps only ids < 100 and gains 5 rows, bucket 2
+    # loses every row; buckets 0/3 untouched keep version 0
+    add = (spark.range(5000, 5020)
+           .select(F.col("id"),
+                   F.pmod(F.col("id"), F.lit(4)).cast("int").alias("bucket"),
+                   F.concat(F.lit("n"), F.col("id").cast("string")).alias("t"))
+           .filter(F.col("bucket") == 1))
+    gone = df.filter(((F.col("bucket") == 1) & (F.col("id") >= 100))
+                     | (F.col("bucket") == 2)).select("bucket", "id")
+    vb2 = b.replace_buckets_task_write(add, "docs", [1, 2], bucket_col="bucket",
+                                       deletes=gone)
     b.commit(1, {"docs": vb2})
     assert vb2["buckets"] == {"0": 0, "1": 1, "2": 1, "3": 0}
+    assert vb2["chains"]["1"][1] == {"v": 1, "rows": 5, "deletes": 475}
+    assert vb2["chains"]["2"][1] == {"v": 1, "rows": 0, "deletes": 500}
+    # the delta holds only the new rows; the keys sit in _deletes/
+    delta = tmp_path / "task" / "docs" / "b00001" / "v1"
+    assert parquet_rows(delta) == 5
+    assert parquet_rows(delta / "_deletes") == 475
     rows = b.read(spark, "docs").groupBy("bucket").count().collect()
     got = {r["bucket"]: r["count"] for r in rows}
-    assert got == {0: 500, 1: 25, 3: 500}  # bucket 2 emptied
+    assert got == {0: 500, 1: 30, 3: 500}  # bucket 2 emptied
+    assert {k: version_files(k, 0) for k in (0, 3)} == untouched
 
 
 def test_fill_missing_embeddings_transform_paths():

@@ -18,6 +18,7 @@ import re
 import xml.etree.ElementTree as ET
 from urllib.parse import urljoin
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -30,8 +31,14 @@ from crawler_spark.functions.sitemap import (
     parse_schema_map_xml,
     schema_maps_from_robots,
 )
-from tests.conftest import load_reference_function
+from tests.conftest import REFERENCE, load_reference_function
 from tests.test_canonical import URL_CASES
+
+if not REFERENCE.is_dir():
+    pytest.skip(
+        f"reference implementation not found at {REFERENCE}: these parity "
+        "tests lift its pure functions from it at test time",
+        allow_module_level=True)
 
 # --------------------------------------------------------------------------
 # C1 normalize_site_url

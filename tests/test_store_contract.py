@@ -10,9 +10,10 @@ this file.
 
 Contract surface exercised (exactly what ``CrawlEngine`` calls):
   write/commit/read visibility · bucket-level replace with per-bucket
-  versioning and O(touched) reads · crash re-run overwrite · append-only
-  parts · manifest meta pinning · current-state-only manifest · footer
-  null counts · vacuum retention and stage-dir sweep.
+  versioning and O(touched) reads · merge-on-read bucket chains (delete-key
+  sequence rule, compaction) · crash re-run overwrite · append-only parts ·
+  manifest meta pinning · current-state-only manifest · footer null counts
+  · vacuum retention of live chains and stage-dir sweep.
 """
 
 from __future__ import annotations
@@ -227,11 +228,15 @@ def test_txnlog_checkpoint_bounds_replay(spark, tmp_path):
     assert [r["k"] for r in cold.read(spark, "t").collect()] == ["v11"]
 
 
+def _keys(spark, rows):
+    return spark.createDataFrame(rows, "host_hash int, k string")
+
+
 def test_task_write_replace_contract(spark, make_store):
-    """`replace_buckets_task_write` carries the same contract as
-    `replace_buckets` on every backend: invisible until commit, per-bucket
-    versioning, O(touched) replace, crash re-run overwrite of an
-    uncommitted version."""
+    """`replace_buckets_task_write` carries the store contract on every
+    backend: invisible until commit, per-bucket versioning, touched-only
+    writes, crash re-run overwrite of an uncommitted version. Adding rows
+    while deleting every old key of a bucket replaces its content."""
     store = make_store()
     df = _df(spark, [(h, f"k{h}{i}", i) for h in (0, 1, 2) for i in range(5)])
     v = store.replace_buckets_task_write(df, "t", [0, 1, 2], bucket_col="host_hash")
@@ -240,16 +245,105 @@ def test_task_write_replace_contract(spark, make_store):
     assert store.read(spark, "t").count() == 15
     assert store.bucket_versions("t") == {"0": 0, "1": 0, "2": 0}
 
-    # touched-only replace; untouched bucket keeps bytes and version
+    # touched-only write; untouched buckets keep bytes and version
     upd = _df(spark, [(1, "k1x", 99)])
-    v2 = store.replace_buckets_task_write(upd, "t", [1], bucket_col="host_hash")
+    old1 = _keys(spark, [(1, f"k1{i}") for i in range(5)])
+    v2 = store.replace_buckets_task_write(
+        upd, "t", [1], bucket_col="host_hash", deletes=old1)
     # crash before commit: re-run must overwrite the uncommitted version
-    v2 = store.replace_buckets_task_write(upd, "t", [1], bucket_col="host_hash")
+    v2 = store.replace_buckets_task_write(
+        upd, "t", [1], bucket_col="host_hash", deletes=old1)
     store.commit(1, {"t": v2})
     assert store.bucket_versions("t") == {"0": 0, "1": 1, "2": 0}
     got = sorted((r.host_hash, r.k, r.v) for r in store.read(spark, "t").collect())
     assert [r for r in got if r[0] == 1] == [(1, "k1x", 99)]
     assert len(got) == 11
+
+
+def _chain_writer(spark, store, name="t"):
+    """``write(epoch, adds, dels)``: one committed task-side write to bucket
+    0 of ``name``; ``live()``: its sorted (k, v) rows."""
+    def write(epoch, adds=(), dels=()):
+        entry = store.replace_buckets_task_write(
+            _df(spark, list(adds)), name, [0], bucket_col="host_hash",
+            deletes=_keys(spark, list(dels)))
+        store.commit(epoch, {name: entry})
+
+    def live():
+        return sorted((r.k, r.v) for r in store.read(spark, name).collect())
+    return write, live
+
+
+def test_delete_key_sequence_rule(spark, make_store):
+    """A delete key removes a row only from versions older than its own
+    (Iceberg's sequence-number rule): a key deleted at version k and re-added
+    at k+1 is live; a key added at k and deleted at k+1 is gone."""
+    store = make_store()
+    write, live = _chain_writer(spark, store)
+    write(0, [(0, f"k{i}", i) for i in range(10)])
+    write(1, dels=[(0, "k1")])
+    assert ("k1", 1) not in live()
+    write(2, [(0, "k1", 100)])
+    assert ("k1", 100) in live() and ("k1", 1) not in live()
+    write(3, [(0, "new", 7)])
+    assert ("new", 7) in live()
+    write(4, dels=[(0, "new")])
+    assert "new" not in {k for k, _ in live()}
+    assert len(live()) == 10
+    # every write was a delta: the base and four links, none compacted
+    assert [link["v"] for link in store.bucket_chains("t")["0"]] == [0, 1, 2, 3, 4]
+
+
+def test_task_write_compacts_a_due_chain(spark, make_store):
+    """The write that finds a bucket's deltas' rows plus delete keys at or
+    above its base rows compacts the chain into one base; so does the write
+    that finds ``MAX_DELTAS`` deltas. The bucket reads the same."""
+    from crawler_spark.sources.tables import MAX_DELTAS
+
+    store = make_store()
+    write, live = _chain_writer(spark, store)
+    write(0, [(0, f"k{i}", i) for i in range(4)])
+    write(1, [(0, "a", 10), (0, "b", 11)], dels=[(0, "k0")])
+    write(2, [(0, "c", 12)])
+    assert len(store.bucket_chains("t")["0"]) == 3  # pending 4 of base 4
+    before = live()
+    write(3)  # nothing to add or delete: this write compacts
+    assert store.bucket_chains("t")["0"] == [{"v": 3, "rows": 6, "deletes": 0}]
+    assert live() == before
+
+    big, bigl = _chain_writer(spark, store, "big")
+    big(0, [(0, f"k{i}", i) for i in range(100)])
+    for e in range(1, MAX_DELTAS + 1):
+        big(e, [(0, f"x{e}", e)])
+    assert len(store.bucket_chains("big")["0"]) == MAX_DELTAS + 1
+    before = bigl()
+    big(MAX_DELTAS + 1)
+    assert len(store.bucket_chains("big")["0"]) == 1
+    assert bigl() == before
+
+
+def test_vacuum_keeps_every_link_of_a_live_chain(spark, make_store):
+    """``vacuum`` keeps every link of a live bucket chain, however old (a
+    base under its deltas is live data), and ``table_bytes`` counts exactly
+    those links; once a compaction supersedes them they are swept."""
+    store = make_store()
+    write, live = _chain_writer(spark, store)
+    write(0, [(0, f"k{i}", i) for i in range(6)])
+    for e in (1, 2, 3):
+        write(e, [(0, f"d{e}", e)], dels=[(0, f"k{e - 1}")])
+    before = live()
+    chain_dirs = [store.root / "t" / "b00000" / f"v{link['v']}"
+                  for link in store.bucket_chains("t")["0"]]
+    assert len(chain_dirs) == 4
+    store.vacuum(keep_last=1)
+    assert live() == before
+    assert store.table_bytes("t") == sum(
+        f.stat().st_size for d in chain_dirs for f in d.rglob("*") if f.is_file())
+
+    write(4)  # pending 6 of base 6: compacts into v4
+    store.vacuum(keep_last=1)
+    assert live() == before
+    assert sorted(p.name for p in (store.root / "t" / "b00000").iterdir()) == ["v4"]
 
 
 def test_drop_removes_table_until_rewritten(spark, make_store):
