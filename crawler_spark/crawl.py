@@ -62,7 +62,7 @@ from crawler_spark.functions.sitemap import (
 from crawler_spark.operators import frontier as fr
 from crawler_spark.operators import politeness, seen
 from crawler_spark.schema import DOCUMENTS, FRONTIER, REFCOUNTS, URL_SEEN
-from crawler_spark.sources.tables import SnapshotStore
+from crawler_spark.sources.tables import SnapshotStore, empty_frame
 
 
 @dataclass
@@ -121,7 +121,8 @@ class CrawlEngine:
         # reads/writes (data loss) or probe blobs that miss seen ids
         # (duplicate re-adds): refuse it. So is a store whose bucketed
         # tables predate per-bucket version chains (``bucket_layout``):
-        # their manifest entries have no chains to read.
+        # their manifest entries have no chains to read; and one whose
+        # tables predate pinned schemas (``schemas``): reads never infer.
         if store.exists("frontier"):
             for key, want in self._layout().items():
                 got = store.get_meta(key)
@@ -134,7 +135,8 @@ class CrawlEngine:
         """Layout facts ``bootstrap`` records and ``__init__`` checks."""
         return {"num_partitions": self.cfg.num_partitions,
                 "seen_filter_kind": "blooms",
-                "bucket_layout": "chains"}
+                "bucket_layout": "chains",
+                "schemas": "pinned"}
 
     # ------------------------------------------------------------------
     # bootstrap / state access
@@ -144,14 +146,15 @@ class CrawlEngine:
         """Initialize state tables; idempotent (no-op if already committed)."""
         if self.store.exists("frontier"):
             return
-        empty_frontier = self.spark.createDataFrame([], FRONTIER)
-        empty_seen = self.spark.createDataFrame([], URL_SEEN)
         versions = {
             "seeds": self.store.write(seeds, "seeds"),
             # frontier/url_seen are bucket-versioned on host_hash: epochs
-            # replace only the buckets they touch (see SnapshotStore)
-            "frontier": self.store.replace_buckets(empty_frontier, "frontier", touched=[]),
-            "url_seen": self.store.replace_buckets(empty_seen, "url_seen", touched=[]),
+            # replace only the buckets they touch (see SnapshotStore). The
+            # empty writes pin their schemas.
+            "frontier": self.store.replace_buckets(
+                empty_frame(self.spark, FRONTIER), "frontier", touched=[]),
+            "url_seen": self.store.replace_buckets(
+                empty_frame(self.spark, URL_SEEN), "url_seen", touched=[]),
         }
         self.store.set_meta(**self._layout())
         self.store.commit(epoch=-1, table_versions=versions)
@@ -165,19 +168,15 @@ class CrawlEngine:
     # O(all-ever-crawled) — at steady state on a 10^10-URL frontier the
     # done rows are the overwhelming mass and are never scanned. Rows
     # migrate between families when their bucket is rewritten (every write
-    # recomputes ``fbucket`` and touches both families of each host).
+    # recomputes the family and touches both families of each host). The
+    # family bucket only routes rows: it is not stored, so frontier reads
+    # return exactly the pinned ``FRONTIER`` columns.
 
-    @staticmethod
-    def _drop_fbucket(df: DataFrame) -> DataFrame:
-        return df.drop("fbucket") if "fbucket" in df.columns else df
-
-    def _frontier_fbucket(self, df: DataFrame) -> DataFrame:
+    def _frontier_bucket(self):
         settled = (~F.col("is_active")) | (F.col("status") != F.lit("pending"))
-        return df.withColumn(
-            "fbucket",
-            (F.col("host_hash")
-             + F.when(settled, F.lit(self.cfg.num_partitions)).otherwise(F.lit(0))
-             ).cast("int"))
+        return (F.col("host_hash")
+                + F.when(settled, F.lit(self.cfg.num_partitions)).otherwise(F.lit(0))
+                ).cast("int")
 
     def _frontier_touched(self, hosts) -> list[int]:
         hs = {int(h) for h in hosts}
@@ -187,30 +186,30 @@ class CrawlEngine:
         """Replace both status families of the ``hosts`` buckets.
         ``updated`` must hold those hosts' complete new rows."""
         return self.store.replace_buckets(
-            self._frontier_fbucket(updated), "frontier",
-            self._frontier_touched(hosts), "fbucket")
+            updated, "frontier", self._frontier_touched(hosts),
+            self._frontier_bucket())
 
     def frontier(self) -> DataFrame:
-        return self._drop_fbucket(self.store.read(self.spark, "frontier"))
+        return self.store.read(self.spark, "frontier")
 
     def pending_frontier(self) -> DataFrame:
         """The pending-family view — reads only buckets [0, P), which hold
-        exactly the active pending rows (see ``_frontier_fbucket``)."""
-        return self._drop_fbucket(self.store.read_buckets(
-            self.spark, "frontier", only=list(range(self.cfg.num_partitions))))
+        exactly the active pending rows (see ``_frontier_bucket``)."""
+        return self.store.read_buckets(
+            self.spark, "frontier", only=list(range(self.cfg.num_partitions)))
 
     def _frontier_for_hosts(self, hosts) -> DataFrame:
         """Both families of the ``hosts`` buckets — the exact row set a
         bucket-replacing write must re-emit. O(touched), not O(frontier)."""
-        return self._drop_fbucket(self.store.read_buckets(
-            self.spark, "frontier", only=self._frontier_touched(hosts)))
+        return self.store.read_buckets(
+            self.spark, "frontier", only=self._frontier_touched(hosts))
 
     def url_seen(self) -> DataFrame:
         return self.store.read(self.spark, "url_seen")
 
     def documents(self) -> DataFrame:
         if not self.store.exists("documents"):
-            return self.spark.createDataFrame([], DOCUMENTS)
+            return empty_frame(self.spark, DOCUMENTS)
         return self.store.read(self.spark, "documents")
 
     def _write_documents(self, new_docs: DataFrame, orphans: DataFrame,
@@ -232,7 +231,7 @@ class CrawlEngine:
         table yet means no seen rows yet: an epoch writes url_seen, blooms
         and refcounts for the same diff buckets in the same commit."""
         if not self.store.exists("refcounts"):
-            return self.spark.createDataFrame([], REFCOUNTS).select(
+            return empty_frame(self.spark, REFCOUNTS).select(
                 "id", "user_id", "ref_count")
         return self.store.read_buckets(
             self.spark, "refcounts", only=buckets
@@ -253,33 +252,41 @@ class CrawlEngine:
             )
         )
 
+    def _with_bodies(self, df: DataFrame, url_col: str) -> DataFrame:
+        """``df`` plus the ``html`` body of the page at its ``url_col`` url
+        (null where the pages table has none). Shaped like the epoch's
+        fetch: a semi join keeps the pages scan in place and passes only the
+        bodies ``df`` asks for, and a left join brings them back to ``df``'s
+        rows. A left join straight onto the pages table would make the
+        planner hash the whole table, every body included. No broadcast
+        hint: ``df`` comes from the seeds table or pinned scratch, so the
+        planner knows its size, broadcasts it while small and shuffles at
+        scale."""
+        pages = self._page_bodies.withColumnRenamed("url", url_col)
+        found = pages.join(df.select(url_col), url_col, "left_semi")
+        return df.join(found, url_col, "left")
+
     def discover(self, epoch: int) -> tuple[int, int]:
-        """Maintain the frontier from due sites' sitemaps. Returns (added, removed)."""
+        """Maintain the frontier from due sites' sitemaps. Returns (added, removed).
+
+        Three scratch pins keep each Python UDF and each page fetch to one
+        run: the robots columns, the sitemap candidates, and the diff as one
+        tagged frame (0 new job, 1 removal job, 2 deactivated row) that both
+        the touched-host collect and the frontier sink read."""
+        cfg = self.cfg
         due = self._due_seeds(epoch).select("site_url", "user_id")
         if due.isEmpty():
             return 0, 0
 
-        # robots.txt fetch (broadcast-sized side) → schemaMap directives (S2)
-        robots = (
-            due.withColumn("robots_url", _https(F.concat(F.col("site_url"), F.lit("/robots.txt"))))
-            .join(self._page_bodies.withColumnRenamed("url", "robots_url"), "robots_url", "left")
+        # robots.txt fetch → schemaMap directives and Crawl-delay (S2)
+        robots = self.store.materialize(self.spark, (
+            self._with_bodies(due.withColumn("robots_url", _https(
+                F.concat(F.col("site_url"), F.lit("/robots.txt")))), "robots_url")
             .withColumn("site_base", _https(F.col("site_url")))
-            .withColumn("schema_maps", robots_schema_maps_udf("html", "site_base"))
-            .withColumn("crawl_delay", robots_crawl_delay_udf("html"))
-        )
-        # O(due sites) rows, but its lineage scans the full pages table for
-        # the robots.txt join — cache it so the robots-state sink below
-        # reuses the scan the candidate pipeline already pays for, instead
-        # of re-reading every page body a second time
-        robots = robots.cache()
-        self._robots_state = (
-            robots.select(
-                F.col("site_url").alias("host"),
-                "schema_maps",
-                "crawl_delay",
-                F.lit(fr.epoch_ts(epoch)).alias("fetched_at"),
-            )
-        )
+            .select("site_url", "user_id", "site_base",
+                    robots_schema_maps_udf("html", "site_base").alias("schema_maps"),
+                    robots_crawl_delay_udf("html").alias("crawl_delay"))
+        ), "discover_robots")
 
         # fallback chain (S4): no robots directives → <site>/schema_map.xml
         maps = robots.select(
@@ -294,54 +301,44 @@ class CrawlEngine:
         ).distinct()  # U2: unique schema maps per site
 
         # sitemap fetch + parse (S3) → candidate file urls
-        candidates = (
-            maps.join(self._page_bodies.withColumnRenamed("url", "schema_map"), "schema_map", "left")
-            .withColumn("file_urls", parse_sitemap_udf("html", "site_base"))
-            .select(
-                "site_url", "user_id", "schema_map",
-                F.explode("file_urls").alias("file_url"),
-            )
+        candidates = self.store.materialize(self.spark, (
+            self._with_bodies(maps, "schema_map")
+            .select("site_url", "user_id", "schema_map", F.explode(
+                parse_sitemap_udf("html", "site_base")).alias("file_url"))
             .dropDuplicates(["file_url", "user_id"])  # U4
-        )
+        ), "discover_candidates")
 
-        frontier_df = self.frontier()
-        added_cand, removed_rows = fr.diff_discovery(frontier_df, candidates, due)
-
-        new_rows = fr.as_frontier_rows(added_cand, epoch, self.cfg.num_partitions)
-        removal_jobs = (
-            removed_rows.select("file_url", "user_id", "site_url", "schema_map")
-            .transform(lambda df: fr.as_frontier_rows(df, epoch, self.cfg.num_partitions,
-                                                      job_type="process_removed_file"))
-        )
-
-        # soft-delete removed process_file rows (is_active=0) + enqueue both kinds
-        updated = fr.transition(
-            frontier_df,
-            deactivated=removed_rows.select(
-                "file_url", "user_id", F.lit("process_file").alias("job_type")),
-        )
-        # a file can reappear later: drop superseded removal jobs for re-added files
-        updated = updated.unionByName(new_rows).unionByName(removal_jobs)
-
-        # the diff output is small (changed rows only) — cache it so the
-        # touched-bucket collect and the write share one pass. ONE job yields
-        # both the touched host buckets and the (added, removed) counts: each
-        # projection is tagged and counted per (host, tag)
-        new_rows.cache(); removal_jobs.cache(); removed_rows.cache()
-        per_host = (
-            new_rows.select("host_hash", F.lit(0).alias("_t"))
-            .unionByName(removal_jobs.select("host_hash", F.lit(1).alias("_t")))
-            .unionByName(removed_rows.select("host_hash", F.lit(2).alias("_t")))
-            .groupBy("host_hash", "_t").count().collect()
-        )
+        added, removed = fr.diff_discovery(
+            self.frontier(), candidates, robots.select("site_url", "user_id"))
+        # new pending jobs, removal jobs for vanished files, and the live
+        # rows those removals soft-delete (is_active=0)
+        diff = self.store.materialize(self.spark, (
+            fr.as_frontier_rows(added, epoch, cfg.num_partitions)
+            .withColumn("_t", F.lit(0))
+            .unionByName(fr.as_frontier_rows(
+                removed.select("file_url", "user_id", "site_url", "schema_map"),
+                epoch, cfg.num_partitions, job_type="process_removed_file")
+                .withColumn("_t", F.lit(1)))
+            .unionByName(removed.withColumn("_t", F.lit(2)))
+        ), "discover_diff")
+        # ONE job yields the touched host buckets and the (added, removed)
+        # counts
+        per_host = diff.groupBy("host_hash", "_t").count().collect()
         touched = sorted({int(r["host_hash"]) for r in per_host})
         n_added = sum(r["count"] for r in per_host if r["_t"] == 0)
         n_removed = sum(r["count"] for r in per_host if r["_t"] == 1)
 
+        # the touched hosts' rows with the removals soft-deleted, plus both
+        # kinds of new job
+        updated = fr.transition(
+            self._frontier_for_hosts(touched),
+            deactivated=diff.filter(F.col("_t") == 2),
+        ).unionByName(diff.filter(F.col("_t") < 2).drop("_t"))
+
         # stamp last_processed on discovered seeds (scheduler.py:21-30 analogue)
         seeds_df = self.store.read(self.spark, "seeds")
         stamped = (
-            seeds_df.join(due.select("site_url", "user_id").withColumn("_hit", F.lit(True)),
+            seeds_df.join(due.withColumn("_hit", F.lit(True)),
                           ["site_url", "user_id"], "left")
             .withColumn(
                 "last_processed",
@@ -349,14 +346,15 @@ class CrawlEngine:
             )
             .drop("_hit")
         )
-        # three independent sinks over already-pinned inputs → one concurrent round
+        robots_state = robots.select(
+            F.col("site_url").alias("host"), "schema_maps", "crawl_delay",
+            F.lit(fr.epoch_ts(epoch)).alias("fetched_at"))
+        # three independent sinks over pinned inputs → one concurrent round
         with ThreadPoolExecutor(max_workers=3) as pool:
             f_frontier = pool.submit(self._write_frontier, updated, touched)
             f_seeds = pool.submit(self.store.write, stamped, "seeds")
-            f_robots = pool.submit(self.store.write, self._robots_state, "robots")
+            f_robots = pool.submit(self.store.write, robots_state, "robots")
             v, sv, rv = f_frontier.result(), f_seeds.result(), f_robots.result()
-        for df in (new_rows, removal_jobs, removed_rows, robots):
-            df.unpersist()
         self.store.commit(epoch, {"frontier": v, "seeds": sv, "robots": rv})
         return n_added, n_removed
 
@@ -367,7 +365,7 @@ class CrawlEngine:
         from crawler_spark.schema import PROCESSING_ERRORS
 
         if not self.store.exists("errors"):
-            return self.spark.createDataFrame([], PROCESSING_ERRORS)
+            return empty_frame(self.spark, PROCESSING_ERRORS)
         errors = self.store.read(self.spark, "errors")
         if file_url is not None:
             errors = errors.filter(F.col("file_url") == file_url)
@@ -520,7 +518,7 @@ class CrawlEngine:
         # positives, which the exact anti-join absorbs (operators/seen.py)
         if self.store.exists("documents"):
             versions["documents"] = self._write_documents(
-                self.spark.createDataFrame([], DOCUMENTS), orphans, touched_docs)
+                empty_frame(self.spark, DOCUMENTS), orphans, touched_docs)
         if rc_buckets:
             versions["refcounts"] = self.store.replace_buckets(
                 rc_content, "refcounts", rc_buckets, "rbucket")
@@ -548,7 +546,7 @@ class CrawlEngine:
             return rep
 
         # O(pending) selection input: reads only the pending-family buckets
-        # (see _frontier_fbucket) — done/error rows, the corpus mass at
+        # (see _frontier_bucket) — done/error rows, the corpus mass at
         # steady state, are pruned by path, not by filter
         pending = self.pending_frontier()
 
@@ -724,8 +722,8 @@ class CrawlEngine:
             rows_added = self.store.scratch_rows("added_epoch")
             rows_removed = self.store.scratch_rows("removed_epoch")
         else:
-            seen_touched = self.spark.createDataFrame([], URL_SEEN)
-            persisted_blooms = self.spark.createDataFrame([], seen.BLOOM_SCHEMA)
+            seen_touched = empty_frame(self.spark, URL_SEEN)
+            persisted_blooms = empty_frame(self.spark, seen.BLOOM_SCHEMA)
             added = self.store.materialize(self.spark, ext_ids, "added_epoch")
             removed = seen_touched.select("file_url", "user_id", "id", "host_hash")
             rows_added = self.store.scratch_rows("added_epoch")
@@ -878,7 +876,7 @@ class CrawlEngine:
         prev_errors = (
             self.store.read(self.spark, "errors")
             if self.store.exists("errors")
-            else self.spark.createDataFrame([], PROCESSING_ERRORS)
+            else empty_frame(self.spark, PROCESSING_ERRORS)
         )
         errors_after = prev_errors.join(
             succeeded, ["file_url", "user_id"], "left_anti"

@@ -33,6 +33,12 @@ sequence-number rule). Copy-on-write tables (``url_seen``, ``frontier``,
 deltas and compacts a bucket back to one base only when its chain outgrows
 a fixed share of the base, so a re-crawl writes its new docs and delete
 keys instead of rewriting its buckets' unchanged embeddings.
+
+Every table's schema is pinned at its first write (``<table>/schema.json``;
+a bucketed table's delete keys get their own under ``<table>/_deletes/``),
+and every read passes it: a parquet read without a schema launches one
+Spark job to infer it from a footer, a read with one launches none. There
+is no inference fallback — a table without a pinned schema does not read.
 """
 
 from __future__ import annotations
@@ -44,7 +50,7 @@ import shutil
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType, IntegerType, LongType, StringType, StructField, StructType)
@@ -73,9 +79,11 @@ class SnapshotStore:
 
         root/
           MANIFEST.json            # {"epoch": k, "tables": {name: version}, ...}
+          <table>/schema.json      # pinned at the table's first write
           <table>/v<version>/      # immutable parquet snapshot
           <table>/b<bucket>/v<version>/            # one link of a bucket chain
           <table>/b<bucket>/v<version>/_deletes/   # its delete keys, if any
+          <table>/_deletes/schema.json             # the delete keys' schema
 
     A bucketed table's manifest entry is ``{"buckets": {b: head version},
     "chains": {b: [link, ...]}}``, oldest link first. A link is ``{"v": n}``
@@ -86,6 +94,8 @@ class SnapshotStore:
     def __init__(self, root: str | Path):
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
+        #: pinned schemas parsed so far; a pin never changes once written
+        self._schemas: dict[str, StructType] = {}
 
     # -- manifest ----------------------------------------------------------
 
@@ -149,18 +159,22 @@ class SnapshotStore:
             self._write_manifest(manifest)
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
+        """The committed state of ``name``, read with its pinned schema: no
+        Spark job runs until the caller's own action."""
         version = self.read_manifest()["tables"].get(name)
         if version is None:
             raise FileNotFoundError(f"table {name!r} has no committed snapshot")
         if isinstance(version, dict):  # bucketed table
             return self.read_buckets(spark, name)
-        return spark.read.parquet(str(self._table_dir(name, int(version))))
+        return spark.read.schema(self.schema(name)).parquet(
+            str(self._table_dir(name, int(version))))
 
     def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> int:
         """Write the next snapshot of ``name``; returns the new version.
 
         Not visible until :meth:`commit` records it in the manifest.
         """
+        self._pin_schema(name, df.schema)
         current = self.current_version(name)
         version = 0 if current is None else current + 1
         target = self._table_dir(name, version)
@@ -196,6 +210,29 @@ class SnapshotStore:
     def _schema_path(self, name: str) -> Path:
         return self.root / name / "schema.json"
 
+    def _pin_schema(self, name: str, schema: StructType) -> None:
+        """Record the schema of ``name``'s first write (write-temp +
+        ``os.replace``, so a crash leaves no torn pin); later writes, also
+        after a ``drop``, keep it. Reads of a table without data files
+        return an empty frame of it."""
+        path = self._schema_path(name)
+        if name in self._schemas or path.exists():
+            return
+        path.parent.mkdir(parents=True, exist_ok=True)
+        tmp = path.with_suffix(".json.tmp")
+        tmp.write_text(schema.json())
+        os.replace(tmp, path)
+        self._schemas[name] = schema
+
+    def schema(self, name: str) -> StructType:
+        """``name``'s pinned schema, parsed once per store instance. A table
+        written without one (a store laid out before schemas were pinned)
+        raises ``FileNotFoundError``: reads never fall back to inference."""
+        if name not in self._schemas:
+            self._schemas[name] = StructType.fromJson(
+                json.loads(self._schema_path(name).read_text()))
+        return self._schemas[name]
+
     def _bucket_entry(self, name: str) -> dict:
         """A copy of ``name``'s manifest entry (empty for a new table)."""
         v = self.read_manifest()["tables"].get(name)
@@ -203,13 +240,6 @@ class SnapshotStore:
             return {"buckets": {}, "chains": {}}
         return {"buckets": dict(v["buckets"]),
                 "chains": {b: list(c) for b, c in v["chains"].items()}}
-
-    def _pin_schema(self, name: str, df: DataFrame) -> None:
-        """Record the schema of a table's first write; reads of a table
-        without data files return an empty frame of it."""
-        if not self._schema_path(name).exists():
-            self._schema_path(name).parent.mkdir(parents=True, exist_ok=True)
-            self._schema_path(name).write_text(df.schema.json())
 
     def bucket_versions(self, name: str) -> dict[str, int]:
         """The head version of each bucket: the version last written."""
@@ -233,29 +263,32 @@ class SnapshotStore:
         df: DataFrame,
         name: str,
         touched: list[int],
-        bucket_col: str = "host_hash",
+        bucket_col: str | Column = "host_hash",
     ) -> dict:
         """Write new content for exactly the ``touched`` buckets of ``name``
         (copy-on-write).
 
         ``df`` must hold the *complete* new content of those buckets (rows of
-        other buckets are filtered out defensively). Buckets not in
-        ``touched`` keep their current version — zero I/O. Returns the
-        manifest entry to pass to :meth:`commit`; nothing is visible until
-        the commit lands. Each touched bucket's chain restarts at its new
-        version; a bucket whose new content is empty gets an empty version
-        directory.
+        other buckets are filtered out defensively). ``bucket_col`` names
+        the bucket column, or is an expression over ``df``'s columns that
+        routes rows to buckets without being stored (the frontier's status
+        family). Buckets not in ``touched`` keep their current version —
+        zero I/O. Returns the manifest entry to pass to :meth:`commit`;
+        nothing is visible until the commit lands. Each touched bucket's
+        chain restarts at its new version; a bucket whose new content is
+        empty gets an empty version directory.
         """
         entry = self._bucket_entry(name)
         buckets, chains = entry["buckets"], entry["chains"]
-        self._pin_schema(name, df)
+        self._pin_schema(name, df.schema)
         if touched:
             stage = self.root / name / f"stage-{time.time_ns()}"
+            bucket = F.col(bucket_col) if isinstance(bucket_col, str) else bucket_col
             # co-locate each bucket's rows into one task before the
             # directory split — otherwise every upstream task writes a sliver
             # per bucket (tasks × buckets small files)
-            (df.filter(F.col(bucket_col).isin([int(b) for b in touched]))
-             .withColumn("_b", F.col(bucket_col))
+            (df.withColumn("_b", bucket)
+             .filter(F.col("_b").isin([int(b) for b in touched]))
              .repartition(max(len(touched), 1), F.col("_b"))
              .write.mode("overwrite").partitionBy("_b").parquet(str(stage)))
             for b in touched:
@@ -332,14 +365,17 @@ class SnapshotStore:
         """
         entry = self._bucket_entry(name)
         buckets, chains = entry["buckets"], entry["chains"]
-        self._pin_schema(name, df)
+        keys = [] if deletes is None else [
+            c for c in deletes.columns if c != bucket_col]
+        self._pin_schema(name, df.schema)
+        if keys:
+            self._pin_schema(f"{name}/{DELETES_DIR}",
+                             StructType([df.schema[k] for k in keys]))
         if not touched:
             return entry
         touched = sorted({int(b) for b in touched})
         bases = {b for b in touched if _compacts(chains.get(str(b)))}
         deltas = [b for b in touched if b not in bases]
-        keys = [] if deletes is None else [
-            c for c in deletes.columns if c != bucket_col]
 
         def adds(frame: DataFrame) -> DataFrame:
             return frame.select(*df.columns, F.lit(False).alias(_DELETE_FLAG))
@@ -394,17 +430,19 @@ class SnapshotStore:
         the rows a delete key of a *later* link of the same bucket matches
         (Iceberg's sequence-number rule, so a key deleted at version k and
         re-added at k+1 is live). Chains without delete keys are a plain
-        parquet read."""
+        parquet read. Rows and delete keys read with their pinned schemas,
+        and buckets without data files read as an empty frame that runs no
+        task, so building the frame launches no Spark job."""
         dirs = self._chain_dirs(name, only)
         data = [str(d) for d in dirs if any(d.glob("*.parquet"))]
         if not data:
-            schema = StructType.fromJson(json.loads(self._schema_path(name).read_text()))
-            return spark.createDataFrame([], schema)
-        rows = spark.read.parquet(*data)
+            return empty_frame(spark, self.schema(name))
+        rows = spark.read.schema(self.schema(name)).parquet(*data)
         dels = [str(d / DELETES_DIR) for d in dirs if (d / DELETES_DIR).is_dir()]
         if not dels:
             return rows
-        keys = spark.read.parquet(*dels)
+        keys = spark.read.schema(
+            self.schema(f"{name}/{DELETES_DIR}")).parquet(*dels)
 
         def link(group: int):
             return F.regexp_extract(
@@ -438,10 +476,12 @@ class SnapshotStore:
         that guarantee across multi-action epochs, and on a real cluster the
         scratch write doubles as the shuffle-safe restart point. Scratch is
         NOT manifest-tracked: a crashed epoch simply overwrites it on re-run.
+        The read-back passes ``df.schema``, the schema just written, so it
+        launches no Spark job (its columns come back nullable).
         """
         path = self.root / "scratch" / name
         df.write.mode("overwrite").parquet(str(path))
-        return spark.read.parquet(str(path))
+        return spark.read.schema(df.schema).parquet(str(path))
 
     def scratch_rows(self, name: str) -> int:
         """Row count of a materialized scratch table from parquet footers —
@@ -497,10 +537,12 @@ class SnapshotStore:
         """Append a labeled part to an append-only table (e.g. per-epoch
         metrics). Parts are immutable; the union happens at read time —
         O(1) write per epoch instead of cumulative rewrites."""
+        self._pin_schema(name, df.schema)
         df.write.mode("overwrite").parquet(str(self.root / name / f"a{label}"))
 
     def read_appended(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(str(self.root / name / "a*"))
+        return spark.read.schema(self.schema(name)).parquet(
+            str(self.root / name / "a*"))
 
     def has_appended(self, name: str) -> bool:
         table_root = self.root / name
@@ -542,6 +584,17 @@ class SnapshotStore:
 
     def destroy(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)
+
+
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty frame of exactly ``schema`` that runs no task: built from an
+    empty Arrow table, it plans as an empty local relation, which the
+    optimizer prunes out of unions and joins. ``createDataFrame([], schema)``
+    instead scans a Python RDD, which costs Python tasks in every plan that
+    reads it."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
 
 
 #: what each writer task returns: one row per file it wrote

@@ -1000,9 +1000,10 @@ def test_crash_around_documents_write_resumes(
 
 
 #: Spark jobs of the working re-crawl epoch below, as measured. The touched
-#: doc buckets come from the diff scratch driver-side, and a documents delta
-#: reads no old docs, so neither costs a job.
-WORKING_EPOCH_JOBS = 59
+#: doc buckets come from the diff scratch driver-side, a documents delta
+#: reads no old docs, and every store read passes its pinned schema, so none
+#: of them costs a job.
+WORKING_EPOCH_JOBS = 49
 
 
 def test_working_epoch_job_budget(spark, tmp_path, small_corpus):
@@ -1025,6 +1026,28 @@ def test_working_epoch_job_budget(spark, tmp_path, small_corpus):
     jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
     assert rep.ids_added == rep.ids_removed == CHUNKS * ITEMS
     assert jobs <= WORKING_EPOCH_JOBS, f"working epoch ran {jobs} Spark jobs"
+
+
+#: Spark jobs of a first ``discover(0)`` on the small corpus, as measured
+COLD_DISCOVER_JOBS = 18
+
+
+def test_cold_discover_job_budget(spark, tmp_path, small_corpus):
+    """A first ``discover(0)`` (robots and sitemap fetch, the diff against
+    an empty frontier, the frontier, seeds and robots writes) launches at
+    most ``COLD_DISCOVER_JOBS`` Spark jobs, counted with ``statusTracker``.
+    The engine that joined due sites straight onto the pages table, cached
+    three diff projections and inferred every read's schema ran 30."""
+    pages, seeds = small_corpus
+    engine = build_engine(spark, tmp_path, pages)
+    engine.bootstrap(seeds)
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    added_removed = engine.discover(0)
+    jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+    assert added_removed == (N_SITES * CHUNKS, 0)
+    assert jobs <= COLD_DISCOVER_JOBS, f"cold discover ran {jobs} Spark jobs"
 
 
 def test_spread_churn_writes_only_new_docs(spark, tmp_path):

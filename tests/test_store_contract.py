@@ -13,7 +13,8 @@ Contract surface exercised (exactly what ``CrawlEngine`` calls):
   versioning and O(touched) reads · merge-on-read bucket chains (delete-key
   sequence rule, compaction) · crash re-run overwrite · append-only parts ·
   manifest meta pinning · current-state-only manifest · footer null counts
-  · vacuum retention of live chains and stage-dir sweep.
+  · vacuum retention of live chains and stage-dir sweep · schema-pinned
+  reads that launch no Spark job.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_spark.sources.tables import SnapshotStore
+from crawler_spark.sources.tables import DELETES_DIR, SnapshotStore, empty_frame
 from crawler_spark.sources.txnlog import TxnLogStore
 
 BACKENDS = [
@@ -383,3 +384,105 @@ def test_buckets_with_nulls_footer_stats(spark, make_store):
     store.commit(0, {"blobs": vers})
     assert store.buckets_with_nulls("blobs", "table") == [1]
     assert store.buckets_with_nulls("blobs", "table", only=[0, 2]) == []
+
+
+# -- schema-pinned reads ----------------------------------------------------
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def _shape(schema):
+    """{column: type}; nullability aside, which a parquet read drops."""
+    return {f.name: f.dataType.simpleString() for f in schema}
+
+
+def test_reads_launch_no_spark_job(spark, make_store, tmp_path):
+    """Every kind of table reads with the schema pinned at its first write:
+    building the frame launches no Spark job (an inferred parquet read
+    launches one to read a footer) and returns the pinned schema. This
+    holds for delete-key files too, and for ``materialize``, whose read-back
+    adds no job to its write."""
+    store = make_store()
+    df = _df(spark, [(h, f"k{h}{i}", i) for h in (0, 1) for i in range(3)])
+    store.commit(0, {
+        "w": store.write(df, "w"),
+        "b": store.replace_buckets(df, "b", [0, 1]),
+        "d": store.replace_buckets_task_write(df, "d", [0, 1], bucket_col="host_hash"),
+    })
+    store.commit(1, {"d": store.replace_buckets_task_write(
+        _df(spark, [(0, "new", 9)]), "d", [0], bucket_col="host_hash",
+        deletes=_keys(spark, [(0, "k00")]))})
+    assert (store.root / "d" / "b00000" / "v1" / DELETES_DIR).is_dir()
+    store.append(df, "m", "000000")
+
+    reads = {
+        "write": lambda: store.read(spark, "w"),
+        "replace_buckets": lambda: store.read(spark, "b"),
+        "task write with delete keys": lambda: store.read(spark, "d"),
+        "empty buckets": lambda: store.read_buckets(spark, "b", only=[7]),
+        "append": lambda: store.read_appended(spark, "m"),
+    }
+    for what, read in reads.items():
+        frame, jobs = _jobs(spark, read)
+        assert jobs == 0, f"{what}: reading launched {jobs} Spark jobs"
+        assert _shape(frame.schema) == _shape(df.schema), what
+    got = sorted((r.k, r.v) for r in store.read(spark, "d").collect())
+    assert got == sorted([(f"k{h}{i}", i) for h in (0, 1) for i in range(3)
+                          if (h, i) != (0, 0)] + [("new", 9)])
+
+    _, write_jobs = _jobs(spark, lambda: df.write.parquet(str(tmp_path / "plain")))
+    frame, jobs = _jobs(spark, lambda: store.materialize(spark, df, "x"))
+    assert jobs == write_jobs, f"materialize ran {jobs} jobs, its write {write_jobs}"
+    assert _shape(frame.schema) == _shape(df.schema)
+
+
+def test_empty_frame_runs_no_python_task(spark):
+    """``empty_frame`` has exactly the given schema, nullability included,
+    plans as an empty local relation, not a scan of a Python RDD, and a
+    plan over it launches no job."""
+    from crawler_spark.schema import DOCUMENTS
+
+    frame = empty_frame(spark, DOCUMENTS)
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+    assert frame.schema == DOCUMENTS
+    rows, jobs = _jobs(spark, lambda: frame.unionByName(frame).collect())
+    assert (rows, jobs) == ([], 0)
+
+
+def test_pinned_schemas_match_every_data_file(spark, make_store):
+    """After a small crawl with a removal (so documents carry delete keys),
+    every data file of every table holds exactly its table's pinned columns
+    and types. A schema'd read drops a file column the pin lacks and nulls a
+    pinned column the file lacks, silently; this catches either."""
+    from crawler_spark.crawl import CrawlConfig, CrawlEngine
+    from crawler_spark.sources.synth import chunk_url, corpus_pages_df, seeds_df
+
+    store = make_store()
+    engine = CrawlEngine(spark, store, corpus_pages_df(spark, 2, 2, items_per_chunk=3),
+                         CrawlConfig(num_partitions=4, salt_buckets=2))
+    engine.bootstrap(seeds_df(spark, 2))
+    engine.run()
+    engine.remove_manual_files(spark.createDataFrame(
+        [{"file_url": chunk_url(1, 0), "user_id": "test:user001"}]),
+        store.read_manifest()["epoch"] + 1)
+    engine.run()
+
+    checked = set()
+    for f in sorted(store.root.rglob("*.parquet")):
+        parts = f.relative_to(store.root).parts
+        if parts[0] == "scratch":
+            continue
+        pin = f"{parts[0]}/{DELETES_DIR}" if DELETES_DIR in parts else parts[0]
+        assert _shape(spark.read.parquet(str(f)).schema) == _shape(
+            store.schema(pin)), f"{f} does not match {pin}'s pinned schema"
+        checked.add(pin)
+    assert checked >= {"seeds", "robots", "frontier", "url_seen", "blooms",
+                       "refcounts", "documents", f"documents/{DELETES_DIR}",
+                       "metrics"}
