@@ -204,6 +204,15 @@ class CrawlEngine:
         return self.store.read_buckets(
             self.spark, "frontier", only=self._frontier_touched(hosts))
 
+    def _pin_change(self, change: DataFrame, name: str) -> tuple[DataFrame, list[int]]:
+        """Pin a frontier change (rows with a ``host_hash``) to scratch and
+        read the host buckets it touches off the pinned file: every frontier
+        writer learns its write set this way, at no Spark job beyond the
+        pin's own write."""
+        pinned = self.store.materialize(self.spark, change, name)
+        hosts = self.store.scratch_column_values(name, "host_hash")
+        return pinned, sorted(int(h) for h in hosts)
+
     def url_seen(self) -> DataFrame:
         return self.store.read(self.spark, "url_seen")
 
@@ -271,8 +280,9 @@ class CrawlEngine:
 
         Three scratch pins keep each Python UDF and each page fetch to one
         run: the robots columns, the sitemap candidates, and the diff as one
-        tagged frame (0 new job, 1 removal job, 2 deactivated row) that both
-        the touched-host collect and the frontier sink read."""
+        tagged frame (0 new job, 1 removal job, 2 deactivated row) whose
+        columns give the touched hosts and the counts, and which the
+        frontier sink reads."""
         cfg = self.cfg
         due = self._due_seeds(epoch).select("site_url", "user_id")
         if due.isEmpty():
@@ -312,7 +322,7 @@ class CrawlEngine:
             self.frontier(), candidates, robots.select("site_url", "user_id"))
         # new pending jobs, removal jobs for vanished files, and the live
         # rows those removals soft-delete (is_active=0)
-        diff = self.store.materialize(self.spark, (
+        diff, touched = self._pin_change((
             fr.as_frontier_rows(added, epoch, cfg.num_partitions)
             .withColumn("_t", F.lit(0))
             .unionByName(fr.as_frontier_rows(
@@ -321,12 +331,9 @@ class CrawlEngine:
                 .withColumn("_t", F.lit(1)))
             .unionByName(removed.withColumn("_t", F.lit(2)))
         ), "discover_diff")
-        # ONE job yields the touched host buckets and the (added, removed)
-        # counts
-        per_host = diff.groupBy("host_hash", "_t").count().collect()
-        touched = sorted({int(r["host_hash"]) for r in per_host})
-        n_added = sum(r["count"] for r in per_host if r["_t"] == 0)
-        n_removed = sum(r["count"] for r in per_host if r["_t"] == 1)
+        # the (added, removed) counts from the pinned tags, driver-side
+        kinds = self.store.scratch_column_values("discover_diff", "_t")
+        n_added, n_removed = kinds[0], kinds[1]
 
         # the touched hosts' rows with the removals soft-deleted, plus both
         # kinds of new job
@@ -417,42 +424,27 @@ class CrawlEngine:
         unknown files become new pending manual rows. Manual rows are exempt
         from discovery-diff removal (see ``diff_discovery``).
         """
-        keyed = files.select("site_url", "user_id", "file_url", "schema_map")
-        frontier_df = self.frontier()
-        upd = keyed.select(
-            "file_url", "user_id", F.col("schema_map").alias("_new_map")
-        ).withColumn("_m", F.lit(True))
-        hit = F.col("_m") & (F.col("job_type") == "process_file")
-        reactivated = (
-            frontier_df.join(upd, ["file_url", "user_id"], "left")
-            .withColumn("is_active", F.when(hit, F.lit(True)).otherwise(F.col("is_active")))
-            .withColumn("is_manual", F.when(hit, F.lit(True)).otherwise(F.col("is_manual")))
-            .withColumn("status", F.when(hit, F.lit("pending")).otherwise(F.col("status")))
-            .withColumn("retries", F.when(hit, F.lit(0)).otherwise(F.col("retries")))
-            .withColumn("schema_map", F.when(hit, F.col("_new_map")).otherwise(F.col("schema_map")))
-            .drop("_m", "_new_map")
-        )
-        fresh = keyed.join(
-            frontier_df.filter(F.col("job_type") == "process_file"),
-            ["file_url", "user_id"], "left_anti")
-        new_rows = fr.as_frontier_rows(
-            fresh, epoch, self.cfg.num_partitions, is_manual=True)
-        updated = reactivated.unionByName(new_rows)
-        touched = [int(r[0]) for r in keyed.select(
-            host_hash_expr(host_from_url_expr(F.col("file_url")),
-                           self.cfg.num_partitions)).distinct().collect()]
-        v = self._write_frontier(updated, touched)
-        self.store.commit(epoch, {"frontier": v})
+        rows, touched = self._pin_change(fr.as_frontier_rows(
+            files.select("site_url", "user_id", "file_url", "schema_map"),
+            epoch, self.cfg.num_partitions, is_manual=True), "manual_added")
+        frontier_df = self._frontier_for_hosts(touched)
+        fresh = rows.join(frontier_df.filter(F.col("job_type") == "process_file"),
+                          ["file_url", "user_id"], "left_anti")
+        updated = fr.transition(frontier_df, requeued=rows).unionByName(fresh)
+        self.store.commit(epoch, {"frontier": self._write_frontier(updated, touched)})
 
     def remove_manual_files(self, keys: DataFrame, epoch: int) -> None:
         """Soft-delete files and enqueue their removal jobs (reference
         api.py:352-383 ``_delete_schema_map_internal`` + db.py:392-398): the
         next epoch's ``process_removed_file`` pass wipes ids and vector docs,
         preserving the reference's ordering (ids → vector DB → files)."""
-        frontier_df = self.frontier()
+        keyed, touched = self._pin_change(fr.as_frontier_rows(
+            keys.select("file_url", "user_id"), epoch, self.cfg.num_partitions
+        ).select("file_url", "user_id", "host_hash"), "manual_removed")
+        frontier_df = self._frontier_for_hosts(touched)
         live = (
             frontier_df.filter(F.col("is_active") & (F.col("job_type") == "process_file"))
-            .join(keys.select("file_url", "user_id"), ["file_url", "user_id"], "left_semi")
+            .join(keyed.select("file_url", "user_id"), ["file_url", "user_id"], "left_semi")
         )
         removal_jobs = fr.as_frontier_rows(
             live.select("file_url", "user_id", "site_url", "schema_map"),
@@ -462,11 +454,7 @@ class CrawlEngine:
             deactivated=live.select(
                 "file_url", "user_id", F.lit("process_file").alias("job_type")),
         ).unionByName(removal_jobs)
-        live.cache()
-        touched = [int(r[0]) for r in live.select("host_hash").distinct().collect()]
-        v = self._write_frontier(updated, touched)
-        live.unpersist()
-        self.store.commit(epoch, {"frontier": v})
+        self.store.commit(epoch, {"frontier": self._write_frontier(updated, touched)})
 
     def delete_site(self, site_url: str, user_id: str, epoch: int) -> None:
         """Hard-delete a site: its frontier rows, seen ids, exclusively-owned
@@ -475,36 +463,39 @@ class CrawlEngine:
         vector docs of ids whose last reference lived here are deleted, the
         J8 semi-delete done site-wide)."""
         site_pred = (F.col("site_url") == site_url) & (F.col("user_id") == user_id)
-        victim_rows = self.frontier().filter(site_pred).cache()
-        site_files = victim_rows.select("file_url", "user_id").distinct()
-        touched = [int(r[0]) for r in victim_rows.select("host_hash").distinct().collect()]
+        victims, touched = self._pin_change(self.frontier().filter(site_pred).select(
+            "file_url", "user_id", "host_hash"), "site_files")
+        site_files = victims.select("file_url", "user_id")
 
         # O(touched): the site's seen rows live exactly in its files' host
         # buckets — never scan the global seen set for a site delete
         seen_touched = self.store.read_buckets(self.spark, "url_seen", only=touched)
-        doomed = seen_touched.join(site_files, ["file_url", "user_id"], "left_semi").cache()
+        doomed = self.store.materialize(self.spark, seen_touched.join(
+            site_files, ["file_url", "user_id"], "left_semi").withColumn(
+            "doc_bucket", doc_bucket_expr(F.col("id"), self.cfg.num_partitions)),
+            "site_ids")
         seen_after = seen_touched.join(site_files, ["file_url", "user_id"], "left_anti")
 
         # orphans (last reference lived here → count reaches 0) come from
         # the maintained refcounts view: read only the doomed ids' buckets
         # and subtract the doomed counts — O(touched ids), the same merge
         # the epoch gates use, instead of an O(corpus) distinct anti-join
-        # over the full seen set.
+        # over the full seen set. Orphans ⊆ doomed ids, so the doomed ids'
+        # doc buckets are an exact cover for the refcounts and documents
+        # writes.
         rc_delta = doomed.groupBy("id", "user_id").agg(
             (-F.count(F.lit(1))).alias("delta"))
-        rc_buckets = [int(r[0]) for r in doomed.select(
-            doc_bucket_expr(F.col("id"), self.cfg.num_partitions)).distinct().collect()]
+        rc_buckets = sorted(int(b) for b in
+                            self.store.scratch_column_values("site_ids", "doc_bucket"))
         merged = self._refcounts(rc_buckets).join(
             rc_delta, ["id", "user_id"], "left").select(
             "id", "user_id",
             (F.col("ref_count") + F.coalesce(F.col("delta"), F.lit(0)))
             .alias("ref_count"))
-        orphans = merged.filter(F.col("ref_count") <= 0).select("id", "user_id").cache()
+        orphans = merged.filter(F.col("ref_count") <= 0).select("id", "user_id")
         rc_content = merged.filter(F.col("ref_count") > 0).select(
             doc_bucket_expr(F.col("id"), self.cfg.num_partitions).alias("rbucket"),
             "id", "user_id", "ref_count")
-        touched_docs = [int(r[0]) for r in orphans.select(
-            doc_bucket_expr(F.col("id"), self.cfg.num_partitions)).distinct().collect()]
 
         frontier_keep = self._frontier_for_hosts(touched).filter(~site_pred)
         seeds_after = self.store.read(self.spark, "seeds").filter(~site_pred)
@@ -518,12 +509,10 @@ class CrawlEngine:
         # positives, which the exact anti-join absorbs (operators/seen.py)
         if self.store.exists("documents"):
             versions["documents"] = self._write_documents(
-                empty_frame(self.spark, DOCUMENTS), orphans, touched_docs)
+                empty_frame(self.spark, DOCUMENTS), orphans, rc_buckets)
         if rc_buckets:
             versions["refcounts"] = self.store.replace_buckets(
                 rc_content, "refcounts", rc_buckets, "rbucket")
-        for df in (victim_rows, doomed, orphans):
-            df.unpersist()
         self.store.commit(epoch, versions)
 
     # ------------------------------------------------------------------
@@ -562,16 +551,15 @@ class CrawlEngine:
         selected = politeness.salted_repartition(selected, cfg.num_partitions, cfg.salt_buckets)
         # pin the selection to scratch (not cache): several downstream plans
         # reference it, and a flat parquet read keeps their analyzed trees
-        # shallow — see the added/removed pinning note below
-        selected = self.store.materialize(self.spark, selected, "selected_epoch")
-        # ONE job yields the termination count, the fetch-job count and the
-        # epoch's touched host buckets (every frontier/url_seen mutation this
-        # epoch lives in a selected row's bucket — the bucket-replace write set)
-        host_counts = selected.groupBy("host_hash", "job_type").count().collect()
-        rep.selected = sum(r["count"] for r in host_counts)
-        n_fetch_jobs = sum(r["count"] for r in host_counts
-                           if r["job_type"] == "process_file")
-        touched = sorted({int(r["host_hash"]) for r in host_counts})
+        # shallow — see the added/removed pinning note below. The pinned
+        # columns give the epoch's touched host buckets (every frontier/
+        # url_seen mutation this epoch lives in a selected row's bucket — the
+        # bucket-replace write set), the termination count and the fetch-job
+        # count, driver-side with no job.
+        selected, touched = self._pin_change(selected, "selected_epoch")
+        kinds = self.store.scratch_column_values("selected_epoch", "job_type")
+        rep.selected = sum(kinds.values())
+        n_fetch_jobs = kinds["process_file"]
         if rep.selected == 0:
             rep.wall_s = time.time() - t0
             return rep
@@ -884,10 +872,10 @@ class CrawlEngine:
 
         # --- commit ---
         # ALL sinks run concurrently from driver threads — independent DAGs
-        # over the pinned scratch + diff caches, so the short frontier/
-        # metrics jobs never wait behind the long documents job and the
-        # epoch's serial driver path is just (select-count → extract-pin →
-        # sinks). Every bucket-replace write moves only this epoch's touched
+        # over the pinned scratch tables, so the short frontier/metrics
+        # jobs never wait behind the long documents job and the epoch's
+        # serial driver path is just (select-pin → extract-pin → sinks).
+        # Every bucket-replace write moves only this epoch's touched
         # buckets.
         # emptiness probe on the pinned diffs — already known from the
         # scratch parquet footers (zero Spark jobs): an epoch that re-crawled

@@ -98,6 +98,7 @@ def transition(
     failed: DataFrame | None = None,
     deactivated: DataFrame | None = None,
     epoch: int | None = None,
+    requeued: DataFrame | None = None,
 ) -> DataFrame:
     """Apply end-of-epoch status transitions and return the new frontier.
 
@@ -106,46 +107,43 @@ def transition(
     * ``failed`` (file_url, user_id): retries+1; < MAX_RETRIES → pending
       (nack/retry), else → error (job_manager escalation);
     * ``deactivated``: soft-delete (is_active=false, status=done) — the
-      removed-file path (worker.py:284-311).
+      removed-file path (worker.py:284-311);
+    * ``requeued`` (file_url, user_id, job_type, schema_map): re-queue as a
+      live manual row (is_active, is_manual, status=pending, retries=0, the
+      new schema_map) — the manual add path (db.py:376-390).
     """
     out = frontier
     ts = F.lit(epoch_ts(epoch) if epoch is not None else None).cast("timestamp")
-
     if done is not None:
-        d = done.select(*_KEY, F.col("number_of_items").alias("_n_items"))
-        out = (
-            out.join(d.withColumn("_done", F.lit(True)), _KEY, "left")
-            .withColumn("status", F.when(F.col("_done"), "done").otherwise(F.col("status")))
-            .withColumn("last_read_time", F.when(F.col("_done"), ts).otherwise(F.col("last_read_time")))
-            .withColumn(
-                "number_of_items",
-                F.when(F.col("_done"), F.col("_n_items")).otherwise(F.col("number_of_items")),
-            )
-            .drop("_done", "_n_items")
-        )
+        out = _set_where(
+            out, done.select(*_KEY, F.col("number_of_items").alias("_n_items")),
+            {"status": F.lit("done"), "last_read_time": ts,
+             "number_of_items": F.col("_n_items")})
     if failed is not None:
-        f = failed.select(*_KEY).withColumn("_failed", F.lit(True))
-        out = (
-            out.join(f, _KEY, "left")
-            .withColumn(
-                "retries",
-                F.when(F.col("_failed"), F.col("retries") + 1).otherwise(F.col("retries")),
-            )
-            .withColumn(
-                "status",
-                F.when(
-                    F.col("_failed"),
-                    F.when(F.col("retries") >= MAX_RETRIES, "error").otherwise("pending"),
-                ).otherwise(F.col("status")),
-            )
-            .drop("_failed")
-        )
+        retries = F.col("retries") + 1
+        out = _set_where(out, failed.select(*_KEY), {
+            "retries": retries,
+            "status": F.when(retries >= MAX_RETRIES, "error").otherwise("pending")})
     if deactivated is not None:
-        x = deactivated.select(*_KEY).withColumn("_gone", F.lit(True))
-        out = (
-            out.join(x, _KEY, "left")
-            .withColumn("is_active", F.when(F.col("_gone"), F.lit(False)).otherwise(F.col("is_active")))
-            .withColumn("status", F.when(F.col("_gone"), "done").otherwise(F.col("status")))
-            .drop("_gone")
-        )
+        out = _set_where(out, deactivated.select(*_KEY),
+                         {"is_active": F.lit(False), "status": F.lit("done")})
+    if requeued is not None:
+        out = _set_where(
+            out, requeued.select(*_KEY, F.col("schema_map").alias("_map")),
+            {"is_active": F.lit(True), "is_manual": F.lit(True),
+             "status": F.lit("pending"), "retries": F.lit(0),
+             "schema_map": F.col("_map")})
     return out
+
+
+def _set_where(frontier: DataFrame, hits: DataFrame, sets: dict) -> DataFrame:
+    """``frontier`` with each ``sets`` column replaced by its value on the
+    rows whose key is in ``hits``. The values read ``frontier``'s columns
+    as they were, and any extra ``hits`` column, which is then dropped."""
+    extra = [c for c in hits.columns if c not in _KEY]
+    return (
+        frontier.join(hits.withColumn("_hit", F.lit(True)), _KEY, "left")
+        .withColumns({c: F.when(F.col("_hit"), v).otherwise(F.col(c))
+                      for c, v in sets.items()})
+        .drop("_hit", *extra)
+    )

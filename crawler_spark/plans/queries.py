@@ -393,7 +393,7 @@ GROUP BY r_name, n_name
 
 
 def q_windowed_events(spark, sf_dir):
-    """Tumbling-window aggregation (batch twin of the streaming path)."""
+    """Tumbling-window aggregation: hourly counts and sums per event type."""
     events = _t(spark, sf_dir, "events")
     return (
         events.groupBy(

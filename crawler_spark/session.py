@@ -59,6 +59,12 @@ def build_session(
         # below this cap (bucket-aligned repartitions), so the sort fallback
         # never triggers.
         .config("spark.sql.maxConcurrentOutputFileWriters", "16")
+        # A bucketed read passes one path per chain link, and past this many
+        # paths (Spark's default: 32) Spark lists them with a Spark job,
+        # pinned schema or not. The store's largest read at the default
+        # config is the whole documents table: num_partitions=32 buckets ×
+        # (MAX_DELTAS + 1) = 288 links.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -48,6 +48,7 @@ import json
 import os
 import shutil
 import time
+from collections import Counter
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -497,18 +498,19 @@ class SnapshotStore:
         A column missing statistics is reported as ``None`` (unknown)."""
         return parquet_null_counts(self.root / "scratch" / name, cols)
 
-    def scratch_column_values(self, name: str, col: str) -> set:
-        """Distinct values of one (small, e.g. bucket-id) column of a scratch
-        table — pyarrow column read, driver-side, no Spark job. Used to
-        shrink an epoch's bucket-replace write set to the buckets that
-        actually changed."""
+    def scratch_column_values(self, name: str, col: str) -> Counter:
+        """Each value of one (small, e.g. bucket-id or tag) column of a
+        scratch table with its row count — pyarrow column read, driver-side,
+        no Spark job. This is how the engine learns the buckets a pinned
+        change touches and how many rows of each kind it holds."""
         import pyarrow.parquet as pq
 
-        vals: set = set()
+        counts = Counter()
         for f in (self.root / "scratch" / name).glob("*.parquet"):
-            vals.update(pq.read_table(str(f), columns=[col])
-                        .column(col).unique().to_pylist())
-        return vals
+            vc = pq.read_table(str(f), columns=[col]).column(col).value_counts()
+            counts.update(dict(zip(vc.field("values").to_pylist(),
+                                   vc.field("counts").to_pylist())))
+        return counts
 
     def buckets_with_nulls(
         self, name: str, col: str, only: list[int] | None = None
@@ -581,9 +583,6 @@ class SnapshotStore:
                 _sweep(table_root, int(current), {int(current)})
         for stage in self.root.glob("*/stage-*"):
             shutil.rmtree(stage, ignore_errors=True)
-
-    def destroy(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
 
 
 def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:

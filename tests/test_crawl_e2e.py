@@ -999,11 +999,11 @@ def test_crash_around_documents_write_resumes(
     assert_matches_oracle(got, pages_b)
 
 
-#: Spark jobs of the working re-crawl epoch below, as measured. The touched
-#: doc buckets come from the diff scratch driver-side, a documents delta
-#: reads no old docs, and every store read passes its pinned schema, so none
-#: of them costs a job.
-WORKING_EPOCH_JOBS = 49
+#: Spark jobs of the working re-crawl epoch below, as measured. The
+#: selection's size and touched hosts and the touched doc buckets come from
+#: scratch columns driver-side, a documents delta reads no old docs, and
+#: every store read passes its pinned schema, so none of them costs a job.
+WORKING_EPOCH_JOBS = 47
 
 
 def test_working_epoch_job_budget(spark, tmp_path, small_corpus):
@@ -1028,8 +1028,9 @@ def test_working_epoch_job_budget(spark, tmp_path, small_corpus):
     assert jobs <= WORKING_EPOCH_JOBS, f"working epoch ran {jobs} Spark jobs"
 
 
-#: Spark jobs of a first ``discover(0)`` on the small corpus, as measured
-COLD_DISCOVER_JOBS = 18
+#: Spark jobs of a first ``discover(0)`` on the small corpus, as measured;
+#: the counts and touched hosts come from the pinned diff's columns
+COLD_DISCOVER_JOBS = 16
 
 
 def test_cold_discover_job_budget(spark, tmp_path, small_corpus):
@@ -1048,6 +1049,72 @@ def test_cold_discover_job_budget(spark, tmp_path, small_corpus):
     jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
     assert added_removed == (N_SITES * CHUNKS, 0)
     assert jobs <= COLD_DISCOVER_JOBS, f"cold discover ran {jobs} Spark jobs"
+
+
+def _discovered(spark, tmp_path, small_corpus):
+    """An engine over the small corpus after its first ``discover``, and the
+    frames that add one file of site 0 and remove one of site 1."""
+    pages, seeds = small_corpus
+    engine = build_engine(spark, tmp_path, pages)
+    engine.bootstrap(seeds)
+    engine.discover(0)
+    add = spark.createDataFrame(
+        [{"site_url": site_host(0), "user_id": USER,
+          "file_url": chunk_url(0, 1), "schema_map": "manual"}])
+    remove = spark.createDataFrame([{"file_url": chunk_url(1, 0), "user_id": USER}])
+    return engine, add, remove
+
+
+def test_manual_file_ops_read_only_their_hosts(spark, tmp_path, small_corpus):
+    """``add_manual_files`` and ``remove_manual_files`` never read the whole
+    frontier: a spy on the store instance sees each read only both status
+    families of its keys' host buckets."""
+    engine, add, remove = _discovered(spark, tmp_path, small_corpus)
+    p = engine.cfg.num_partitions
+    host = {r["file_url"]: r["host_hash"] for r in engine.frontier().collect()}
+    reads = []
+    real = engine.store.read_buckets
+
+    def spy(spark_, name, *args, **kwargs):
+        if name == "frontier":
+            only = kwargs.get("only", args[0] if args else None)
+            reads.append(None if only is None else sorted(only))
+        return real(spark_, name, *args, **kwargs)
+    engine.store.read_buckets = spy
+
+    engine.add_manual_files(add, 1)
+    engine.remove_manual_files(remove, 1)
+    h_add, h_rm = host[chunk_url(0, 1)], host[chunk_url(1, 0)]
+    assert reads == [[h_add, h_add + p], [h_rm, h_rm + p]]
+
+    engine.store.read_buckets = real
+    rows = {(r["file_url"], r["job_type"]): r for r in engine.frontier().collect()}
+    added = rows[(chunk_url(0, 1), "process_file")]
+    assert added["is_manual"] and added["is_active"] and added["status"] == "pending"
+    assert not rows[(chunk_url(1, 0), "process_file")]["is_active"]
+    assert rows[(chunk_url(1, 0), "process_removed_file")]["status"] == "pending"
+
+
+#: Spark jobs of adding one file and of removing one on the discovered small
+#: corpus, as measured. The engine that read the whole frontier and
+#: collected the touched hosts off a join ran 8 and 7.
+MANUAL_ADD_JOBS = 5
+MANUAL_REMOVE_JOBS = 6
+
+
+def test_manual_file_ops_job_budget(spark, tmp_path, small_corpus):
+    """Adding one file and removing one launch at most ``MANUAL_ADD_JOBS``
+    and ``MANUAL_REMOVE_JOBS`` Spark jobs, counted with ``statusTracker``."""
+    engine, add, remove = _discovered(spark, tmp_path, small_corpus)
+    tracker = spark.sparkContext.statusTracker()
+    counts = []
+    for op, frame in ((engine.add_manual_files, add),
+                      (engine.remove_manual_files, remove)):
+        before = set(tracker.getJobIdsForGroup(None))
+        op(frame, 1)
+        counts.append(len(set(tracker.getJobIdsForGroup(None)) - before))
+    assert counts[0] <= MANUAL_ADD_JOBS, f"add ran {counts[0]} Spark jobs"
+    assert counts[1] <= MANUAL_REMOVE_JOBS, f"remove ran {counts[1]} Spark jobs"
 
 
 def test_spread_churn_writes_only_new_docs(spark, tmp_path):

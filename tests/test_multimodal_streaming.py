@@ -1,22 +1,12 @@
-"""Multimodal binary-column plumbing + Structured Streaming operators."""
+"""Multimodal binary-column plumbing (``operators/multimodal.py``)."""
 
 from __future__ import annotations
-
-import time
-
-from pyspark.sql import functions as F
 
 from crawler_spark.operators.multimodal import (
     decode_image_features,
     encode_stub_image,
     frame_sample_plan,
 )
-from crawler_spark.streaming.events import (
-    deduped_stream,
-    stream_events_from_dir,
-    windowed_event_counts,
-)
-from crawler_spark.streaming.sessions import sessionize_stream
 
 
 def test_image_decode_plumbing(spark):
@@ -76,304 +66,3 @@ def test_frame_sampling_plan(spark):
     frames = frame_sample_plan(vids, every_n=10).collect()
     got = {(r["key"], r["frame_idx"]) for r in frames}
     assert got == {("v1", 0), ("v1", 10), ("v1", 20), ("v2", 0)}
-
-
-def test_streaming_windowed_counts(spark, sf_dir, tmp_path):
-    """The same transformation runs batch and streaming with equal results."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    batch = windowed_event_counts(events)
-    want = {tuple(r) for r in batch.collect()}
-
-    src_dir = tmp_path / "stream_src"
-    events.write.mode("overwrite").parquet(str(src_dir))
-    stream = stream_events_from_dir(spark, str(src_dir), events.schema)
-    assert stream.isStreaming
-    out = windowed_event_counts(stream)
-
-    query = (
-        out.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(120)
-    got = {tuple(r) for r in spark.sql("SELECT * FROM win_counts").collect()}
-    assert got == want
-
-
-def test_streaming_dedup(spark, sf_dir, tmp_path):
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").limit(500)
-    doubled = events.unionByName(events)
-    src = tmp_path / "dedup_src"
-    doubled.write.mode("overwrite").parquet(str(src))
-
-    stream = stream_events_from_dir(spark, str(src), events.schema)
-    query = (
-        deduped_stream(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(120)
-    n = spark.sql("SELECT count(DISTINCT event_id) c, count(*) n FROM dedup_out").first()
-    assert n["c"] == n["n"] == 500
-
-
-class _FakeState:
-    """Minimal GroupState stand-in to drive the sessionizer fold directly —
-    deterministic control over timeouts/watermarks that a live streaming
-    query can't give a test."""
-
-    def __init__(self):
-        self._value = None
-        self.hasTimedOut = False
-        self.timeout_ms = None
-        self.watermark_ms = 0
-        self.removed = False
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        return self._value
-
-    def update(self, v):
-        self._value = tuple(v)
-        self.removed = False
-
-    def remove(self):
-        self._value = None
-        self.removed = True
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_ms = ms
-
-    def getCurrentWatermarkMs(self):
-        return self.watermark_ms
-
-
-def _events_pdf(ts_us_list):
-    import pandas as pd
-
-    return pd.DataFrame({
-        "event_id": list(range(len(ts_us_list))),
-        "user_id": [7] * len(ts_us_list),
-        "ts": [pd.Timestamp(us, unit="us", tz="UTC") for us in ts_us_list],
-    })
-
-
-def test_session_seq_survives_timeout_in_dataless_batch():
-    """ADVICE r3 (medium): a >gap quiet period spanning 2+ micro-batches
-    used to state.remove() on timeout, restarting session_seq at 1 and
-    emitting duplicate (user_id, session_seq) keys. The tombstone keeps the
-    counter: the post-quiet session must be seq=2."""
-    from crawler_spark.streaming.sessions import make_sessionizer
-
-    gap = 1_000_000  # 1s
-    fold = make_sessionizer(gap_us=gap, tombstone_ttl_us=100 * gap)
-    st = _FakeState()
-
-    # batch 1: one session [t0, t0+0.5s]
-    out1 = list(fold((7,), iter([_events_pdf([0, 500_000])]), st))
-    assert sum(len(o) for o in out1) == 0  # session still open
-
-    # data-less batch: the timeout fires, closing session 1
-    st.hasTimedOut = True
-    st.watermark_ms = 10_000
-    out2 = list(fold((7,), iter([]), st))
-    rows2 = [r for o in out2 for r in o.to_dict("records")]
-    assert [(r["session_seq"], r["n_events"]) for r in rows2] == [(1, 2)]
-    assert st.exists and st.get[1] == 0  # tombstone, counter kept
-    assert st.timeout_ms is not None  # secondary TTL armed
-
-    # the user returns: next session must be seq=2, not a duplicate seq=1
-    st.hasTimedOut = False
-    out3 = list(fold((7,), iter([_events_pdf([20_000_000])]), st))
-    assert sum(len(o) for o in out3) == 0
-    assert st.get[0] == 2 and st.get[1] == 1
-
-    # close it via timeout too: emitted row is (seq=2)
-    st.hasTimedOut = True
-    rows4 = [r for o in fold((7,), iter([]), st) for r in o.to_dict("records")]
-    assert [(r["session_seq"], r["n_events"]) for r in rows4] == [(2, 1)]
-
-
-def test_session_tombstone_ttl_evicts_state():
-    from crawler_spark.streaming.sessions import make_sessionizer
-
-    gap = 1_000_000
-    fold = make_sessionizer(gap_us=gap, tombstone_ttl_us=5 * gap)
-    st = _FakeState()
-    list(fold((7,), iter([_events_pdf([0])]), st))
-    st.hasTimedOut = True
-    list(fold((7,), iter([]), st))  # close → tombstone
-    assert st.exists and st.get[1] == 0
-    list(fold((7,), iter([]), st))  # TTL timeout → evicted
-    assert st.removed and not st.exists
-
-
-def test_session_straggler_older_than_open_session():
-    """Cross-batch straggler OLDER than the open session's last event is
-    counted into the open session (docstring trade, sessions.py): it must
-    not reorder or duplicate anything, and session_end stays at the max."""
-    from crawler_spark.streaming.sessions import make_sessionizer
-
-    gap = 1_000_000
-    fold = make_sessionizer(gap_us=gap)
-    st = _FakeState()
-    list(fold((7,), iter([_events_pdf([1_000_000, 1_500_000])]), st))
-    # straggler at t=0.8s — older than last_event=1.5s but within gap
-    list(fold((7,), iter([_events_pdf([800_000])]), st))
-    seq, n, start_us, last_us = st.get
-    assert (seq, n) == (1, 3)
-    assert last_us == 1_500_000  # end not dragged backwards
-
-
-def test_session_straggler_spanning_closed_session():
-    """A straggler arriving AFTER its session was already closed in-data
-    (it is >gap older than the open session's last event) starts/joins the
-    CURRENT session rather than resurrecting the closed one — closed
-    sessions are immutable once emitted (the watermark trade)."""
-    from crawler_spark.streaming.sessions import make_sessionizer
-
-    gap = 1_000_000
-    fold = make_sessionizer(gap_us=gap)
-    st = _FakeState()
-    # batch 1: events at 0s and 5s → session 1 [0,0] closes in-data,
-    # session 2 opens at 5s
-    out1 = [r for o in fold((7,), iter([_events_pdf([0, 5_000_000])]), st)
-            for r in o.to_dict("records")]
-    assert [(r["session_seq"], r["n_events"]) for r in out1] == [(1, 1)]
-    # batch 2: straggler at 0.5s — belongs to closed session 1 by time, but
-    # that session is immutable; it folds into open session 2
-    out2 = [r for o in fold((7,), iter([_events_pdf([500_000])]), st)
-            for r in o.to_dict("records")]
-    assert out2 == []  # nothing re-emitted
-    seq, n, start_us, last_us = st.get
-    assert (seq, n, last_us) == (2, 2, 5_000_000)
-
-
-def test_streaming_sessionize_sandwich(spark, sf_dir, tmp_path):
-    """applyInPandasWithState sessionizer vs the batch twin.
-
-    Events are replayed in order across several micro-batches. Every
-    non-final session per user is closed IN-DATA by a later event, so the
-    emitted set must contain all of them; each user's open tail session can
-    only be emitted by a watermark timeout (which needs a subsequent batch),
-    so the emitted set is sandwiched:
-
-        batch_sessions − final_per_user  ⊆  emitted  ⊆  batch_sessions
-    """
-    from crawler_spark.plans.queries import q_sessionize_events
-
-    batch = q_sessionize_events(spark, sf_dir).collect()
-    want = {
-        (r["user_id"], r["session_seq"]):
-            (r["n_events"], r["session_start"], r["session_end"])
-        for r in batch
-    }
-    finals = {}
-    for uid, seq in want:
-        finals[uid] = max(finals.get(uid, 0), seq)
-    must_emit = {k for k in want if k[1] != finals[k[0]]}
-
-    # replay in event order over 4 sequential files, one file per trigger
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pdf = events.orderBy("ts", "event_id").toPandas()
-    src = tmp_path / "sess_src"
-    src.mkdir()
-    quarter = (len(pdf) + 3) // 4
-    for i in range(4):
-        chunk = pdf.iloc[i * quarter:(i + 1) * quarter]
-        chunk.to_parquet(str(src / f"part{i:02d}.parquet"), index=False,
-                         coerce_timestamps="us")
-        time.sleep(0.05)  # distinct mtimes → deterministic file order
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    query = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(180)
-    got = {
-        (r["user_id"], r["session_seq"]):
-            (r["n_events"], r["session_start"], r["session_end"])
-        for r in spark.sql("SELECT * FROM sessions_out").collect()
-    }
-
-    assert set(got) <= set(want), f"phantom sessions: {set(got) - set(want)}"
-    assert must_emit <= set(got), f"missing closed sessions: {must_emit - set(got)}"
-    for k in got:
-        assert got[k] == want[k], f"session {k}: {got[k]} != {want[k]}"
-
-
-def test_streaming_quiet_period_spans_dataless_batches(spark, tmp_path):
-    """r4 verdict #8, end-to-end: user A's session closes by TIMEOUT in a
-    micro-batch that carries no A data, the tombstone then survives a
-    further data-less batch, and A's next event continues session_seq at 2
-    — all through a real applyInPandasWithState stream, not the fold alone.
-    User B supplies the events that advance the watermark while A is quiet.
-    """
-    import pandas as pd
-
-    def ev(eid, uid, minute):
-        return {"event_id": eid, "user_id": uid,
-                "ts": pd.Timestamp(2026, 1, 1, 0, minute, 0)}
-
-    files = [
-        # A: two events 30 s apart (one session); B anchors the watermark
-        [ev(1, 1, 0), {"event_id": 2, "user_id": 1,
-                       "ts": pd.Timestamp(2026, 1, 1, 0, 0, 30)}, ev(3, 2, 0)],
-        [ev(4, 2, 5)],    # wm -> 00:00:30: A open, quiet batch 1
-        [ev(5, 2, 10)],   # wm -> 00:05: A times out HERE (no A data)
-        [ev(6, 2, 12)],   # wm -> 00:10: tombstone rides a 2nd quiet batch
-        [ev(7, 1, 15), ev(8, 2, 15)],   # A returns: must open seq 2
-        [ev(9, 2, 40)],   # wm -> 00:15
-        [ev(10, 2, 50)],  # wm -> 00:40 > 00:16: emits A session 2
-    ]
-    src = tmp_path / "quiet_src"
-    src.mkdir()
-    for i, rows in enumerate(files):
-        pd.DataFrame(rows).to_parquet(str(src / f"f{i:02d}.parquet"),
-                                      index=False, coerce_timestamps="us")
-        time.sleep(0.05)
-
-    schema = "event_id long, user_id long, ts timestamp"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    query = (
-        sessionize_stream(stream, gap_us=60_000_000)  # 1-minute gap
-        .writeStream.format("memory")
-        .queryName("quiet_sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(180)
-    got = {(r["user_id"], r["session_seq"]): (r["n_events"],
-                                              r["session_start"].minute,
-                                              r["session_end"].second)
-           for r in spark.sql(
-               "SELECT * FROM quiet_sessions WHERE user_id = 1").collect()}
-    assert (1, 1) in got and got[(1, 1)] == (2, 0, 30), got
-    assert (1, 2) in got, (
-        f"session_seq reset across the quiet period: {got}")
-    assert got[(1, 2)][0] == 1 and got[(1, 2)][1] == 15
-    assert set(got) == {(1, 1), (1, 2)}, f"phantom/duplicate sessions: {got}"

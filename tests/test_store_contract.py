@@ -406,8 +406,10 @@ def test_reads_launch_no_spark_job(spark, make_store, tmp_path):
     """Every kind of table reads with the schema pinned at its first write:
     building the frame launches no Spark job (an inferred parquet read
     launches one to read a footer) and returns the pinned schema. This
-    holds for delete-key files too, and for ``materialize``, whose read-back
-    adds no job to its write."""
+    holds for delete-key files too, for a read over more chain directories
+    than Spark lists on the driver by default (32; the session raises the
+    threshold), and for ``materialize``, whose read-back adds no job to its
+    write."""
     store = make_store()
     df = _df(spark, [(h, f"k{h}{i}", i) for h in (0, 1) for i in range(3)])
     store.commit(0, {
@@ -420,12 +422,17 @@ def test_reads_launch_no_spark_job(spark, make_store, tmp_path):
         deletes=_keys(spark, [(0, "k00")]))})
     assert (store.root / "d" / "b00000" / "v1" / DELETES_DIR).is_dir()
     store.append(df, "m", "000000")
+    # more chain directories than Spark lists without a job by default (32)
+    many = list(range(40))
+    store.commit(2, {"many": store.replace_buckets(
+        _df(spark, [(h, f"k{h}", h) for h in many]), "many", many)})
 
     reads = {
         "write": lambda: store.read(spark, "w"),
         "replace_buckets": lambda: store.read(spark, "b"),
         "task write with delete keys": lambda: store.read(spark, "d"),
         "empty buckets": lambda: store.read_buckets(spark, "b", only=[7]),
+        "40 chain directories": lambda: store.read_buckets(spark, "many"),
         "append": lambda: store.read_appended(spark, "m"),
     }
     for what, read in reads.items():
