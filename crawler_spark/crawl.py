@@ -10,10 +10,11 @@ driver loop that each iteration
    maintains the frontier incrementally via two anti-joins (J1/J2);
 2. **selects** pending work within per-host politeness budgets (salted
    two-phase top-k, see ``operators/politeness.py``);
-3. **fetches** via the ``pages`` table stand-in for HTTP — S1: the small
-   selected-job list broadcasts into an inner join so page BODIES never
-   shuffle, with 404 markers from a url-only anti-join (a real deployment
-   swaps this for a ``mapInPandas`` HTTP kernel with identical columns);
+3. **fetches** the selected files through the engine's one fetch stage
+   (S1, ``sources/http_fetch.py``), the same one discovery reads robots.txt
+   and sitemaps with: the ``mapInPandas`` HTTP kernel, or the ``pages``
+   table stand-in, whose job list broadcasts into an inner join so page
+   BODIES never shuffle, with 404 markers from a url-only anti-join;
 4. **extracts** JSON-LD objects (Arrow-batched ``mapInPandas``, within-file
    id dedup inside the kernel — U1), diffs ids against the URL-seen set
    (the touched buckets' persisted Bloom blobs pre-filter, the exact
@@ -61,7 +62,8 @@ from crawler_spark.functions.sitemap import (
 )
 from crawler_spark.operators import frontier as fr
 from crawler_spark.operators import politeness, seen
-from crawler_spark.schema import DOCUMENTS, FRONTIER, REFCOUNTS, URL_SEEN
+from crawler_spark.schema import DOCUMENTS, FRONTIER, REFCOUNTS, ROBOTS, URL_SEEN
+from crawler_spark.sources.http_fetch import pages_fetcher
 from crawler_spark.sources.tables import SnapshotStore, empty_frame
 
 
@@ -103,17 +105,17 @@ class CrawlEngine:
         config: CrawlConfig | None = None,
         fetcher=None,
     ):
-        """``fetcher``: optional production fetch stage — a callable
-        ``jobs_df -> DataFrame`` with :data:`crawler_spark.sources.
-        http_fetch.FETCHED_SCHEMA` columns (e.g. ``functools.partial(
-        fetch_pages, transport_factory=...)``). ``None`` keeps the
-        deterministic pages-join stand-in."""
+        """``fetcher``: the fetch stage every page read goes through —
+        robots.txt, sitemaps and the selected files. A callable from job
+        rows ``(file_url, user_id, site_url, queued_at[, crawl_delay_s])``
+        to :data:`crawler_spark.sources.http_fetch.FETCHED_SCHEMA` rows, one
+        per job (e.g. ``functools.partial(fetch_pages, transport_factory=
+        ...)``). ``None`` fetches from ``pages`` with the deterministic
+        :func:`~crawler_spark.sources.http_fetch.pages_fetcher`."""
         self.spark = spark
         self.store = store
         self.cfg = config or CrawlConfig()
-        self._fetcher = fetcher
-        # Column-pruned page projection; bodies only where needed.
-        self._page_bodies = pages.select("url", "html")
+        self._fetch = fetcher or pages_fetcher(pages)
         # A store's layout is pinned in its meta at bootstrap: the bucket
         # modulus every bucketed table is split by, and the pre-filter kind
         # whose blobs cover every url_seen bucket that holds rows. Opening a
@@ -221,6 +223,12 @@ class CrawlEngine:
             return empty_frame(self.spark, DOCUMENTS)
         return self.store.read(self.spark, "documents")
 
+    def _robots(self) -> DataFrame:
+        """The per-host robots table; empty before the first discover."""
+        if not self.store.exists("robots"):
+            return empty_frame(self.spark, ROBOTS)
+        return self.store.read(self.spark, "robots")
+
     def _write_documents(self, new_docs: DataFrame, orphans: DataFrame,
                          touched_docs: list[int]) -> dict:
         """The one documents write, shared by the epoch and ``delete_site``:
@@ -250,30 +258,15 @@ class CrawlEngine:
     # discovery (lifecycle 3.1 / 3.3)
     # ------------------------------------------------------------------
 
-    def _due_seeds(self, epoch: int) -> DataFrame:
-        """F5: last_processed IS NULL OR last_processed + interval <= now(epoch)."""
+    @staticmethod
+    def _is_due(epoch: int):
+        """F5, over seeds rows: active AND (last_processed IS NULL OR
+        last_processed + interval <= now(epoch))."""
         now = F.lit(fr.epoch_ts(epoch)).cast("timestamp")
-        return self.store.read(self.spark, "seeds").filter(
-            F.col("is_active")
-            & (
-                F.col("last_processed").isNull()
-                | (F.col("last_processed") + F.make_interval(hours=F.col("interval_hours")) <= now)
-            )
+        return F.col("is_active") & (
+            F.col("last_processed").isNull()
+            | (F.col("last_processed") + F.make_interval(hours=F.col("interval_hours")) <= now)
         )
-
-    def _with_bodies(self, df: DataFrame, url_col: str) -> DataFrame:
-        """``df`` plus the ``html`` body of the page at its ``url_col`` url
-        (null where the pages table has none). Shaped like the epoch's
-        fetch: a semi join keeps the pages scan in place and passes only the
-        bodies ``df`` asks for, and a left join brings them back to ``df``'s
-        rows. A left join straight onto the pages table would make the
-        planner hash the whole table, every body included. No broadcast
-        hint: ``df`` comes from the seeds table or pinned scratch, so the
-        planner knows its size, broadcasts it while small and shuffles at
-        scale."""
-        pages = self._page_bodies.withColumnRenamed("url", url_col)
-        found = pages.join(df.select(url_col), url_col, "left_semi")
-        return df.join(found, url_col, "left")
 
     def discover(self, epoch: int) -> tuple[int, int]:
         """Maintain the frontier from due sites' sitemaps. Returns (added, removed).
@@ -284,37 +277,42 @@ class CrawlEngine:
         columns give the touched hosts and the counts, and which the
         frontier sink reads."""
         cfg = self.cfg
-        due = self._due_seeds(epoch).select("site_url", "user_id")
+        seeds_df = self.store.read(self.spark, "seeds")
+        due = seeds_df.filter(self._is_due(epoch)).select("site_url", "user_id")
         if due.isEmpty():
             return 0, 0
+        now = F.lit(fr.epoch_ts(epoch))
 
-        # robots.txt fetch → schemaMap directives and Crawl-delay (S2)
-        robots = self.store.materialize(self.spark, (
-            self._with_bodies(due.withColumn("robots_url", _https(
-                F.concat(F.col("site_url"), F.lit("/robots.txt")))), "robots_url")
-            .withColumn("site_base", _https(F.col("site_url")))
-            .select("site_url", "user_id", "site_base",
-                    robots_schema_maps_udf("html", "site_base").alias("schema_maps"),
-                    robots_crawl_delay_udf("html").alias("crawl_delay"))
+        # Both fetches are coalesced (narrow, no job) to num_partitions: a
+        # fetch's output keeps its fetcher's partitioning, which for the
+        # pages stand-in is the whole pages scan, so without it the parse
+        # UDFs would run a task per pages split and the robots pin would
+        # hold a file, thus a task on every read, per split.
+        # robots.txt fetch (one job per due site) → schemaMap directives and
+        # Crawl-delay (S2)
+        robots = self.store.materialize(self.spark, self._fetch(due.select(
+            _https(F.concat(F.col("site_url"), F.lit("/robots.txt"))).alias("file_url"),
+            "user_id", "site_url", now.alias("queued_at"),
+        )).coalesce(cfg.num_partitions).select(
+            "site_url", "user_id",
+            robots_schema_maps_udf("html", _https(F.col("site_url"))).alias("schema_maps"),
+            robots_crawl_delay_udf("html").alias("crawl_delay"),
         ), "discover_robots")
 
-        # fallback chain (S4): no robots directives → <site>/schema_map.xml
-        maps = robots.select(
-            "site_url",
-            "user_id",
-            "site_base",
-            F.explode(
-                F.when(
-                    F.size("schema_maps") > 0, F.col("schema_maps")
-                ).otherwise(F.array(F.concat(F.col("site_base"), F.lit("/schema_map.xml"))))
-            ).alias("schema_map"),
-        ).distinct()  # U2: unique schema maps per site
+        # fallback chain (S4): no robots directives → <site>/schema_map.xml;
+        # U2: unique schema maps per site
+        maps = robots.select("site_url", "user_id", F.explode(
+            F.when(F.size("schema_maps") > 0, F.col("schema_maps")).otherwise(
+                F.array(_https(F.concat(F.col("site_url"), F.lit("/schema_map.xml")))))
+        ).alias("file_url"), now.alias("queued_at")).distinct()
 
-        # sitemap fetch + parse (S3) → candidate file urls
+        # sitemap fetch (one job per (site, user, schema map)) + parse (S3)
+        # → candidate file urls
         candidates = self.store.materialize(self.spark, (
-            self._with_bodies(maps, "schema_map")
-            .select("site_url", "user_id", "schema_map", F.explode(
-                parse_sitemap_udf("html", "site_base")).alias("file_url"))
+            self._fetch(maps).coalesce(cfg.num_partitions)
+            .select("site_url", "user_id", F.col("file_url").alias("schema_map"),
+                    F.explode(parse_sitemap_udf("html", _https(F.col("site_url"))))
+                    .alias("file_url"))
             .dropDuplicates(["file_url", "user_id"])  # U4
         ), "discover_candidates")
 
@@ -342,20 +340,23 @@ class CrawlEngine:
             deactivated=diff.filter(F.col("_t") == 2),
         ).unionByName(diff.filter(F.col("_t") < 2).drop("_t"))
 
-        # stamp last_processed on discovered seeds (scheduler.py:21-30 analogue)
-        seeds_df = self.store.read(self.spark, "seeds")
-        stamped = (
-            seeds_df.join(due.withColumn("_hit", F.lit(True)),
-                          ["site_url", "user_id"], "left")
-            .withColumn(
-                "last_processed",
-                F.when(F.col("_hit"), F.lit(fr.epoch_ts(epoch))).otherwise(F.col("last_processed")),
-            )
-            .drop("_hit")
-        )
-        robots_state = robots.select(
+        # stamp last_processed on discovered seeds (scheduler.py:21-30
+        # analogue): the due rows are the ones the F5 predicate holds for
+        stamped = seeds_df.withColumn("last_processed", F.when(
+            self._is_due(epoch), now).otherwise(F.col("last_processed")))
+        # one robots row per host: the due hosts' fresh rows replace their
+        # old ones, and every other host keeps its current row (a site
+        # shared by several users is one host, and a partial discover must
+        # not drop the hosts it did not visit)
+        fresh = robots.select(
             F.col("site_url").alias("host"), "schema_maps", "crawl_delay",
-            F.lit(fr.epoch_ts(epoch)).alias("fetched_at"))
+            now.alias("fetched_at"), F.lit(1).alias("_fresh"))
+        robots_state = (
+            fresh.unionByName(self._robots().withColumn("_fresh", F.lit(0)))
+            .groupBy("host")
+            .agg(F.max_by(F.struct("schema_maps", "crawl_delay", "fetched_at"),
+                          "_fresh").alias("_row"))
+            .select("host", "_row.*"))
         # three independent sinks over pinned inputs → one concurrent round
         with ThreadPoolExecutor(max_workers=3) as pool:
             f_frontier = pool.submit(self._write_frontier, updated, touched)
@@ -539,15 +540,11 @@ class CrawlEngine:
         # steady state, are pruned by path, not by filter
         pending = self.pending_frontier()
 
-        robots = (
-            self.store.read(self.spark, "robots").select("host", "crawl_delay")
-            if self.store.exists("robots") else None
-        )
         # politeness selection: budget applies to the *site host*; file hosts
         # equal site hosts in this corpus but we key on the row's host column.
         selected = politeness.select_within_budget(
-            pending, robots, cfg.per_host_budget, cfg.salt_buckets, cfg.epoch_window_s
-        )
+            pending, self._robots(), cfg.per_host_budget, cfg.salt_buckets,
+            cfg.epoch_window_s)
         selected = politeness.salted_repartition(selected, cfg.num_partitions, cfg.salt_buckets)
         # pin the selection to scratch (not cache): several downstream plans
         # reference it, and a flat parquet read keeps their analyzed trees
@@ -575,49 +572,13 @@ class CrawlEngine:
         # extracted text (the scratch) is pinned, and every downstream sink
         # derives from it. Fetch failures flow through the same pass as
         # marker rows carrying real status_code/fetch_error, so no second
-        # pass or anti-join reconstructs them.
-        jobs_cols = fetch_jobs.select("file_url", "user_id", "site_url", "queued_at")
-        if self._fetcher is not None:
-            # thread robots Crawl-delay to the HTTP kernel so it can space
-            # same-host requests WITHIN the epoch (the budget only caps the
-            # count per window; sources/http_fetch.py does the pacing)
-            if robots is not None:
-                jobs_cols = (
-                    fetch_jobs.join(F.broadcast(robots), "host", "left")
-                    .select("file_url", "user_id", "site_url", "queued_at",
-                            F.col("crawl_delay").cast("double")
-                            .alias("crawl_delay_s")))
-            fetched = self._fetcher(jobs_cols)  # FETCHED_SCHEMA, real HTTP
-        else:
-            # deterministic pages-join stand-in: missing url ⇒ a 404.
-            # Shaped so page BODIES never shuffle: a plain left join from
-            # jobs would sort/exchange the html mass (the outer side of a
-            # left join cannot be broadcast), so instead the small job list
-            # broadcasts into an inner join that leaves the bodies scan in
-            # place, and the 404 markers come from an anti-join that moves
-            # only url strings. The epoch's selection is politeness-bounded
-            # (a working set, not the corpus), which is what makes the
-            # broadcast legitimate; the production path is the mapInPandas
-            # HTTP kernel, which joins nothing at all.
-            html_t = dict(self._page_bodies.dtypes)["html"]
-            ok = (
-                self._page_bodies.withColumnRenamed("url", "file_url")
-                .join(F.broadcast(jobs_cols), "file_url")
-                .withColumn("status_code", F.lit(200))
-                .withColumn("fetch_error", F.lit(None).cast("string"))
-            )
-            missing = (
-                jobs_cols.join(
-                    self._page_bodies.select(F.col("url").alias("file_url")),
-                    "file_url", "left_anti")
-                .withColumn("html", F.lit(None).cast(html_t))
-                .withColumn("status_code", F.lit(404))
-                .withColumn(
-                    "fetch_error",
-                    F.concat(F.lit("HTTP 404: "), F.col("file_url"),
-                             F.lit(" not available in source")))
-            )
-            fetched = ok.unionByName(missing)
+        # pass or anti-join reconstructs them. The selection carries each
+        # host's robots Crawl-delay, which the HTTP kernel paces same-host
+        # requests by WITHIN the epoch (the budget only caps the count per
+        # window).
+        fetched = self._fetch(fetch_jobs.select(
+            "file_url", "user_id", "site_url", "queued_at",
+            F.col("crawl_delay").alias("crawl_delay_s")))
         extracted_raw = (
             fetched.select("file_url", F.col("html").alias("body"),
                            "user_id", "site_url", "queued_at",

@@ -51,26 +51,24 @@ def effective_budget(default_budget: int, epoch_window_s: float = 60.0):
 
 def select_within_budget(
     pending: DataFrame,
-    robots: DataFrame | None,
+    robots: DataFrame,
     default_budget: int,
     salt_buckets: int = 16,
     epoch_window_s: float = 60.0,
 ) -> DataFrame:
     """The pending frontier rows selected for this epoch.
 
-    ``robots`` is the small (host, crawl_delay) politeness table — broadcast.
+    ``robots`` is the small (host, crawl_delay) politeness table — one row
+    per host, broadcast. The selected rows keep its ``crawl_delay`` column
+    (null where the host has none), which the fetch stage paces by.
     Rows not selected stay ``pending`` and compete again next epoch with
     their original ``queued_at`` (FIFO fairness preserved).
     """
-    if robots is not None:
-        pending = pending.join(
-            F.broadcast(robots.select("host", "crawl_delay")), "host", "left"
-        )
-    else:
-        pending = pending.withColumn("crawl_delay", F.lit(None).cast("double"))
+    pending = pending.join(
+        F.broadcast(robots.select("host", "crawl_delay")), "host", "left")
 
     budget = effective_budget(default_budget, epoch_window_s)
-    pending = pending.withColumn("host_budget", budget).drop("crawl_delay")
+    pending = pending.withColumn("host_budget", budget)
 
     # phase 1: salted pre-rank — bounds any host's rows per task
     salted = Window.partitionBy("host", "salt").orderBy(*_priority())

@@ -48,16 +48,15 @@ def build_session(
         # Broadcast threshold: robots/politeness state and dim tables are
         # small; make sure they broadcast instead of shuffling the big side.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Dynamic-partition parquet writes (partitionBy in replace_buckets)
-        # otherwise SORT each task's rows by partition key first — for the
-        # documents sink that is a full extra pass over the 6 KB/row
-        # embedding mass, and the sort buffer (~1 GB/task at scaling-bench
-        # scale) fits the execution pool at local[1] but spills at local[4],
-        # silently anti-scaling the sink (BENCH/docsink_scaling.json: the
-        # concurrent-writer path is 1.5-2× faster at BOTH core counts).
-        # Every engine layout keeps distinct partition keys per task far
-        # below this cap (bucket-aligned repartitions), so the sort fallback
-        # never triggers.
+        # Dynamic-partition parquet writes (replace_buckets' partitionBy,
+        # which writes the copy-on-write bucketed tables: frontier,
+        # url_seen, blooms, refcounts) otherwise SORT each task's rows by
+        # partition key before writing — an extra pass over the sink's rows
+        # that spilled at local[4] when the documents sink still took this
+        # path (BENCH/docsink_scaling.json: the concurrent-writer path was
+        # 1.5-2x faster at both core counts). replace_buckets repartitions
+        # by bucket first, so a task's distinct keys stay far below this cap
+        # and the sort fallback never triggers.
         .config("spark.sql.maxConcurrentOutputFileWriters", "16")
         # A bucketed read passes one path per chain link, and past this many
         # paths (Spark's default: 32) Spark lists them with a Spark job,

@@ -1,24 +1,25 @@
-"""Production HTTP fetch kernel — the real-network variant of S1.
+"""The engine's fetch stage: two implementations of one contract (S1).
 
-The sandbox engine resolves fetches by joining the frontier against the
-``pages`` table (deterministic, no network). A real deployment swaps that
-join for this Arrow-batched ``mapInPandas`` kernel with identical output
-columns, so nothing downstream changes (reference fetch semantics:
-``code/core/worker.py:103-111`` — ``requests.get(url, timeout=30)``,
-status/content-length logged, non-2xx → error).
-
-Scale notes:
+Every page the engine reads — robots.txt and sitemaps in ``discover``, the
+selected files in ``run_epoch`` — goes through one fetcher: a callable from
+job rows ``(file_url, user_id, site_url, queued_at[, crawl_delay_s])`` to
+:data:`FETCHED_SCHEMA` rows, one per job. :func:`pages_fetcher` is the
+deterministic stand-in over a ``pages`` table (no network);
+:func:`fetch_pages` is the production HTTP kernel, an Arrow-batched
+``mapInPandas`` with the reference fetch semantics
+(``code/core/worker.py:103-111`` — ``requests.get(url, timeout=30)``,
+status/content-length logged, non-2xx → error). Its scale notes:
 
 * one transport (connection pool) per *task*, created lazily via the
   injectable ``transport_factory`` — no per-row session setup, and tests
-  inject a fake transport (no network in this container);
+  inject a fake transport and need no network;
 * the kernel is pure map-side: fetches run where the frontier partition
   lives (host-hash partitioning upstream means a task's URLs share hosts,
   so keep-alive connections are actually reused);
 * politeness is enforced at TWO grains: the budget window
   (``operators/politeness.py``) caps URLs per host per epoch *before* this
   operator, and the kernel itself spaces same-host requests by the row's
-  ``crawl_delay_s`` (robots Crawl-delay, broadcast-joined by the engine)
+  ``crawl_delay_s`` (robots Crawl-delay, carried by the epoch's selection)
   so a 60 s epoch with budget 10 cannot burst 10 requests in 2 s. Hosts
   are partition-local (host-hash partitioning upstream), so the
   last-request clock is a tiny per-task dict; the clock and sleeper are
@@ -33,10 +34,14 @@ from urllib.parse import urlsplit
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 DEFAULT_TIMEOUT = 30.0  # reference worker.py:106
 
-#: output schema — the fetch-join stand-in's columns plus explicit status
+#: the job columns every fetcher reads (``crawl_delay_s`` is optional)
+JOB_COLUMNS = ["file_url", "user_id", "site_url", "queued_at"]
+
+#: output schema: the job columns, the body and an explicit status
 FETCHED_SCHEMA = (
     "file_url string, user_id string, site_url string, queued_at timestamp, "
     "html binary, status_code int, fetch_error string"
@@ -112,7 +117,7 @@ def make_fetch_kernel(
                 status.append(s)
                 body.append(b)
                 err.append(e)
-            out = pdf[["file_url", "user_id", "site_url", "queued_at"]].copy()
+            out = pdf[JOB_COLUMNS].copy()
             out["html"] = body
             out["status_code"] = pd.array(status, dtype="int32")
             out["fetch_error"] = err
@@ -130,15 +135,48 @@ def fetch_pages(
 ) -> DataFrame:
     """Fetch the job rows' URLs over HTTP; returns :data:`FETCHED_SCHEMA`.
 
-    Drop-in replacement for the engine's fetch-join: rows with a non-null
-    ``html`` are the ``ok`` set, null-``html`` rows carry ``status_code`` +
-    ``fetch_error`` for the metrics/processing_errors sinks. If ``jobs``
-    carries a ``crawl_delay_s`` column the kernel honors it as the same-host
-    inter-request spacing.
+    Rows with a non-null ``html`` are the ``ok`` set, null-``html`` rows
+    carry ``status_code`` + ``fetch_error`` for the metrics/processing_errors
+    sinks. If ``jobs`` carries a ``crawl_delay_s`` column the kernel honors
+    it as the same-host inter-request spacing.
     """
     factory = transport_factory or requests_transport
     kernel = make_fetch_kernel(factory, min_delay_s, clock, sleep)
-    cols = ["file_url", "user_id", "site_url", "queued_at"]
+    cols = list(JOB_COLUMNS)
     if "crawl_delay_s" in jobs.columns:
         cols.append("crawl_delay_s")
     return jobs.select(*cols).mapInPandas(kernel, schema=FETCHED_SCHEMA)
+
+
+def pages_fetcher(pages: DataFrame) -> Callable[[DataFrame], DataFrame]:
+    """The sandbox fetcher: ``jobs -> FETCHED_SCHEMA`` resolved against the
+    ``pages`` table (``url``, ``html``). A url the table has is a 200 with
+    its body; a missing url is a 404 marker row with a null body.
+
+    Shaped so page BODIES never shuffle: a plain left join from the jobs
+    would sort/exchange the html mass (the outer side of a left join cannot
+    be broadcast), so instead the job list broadcasts into an inner join
+    that leaves the bodies scan in place, and the 404 markers come from an
+    anti join that moves only url strings. Every job list the engine builds
+    is a working set, not the corpus — the epoch's politeness-bounded
+    selection, one robots.txt per due site, one sitemap per (site, user,
+    schema map) — which is what makes the broadcast legitimate. Robots
+    Crawl-delay pacing is the HTTP kernel's concern; ``crawl_delay_s`` is
+    ignored here.
+    """
+    bodies = pages.select(F.col("url").alias("file_url"), "html")
+    html_t = dict(bodies.dtypes)["html"]
+
+    def fetch(jobs: DataFrame) -> DataFrame:
+        jobs = jobs.select(*JOB_COLUMNS)
+        ok = bodies.join(F.broadcast(jobs), "file_url").select(
+            *JOB_COLUMNS, "html", F.lit(200).alias("status_code"),
+            F.lit(None).cast("string").alias("fetch_error"))
+        missing = jobs.join(bodies.select("file_url"), "file_url", "left_anti").select(
+            *JOB_COLUMNS, F.lit(None).cast(html_t).alias("html"),
+            F.lit(404).alias("status_code"),
+            F.concat(F.lit("HTTP 404: "), F.col("file_url"),
+                     F.lit(" not available in source")).alias("fetch_error"))
+        return ok.unionByName(missing)
+
+    return fetch

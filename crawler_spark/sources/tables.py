@@ -170,7 +170,7 @@ class SnapshotStore:
         return spark.read.schema(self.schema(name)).parquet(
             str(self._table_dir(name, int(version))))
 
-    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> int:
+    def write(self, df: DataFrame, name: str) -> int:
         """Write the next snapshot of ``name``; returns the new version.
 
         Not visible until :meth:`commit` records it in the manifest.
@@ -181,10 +181,7 @@ class SnapshotStore:
         target = self._table_dir(name, version)
         if target.exists():  # stale leftover from an uncommitted epoch: re-runnable
             shutil.rmtree(target)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(target))
+        df.write.mode("overwrite").parquet(str(target))
         return version
 
     # -- bucketed tables: per-bucket version chains ---------------------------

@@ -32,9 +32,31 @@ def small_corpus(spark):
     return pages, seeds
 
 
-def build_engine(spark, tmp_path, pages, **cfg_kwargs):
+def build_engine(spark, tmp_path, pages, fetcher=None, **cfg_kwargs):
     cfg = CrawlConfig(num_partitions=8, salt_buckets=4, **cfg_kwargs)
-    return CrawlEngine(spark, SnapshotStore(tmp_path / "state"), pages, cfg)
+    return CrawlEngine(spark, SnapshotStore(tmp_path / "state"), pages, cfg,
+                       fetcher=fetcher)
+
+
+def serving(corpus, failures=None):
+    """A fake-transport factory for ``fetch_pages`` that serves ``corpus``
+    (url → body): a url it lacks is an HTTP 404, and a ``failures`` url
+    returns its ``(status, error)`` instead."""
+    failures = failures or {}
+
+    def factory():
+        def get(url):
+            if url in failures:
+                status, error = failures[url]
+                return status, None, error
+            body = corpus.get(url)
+            if body is None:
+                return 404, None, "HTTP 404"
+            return 200, body, None
+
+        return get
+
+    return factory
 
 
 def assert_refcounts_consistent(engine):
@@ -518,28 +540,16 @@ def test_error_history_records_and_clears(spark, tmp_path):
 
 
 def test_http_fetch_kernel_matches_fetch_join(spark, small_corpus):
-    """The production HTTP kernel (sources/http_fetch.py) is a drop-in for
-    the fetch-join: identical bytes per url, explicit status/error rows for
-    failures (reference worker.py:103-111 semantics)."""
+    """The production HTTP kernel (sources/http_fetch.py) and the pages-join
+    stand-in are two implementations of one fetch contract: the same jobs
+    give the same body and status per url, and failures are explicit
+    status/error rows (reference worker.py:103-111 semantics)."""
     from datetime import datetime, timezone
 
-    from crawler_spark.sources.http_fetch import fetch_pages, make_fetch_kernel  # noqa: F401
-    from pyspark import cloudpickle
+    from crawler_spark.sources.http_fetch import fetch_pages, pages_fetcher
 
     pages, _ = small_corpus
     corpus = {r["url"]: bytes(r["html"]) for r in pages.collect()}
-
-    def fake_transport_factory(corpus=corpus):
-        calls = {"n": 0}
-
-        def get(url):
-            calls["n"] += 1
-            body = corpus.get(url)
-            if body is None:
-                return 404, None, "HTTP 404"
-            return 200, body, None
-
-        return get
 
     ts = datetime(2026, 1, 1, tzinfo=timezone.utc)
     urls = sorted(corpus)[:5] + ["https://site00000.example.com/missing.json"]
@@ -547,8 +557,12 @@ def test_http_fetch_kernel_matches_fetch_join(spark, small_corpus):
         [{"file_url": u, "user_id": "test:user001",
           "site_url": "site00000.example.com", "queued_at": ts} for u in urls])
 
-    fetched = {r["file_url"]: r for r in fetch_pages(jobs, fake_transport_factory).collect()}
-    assert len(fetched) == 6
+    fetched = {r["file_url"]: r for r in fetch_pages(jobs, serving(corpus)).collect()}
+    joined = {r["file_url"]: r for r in pages_fetcher(pages)(jobs).collect()}
+    assert len(fetched) == len(joined) == 6
+    for u in urls:
+        assert fetched[u]["html"] == joined[u]["html"], u
+        assert fetched[u]["status_code"] == joined[u]["status_code"], u
     for u in urls[:5]:
         assert bytes(fetched[u]["html"]) == corpus[u]
         assert fetched[u]["status_code"] == 200 and fetched[u]["fetch_error"] is None
@@ -636,22 +650,10 @@ def test_engine_with_http_kernel_end_to_end(spark, tmp_path, small_corpus):
     pages, seeds = small_corpus
     corpus = {r["url"]: bytes(r["html"]) for r in pages.collect()}
     dns_victim = f"https://{site_host(1)}/chunk1.json"
+    fetcher = partial(fetch_pages, transport_factory=serving(
+        corpus, {dns_victim: (0, "ConnectionError: DNS lookup failed")}))
 
-    def fake_transport_factory(corpus=corpus, victim=dns_victim):
-        def get(url):
-            if url == victim:
-                return 0, None, "ConnectionError: DNS lookup failed"
-            body = corpus.get(url)
-            if body is None:
-                return 404, None, "HTTP 404"
-            return 200, body, None
-
-        return get
-
-    engine = build_engine(
-        spark, tmp_path / "kernel", pages,
-    )
-    engine._fetcher = partial(fetch_pages, transport_factory=fake_transport_factory)
+    engine = build_engine(spark, tmp_path / "kernel", pages, fetcher=fetcher)
     engine.bootstrap(seeds)
     engine.run()
 
@@ -674,6 +676,82 @@ def test_engine_with_http_kernel_end_to_end(spark, tmp_path, small_corpus):
     hist = engine.error_history(file_url=dns_victim).collect()
     assert hist and hist[0]["error_type"] == "fetch_error"
     assert hist[0]["error_message"] == "ConnectionError: DNS lookup failed"
+
+
+def test_fetcher_only_engine_matches_pages_engine(spark, tmp_path, small_corpus):
+    """Every page the engine reads goes through its fetcher: with an empty
+    pages table and the HTTP kernel over a fake transport that serves the
+    corpus (robots.txt, sitemaps and chunk files), discovery finds every
+    file and the crawl reaches the pages engine's url_seen, documents and
+    frontier state."""
+    from functools import partial
+
+    from crawler_spark.schema import PAGES
+    from crawler_spark.sources.http_fetch import fetch_pages
+    from crawler_spark.sources.tables import empty_frame
+
+    pages, seeds = small_corpus
+    corpus = {r["url"]: bytes(r["html"]) for r in pages.collect()}
+    engine = build_engine(
+        spark, tmp_path / "http", empty_frame(spark, PAGES),
+        fetcher=partial(fetch_pages, transport_factory=serving(corpus)))
+    engine.bootstrap(seeds)
+    assert engine.discover(0) == (N_SITES * CHUNKS, 0)
+    engine.run()
+
+    ref = build_engine(spark, tmp_path / "pages", pages)
+    ref.bootstrap(seeds)
+    ref.run()
+
+    assert engine_state(engine) == engine_state(ref)
+    assert frontier_state(engine) == frontier_state(ref)
+    assert len(engine_state(engine)[0]) == N_SITES * CHUNKS * ITEMS
+
+
+def test_partial_discover_keeps_every_hosts_robots_row(spark, tmp_path):
+    """The robots table holds one row per host: a discover that visits only
+    the due sites refreshes their rows and keeps every other host's, so a
+    site that is not due keeps its Crawl-delay."""
+    from crawler_spark.sources.synth import robots_body
+
+    n_sites, slow = 6, site_host(5)
+    pages = corpus_pages_df(spark, n_sites, 1, items_per_chunk=2).withColumn(
+        "html", F.when(F.col("url") == f"https://{slow}/robots.txt",
+                       F.lit(robots_body(5, 1.0).encode())).otherwise(F.col("html")))
+    seeds = seeds_df(spark, n_sites).withColumn(
+        "interval_hours", F.when(F.col("site_url") == slow, 24).otherwise(1))
+    engine = build_engine(spark, tmp_path, pages)
+    engine.bootstrap(seeds)
+
+    def robots():
+        rows = engine.store.read(spark, "robots").collect()
+        assert len(rows) == len({r["host"] for r in rows}), "one row per host"
+        return {r["host"]: r["crawl_delay"] for r in rows}
+
+    engine.discover(0)
+    first = robots()
+    assert len(first) == n_sites and first[slow] == 1.0
+    engine.discover(61)  # 61 minutes on: every site but the slow one is due
+    assert robots() == first
+
+
+def test_shared_site_is_selected_once_per_user(spark, tmp_path):
+    """Two users seeding the same sites share one robots row per host, so
+    the politeness join selects each frontier row once: url_seen holds no
+    duplicate keys and every refcount is 1."""
+    pages = corpus_pages_df(spark, 2, 2, items_per_chunk=ITEMS)
+    seeds = seeds_df(spark, 2).unionByName(seeds_df(spark, 2, "test:user002"))
+    engine = build_engine(spark, tmp_path, pages)
+    engine.bootstrap(seeds)
+    engine.discover(0)
+    assert engine.run_epoch(0).selected == 2 * 2 * 2  # users × sites × files
+    engine.run()
+
+    keys = engine.url_seen().select("file_url", "user_id", "id")
+    assert keys.count() == keys.distinct().count() == 2 * 2 * 2 * ITEMS
+    counts = [r["ref_count"] for r in engine.store.read(spark, "refcounts").collect()]
+    assert max(counts) == 1
+    assert_refcounts_consistent(engine)
 
 
 def test_vector_count_and_queue_history_readers(spark, tmp_path, small_corpus):
